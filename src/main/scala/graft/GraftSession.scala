@@ -47,6 +47,10 @@ object GraftSession {
       // stateful streaming ops run fine on it too
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // a batch commit writes each store's changelog instead of a full
+      // snapshot (snapshots move to the background maintenance task):
+      // commit is the fixed per-batch cost of every stateful query
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.ui.enabled", "false")
 
   /** [[builder]] with the thread count from SPARK_GRAFT_CPUS. */

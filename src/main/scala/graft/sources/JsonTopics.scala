@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -73,13 +73,13 @@ object JsonTopics {
                     checkpoint: String): StreamingQuery = topic match {
     case DirTopic(dir) => writeStream(df, dir, checkpoint)
     case k: KafkaTopic =>
-      kafkaWriteOptions(k).foldLeft(
+      startOneStore(df, kafkaWriteOptions(k).foldLeft(
         df.select(col("key").cast("string").as("key"),
           to_json(col("value")).as("value"))
           .writeStream.format("kafka")
           .option("checkpointLocation", checkpoint)) {
         case (w, (opt, v)) => w.option(opt, v)
-      }.start()
+      })
   }
 
   /** Streaming read of a topic dir: JSON lines → (key, value struct). */
@@ -98,21 +98,48 @@ object JsonTopics {
       .schema(new StructType().add("key", keyType).add("value", valueSchema))
       .json(dir)
 
-  /** Parse a raw JSON string column with a tolerant schema (P12 —
-    * Gibber.java:118-145: unknown fields ignored, bad rows null). */
-  def parseJson(raw: DataFrame, jsonCol: String, schema: StructType): DataFrame =
-    raw.withColumn("value", from_json(col(jsonCol), schema))
-
   /** Streaming write to a topic dir (checkpointed, exactly-once file
     * sink — the K1 analog; Dashboard's ES push K2 maps to the same
-    * foreachBatch/file pattern). */
+    * foreachBatch/file pattern).
+    *
+    * The query's stateful operator (J1's pricing cell, T1's ledger,
+    * T2's ROI timers) runs on ONE state store, not one per
+    * `spark.sql.shuffle.partitions`. Every store pays a RocksDB commit
+    * each micro-batch whether or not it holds a key, and at the loop's
+    * batch sizes that fixed cost, not data volume, sets latency. One
+    * store is what the data allows: J1 is keyed on the constant "FOO",
+    * so only one store could ever hold state, and T1/T2 see at most
+    * J1's output plus a few percent INVEST/RETURN traffic, which one
+    * task folds faster than four stores commit. Revisit the count if
+    * J1 ever prices key-parallel.
+    *
+    * The count is fixed when the checkpoint is first created: Spark
+    * records `spark.sql.shuffle.partitions` in the offset log at the
+    * first batch and every restart reads it back from there. A
+    * checkpoint created with another count keeps that count, and
+    * changing it needs a fresh checkpoint. */
   def writeStream(df: DataFrame, dir: String, checkpoint: String): StreamingQuery =
-    df.select(to_json(struct(df.columns.map(col): _*)).as("line"))
+    startOneStore(df, df.select(to_json(struct(df.columns.map(col): _*)).as("line"))
       .writeStream.format("text")
       .option("path", dir)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
+      .outputMode("append"))
+
+  /** Starts `writer` (built over `df`) with `spark.sql.shuffle.partitions`
+    * at 1, then restores the caller's value. The query copies the
+    * session conf while it starts, so it keeps one state store after
+    * the restore. Starts are serialized so that two concurrent ones
+    * cannot restore each other's value. Batch queries running on the
+    * same session in other threads would see the 1 while a start is in
+    * flight. */
+  private def startOneStore(df: DataFrame, writer: DataStreamWriter[Row]): StreamingQuery =
+    synchronized {
+      val conf = df.sparkSession.conf
+      val key = "spark.sql.shuffle.partitions"
+      val callers = conf.get(key)
+      conf.set(key, "1")
+      try writer.start() finally conf.set(key, callers)
+    }
 
   /** Batch write. */
   def write(df: DataFrame, dir: String): Unit =

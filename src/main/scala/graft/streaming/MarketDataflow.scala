@@ -28,11 +28,13 @@ object MarketDataflow {
 
   /** J1 state: latest price + per-trader time-ordered order buffer
     * (MarketDataflow.java:192-207; the PriorityQueue becomes a sorted
-    * replay inside the micro-batch, SURVEY §7.3). */
+    * replay inside the micro-batch, SURVEY §7.3). A Vector, so that
+    * buffering n orders before the first price appends in O(n), not
+    * O(n²). */
   final case class PricingState(lastPrice: Option[Double],
-                                buffered: Seq[(String, MarketOrder)])
+                                buffered: Vector[(String, MarketOrder)])
 
-  object PricingState { val init: PricingState = PricingState(None, Nil) }
+  object PricingState { val init: PricingState = PricingState(None, Vector.empty) }
 
   /** An order arrives: price immediately at the latest price, or
     * buffer until the first price (MarketDataflow.java:211-240). */
@@ -52,7 +54,7 @@ object MarketDataflow {
     val drained = s.buffered
       .sortBy { case (_, o) => o.time.getTime }
       .map { case (trader, o) => trader -> Semantics.marketDelta(o, price) }
-    (PricingState(Some(price), Nil), drained)
+    (PricingState(Some(price), Vector.empty), drained)
   }
 
   /** Streaming J1: globally-keyed connect of orders and prices

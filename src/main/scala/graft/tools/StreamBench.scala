@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 import graft.model._
 import graft.sources.JsonTopics
@@ -16,9 +16,9 @@ import graft.streaming.MarketDataflow
   * that the batch BenchScale ladders cover for the batch half.
   *
   * Drives the production dir-topic shape end to end, three streaming
-  * queries connected by checkpointed JSON topics exactly as the
-  * reference's jobs are connected by Kafka topics
-  * (MarketDataflow.java:85-137):
+  * queries started through `JsonTopics.writeStream` and connected by
+  * checkpointed JSON topics exactly as the reference's jobs are
+  * connected by Kafka topics (MarketDataflow.java:85-137):
   *
   *   generator → orders/prices topics
   *     → Q1 `j1_pricing`  (global-key CoProcess, the reference's
@@ -33,10 +33,10 @@ import graft.streaming.MarketDataflow
   * updaters and 20 prices/s) into the source topics for a sustained
   * window, then report per-query sustained rec/s, micro-batch latency
   * distribution (p50/p95/max of triggerExecution), and state-store
-  * cost (RocksDB commit ms, state rows, memory) from the
-  * StreamingQueryProgress feed. A rung that cannot drain its backlog
-  * within the drain allowance is stamped `drained:false` — that rung
-  * IS the saturation point.
+  * cost (RocksDB commit time summed over the store tasks, state rows,
+  * memory) from the StreamingQueryProgress feed. A rung that cannot
+  * drain its backlog within the drain allowance is stamped
+  * `drained:false` — that rung IS the saturation point.
   *
   * The reference's operating envelope is ~70 rec/s
   * (Chapter03_Windowing.java:157-173 test load; BASELINE.md). The
@@ -133,13 +133,14 @@ object StreamBench {
   private final case class Batch(wallMs: Long, inputRows: Long, triggerMs: Long,
                                  stateRows: Long, commitMs: Long, stateMemBytes: Long)
 
+  /** Progress per query, keyed by query id (`JsonTopics.writeStream`
+    * names no query). */
   private final class Capture extends StreamingQueryListener {
-    val batches = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.ConcurrentLinkedQueue[Batch]]()
+    val batches = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.util.concurrent.ConcurrentLinkedQueue[Batch]]()
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
-      val name = Option(p.name).getOrElse(p.id.toString)
       val so = p.stateOperators
       val b = Batch(
         System.currentTimeMillis(),
@@ -148,7 +149,7 @@ object StreamBench {
         if (so == null) 0L else so.map(_.numRowsTotal).sum,
         if (so == null) 0L else so.map(_.commitTimeMs).sum,
         if (so == null) 0L else so.map(_.memoryUsedBytes).sum)
-      batches.computeIfAbsent(name, _ => new java.util.concurrent.ConcurrentLinkedQueue[Batch]())
+      batches.computeIfAbsent(p.id, _ => new java.util.concurrent.ConcurrentLinkedQueue[Batch]())
         .add(b)
     }
   }
@@ -180,12 +181,8 @@ object StreamBench {
       .select(col("key").as("_1"), col("value").as("_2")).as[(String, MarketOrder)]
     val pricesIn = JsonTopics.readStream(spark, pricesDir.toString, "string", priceSchema)
       .select("value.*").as[SharePriceInfo]
-    val priced = MarketDataflow.priceOrders(spark, ordersIn, pricesIn)
-      .select(to_json(struct(col("_1").as("key"), col("_2").as("value"))).as("line"))
-    val q1 = priced.writeStream.queryName("j1_pricing")
-      .format("text").option("path", updatersDir.toString)
-      .option("checkpointLocation", root.resolve("cp_j1").toString)
-      .outputMode("append").start()
+    val q1 = JsonTopics.writeStream(MarketDataflow.priceOrders(spark, ordersIn, pricesIn)
+      .toDF("key", "value"), updatersDir.toString, root.resolve("cp_j1").toString)
 
     // Q2 — T1+A3 ledger: updaters topic (J1 output) ∪ invests topic
     // ∪ returns topic (T2 feedback) → events topic. Invests ride their
@@ -198,22 +195,14 @@ object StreamBench {
       .union(JsonTopics.readStream(spark, investsDir.toString, "string", updaterSchema))
       .union(JsonTopics.readStream(spark, returnsDir.toString, "string", updaterSchema))
       .select(col("key").as("_1"), col("value").as("_2")).as[(String, TraderStateUpdater)]
-    val events = MarketDataflow.ledger(spark, updatersIn)
-      .select(to_json(struct(col("_1").as("key"), col("_2").as("value"))).as("line"))
-    val q2 = events.writeStream.queryName("t1_ledger")
-      .format("text").option("path", eventsDir.toString)
-      .option("checkpointLocation", root.resolve("cp_t1").toString)
-      .outputMode("append").start()
+    val q2 = JsonTopics.writeStream(MarketDataflow.ledger(spark, updatersIn)
+      .toDF("key", "value"), eventsDir.toString, root.resolve("cp_t1").toString)
 
     // Q3 — T2 ROI: events topic → RocksDB timers → returns topic
     val eventsIn = JsonTopics.readStream(spark, eventsDir.toString, "string", eventSchema)
       .select(col("key").as("_1"), col("value").as("_2")).as[(String, TxnEvent)]
-    val returns = MarketDataflow.roiReturns(spark, eventsIn, _ => 0.05)
-      .select(to_json(struct(col("_1").as("key"), col("_2").as("value"))).as("line"))
-    val q3 = returns.writeStream.queryName("t2_roi")
-      .format("text").option("path", returnsDir.toString)
-      .option("checkpointLocation", root.resolve("cp_t2").toString)
-      .outputMode("append").start()
+    val q3 = JsonTopics.writeStream(MarketDataflow.roiReturns(spark, eventsIn, _ => 0.05)
+      .toDF("key", "value"), returnsDir.toString, root.resolve("cp_t2").toString)
 
     // sustained generation window
     val gen = new Generator(root, ordersDir, pricesDir, investsDir, rate, windowSec)
@@ -227,24 +216,23 @@ object StreamBench {
     // (which never settles under registered timers).
     val genRows = gen.orders + gen.prices
     val drainDeadline = genEnd + math.max(40, windowSec) * 1000L
-    def rows(q: String): Seq[Batch] = {
-      val queue = cap.batches.get(q)
+    def rows(q: StreamingQuery): Seq[Batch] = {
+      val queue = cap.batches.get(q.id)
       if (queue == null) Seq.empty
       else { import scala.jdk.CollectionConverters._; queue.asScala.toSeq }
     }
     // a file source emits NO zero-input progress events while idle, so
     // "quiet" is time-based: no batch consumed input for 5 s
-    def quiet(q: String): Boolean = rows(q).filter(_.inputRows > 0).lastOption
+    def quiet(q: StreamingQuery): Boolean = rows(q).filter(_.inputRows > 0).lastOption
       .exists(b => System.currentTimeMillis() - b.wallMs - b.triggerMs > 5000)
     var drained = false
     while (!drained && System.currentTimeMillis() < drainDeadline) {
       Thread.sleep(1000)
-      drained = rows("j1_pricing").map(_.inputRows).sum >= genRows &&
-        quiet("j1_pricing") && quiet("t1_ledger")
+      drained = rows(q1).map(_.inputRows).sum >= genRows && quiet(q1) && quiet(q2)
     }
     Seq(q1, q2, q3).foreach(_.stop())
 
-    def stats(q: String): String = {
+    def stats(q: StreamingQuery): String = {
       val all = rows(q)
       val active = all.filter(_.inputRows > 0)
       val trig = active.map(_.triggerMs)
@@ -254,18 +242,19 @@ object StreamBench {
         else (active.last.wallMs + active.last.triggerMs - active.head.wallMs) / 1000.0
       val rps = if (span > 0) input / span else 0.0
       val lastState = all.lastOption.map(_.stateRows).getOrElse(0L)
+      // commitTimeMs summed over the state store tasks, not wall time
       val commitMean = if (active.isEmpty) 0L else active.map(_.commitMs).sum / active.size
       val mem = all.lastOption.map(_.stateMemBytes).getOrElse(0L)
       f"""{"rows":$input,"batches":${all.size},"active_batches":${active.size},""" +
         f""""rps":$rps%.0f,"trigger_p50_ms":${pct(trig, 0.50)},"trigger_p95_ms":${pct(trig, 0.95)},""" +
         f""""trigger_max_ms":${trig.maxOption.getOrElse(0L)},"state_rows":$lastState,""" +
-        f""""commit_ms_mean":$commitMean,"state_mem_bytes":$mem}"""
+        f""""commit_task_sum_ms_mean":$commitMean,"state_mem_bytes":$mem}"""
     }
     val line =
       f"""{"rate":$rate,"window_sec":$windowSec,"generated":{"orders":${gen.orders},""" +
         f""""prices":${gen.prices},"invests":${gen.invests},"gen_wall_ms":${gen.genWallMs}},""" +
-        f""""drained":$drained,"j1_pricing":${stats("j1_pricing")},""" +
-        f""""t1_ledger":${stats("t1_ledger")},"t2_roi":${stats("t2_roi")}}"""
+        f""""drained":$drained,"j1_pricing":${stats(q1)},""" +
+        f""""t1_ledger":${stats(q2)},"t2_roi":${stats(q3)}}"""
     // best-effort cleanup of the rung's topic+checkpoint tree
     try {
       import scala.jdk.CollectionConverters._
@@ -279,21 +268,7 @@ object StreamBench {
     val rates = args.headOption.map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1000, 10000, 50000))
     val windowSec = sys.env.get("SPARK_GRAFT_STREAM_WINDOW").map(_.toInt).getOrElse(40)
-    val spark = graft.GraftSession.builderFromEnv("32")
-      // RocksDB changelog checkpointing: commit per batch writes the
-      // CHANGELOG instead of a full snapshot per state store — the
-      // production setting for low-latency micro-batches (the smoke
-      // run read ~800 ms×32 stores of snapshot upload per batch per
-      // stateful op, dominating trigger latency at every rate)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      // state partitions sized to the WORKLOAD, not the batch-analytics
-      // default: every stateful op pays a per-store commit each batch
-      // (flush + checkpoint), so 32 stores × 3 ops is pure fixed cost
-      // against 256 trader keys / 1 market key. 8 partitions keeps the
-      // keyed ops parallel and quarters the per-batch state overhead —
-      // the sizing a standing pipeline would ship with.
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
+    val spark = graft.GraftSession.builderFromEnv("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cap = new Capture
     spark.streams.addListener(cap)

@@ -17,6 +17,8 @@ class GraftSessionSpec extends SparkSpec {
       === GraftSession.ObjectHashFallbackThreshold.toString)
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
   }
 
   test("TypedImperativeAggregate stays hash-based past 128 distinct keys") {

@@ -45,6 +45,33 @@ class CoProcessSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("J1 streaming: thousands of orders buffered before the first price " +
+    "drain in time order at that price") {
+    implicit val sqlCtx = spark.sqlContext
+    val orders = MemoryStream[(String, MarketOrder)]
+    val prices = MemoryStream[SharePriceInfo]
+    val out = MarketDataflow.priceOrders(spark, orders.toDS(), prices.toDS())
+    val q = out.writeStream.format("memory").queryName("j1_backlog").outputMode("append").start()
+    try {
+      // 4,000 orders in two batches, out of time order within each: the
+      // Vector buffer round-trips through the state encoder in between
+      val n = 4000
+      val backlog = new scala.util.Random(7).shuffle((0 until n).toVector).map { i =>
+        (s"T${i % 13}", MarketOrder(ts(t0 + i), s"o$i", "BUY", 1))
+      }
+      orders.addData(backlog.take(n / 2): _*)
+      q.processAllAvailable()
+      orders.addData(backlog.drop(n / 2): _*)
+      q.processAllAvailable()
+      assert(spark.table("j1_backlog").count() == 0)
+      prices.addData(SharePriceInfo(ts(t0 + n), 2.0, 1.0))
+      q.processAllAvailable()
+      val drained = spark.table("j1_backlog").as[(String, TraderStateUpdater)].collect()
+      assert(drained.map(_._2.txnId).toSeq == (0 until n).map(i => s"o$i"))
+      assert(drained.forall(_._2.coinsDiff == -2.0))
+    } finally q.stop()
+  }
+
   test("J1 within-batch replay sorts by event time, price before order at same tick") {
     // all in ONE batch: order(t+2) before price(t+1) in arrival order,
     // but replay is time-sorted so the price lands first
