@@ -51,6 +51,11 @@ object GraftSession {
       // snapshot (snapshots move to the background maintenance task):
       // commit is the fixed per-batch cost of every stateful query
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      // the `file` scheme on both Hadoop APIs: Hadoop's local file
+      // system without a child process per created file or rename
+      // (GraftLocalFileSystem); checksums and modes are unchanged
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       .config("spark.ui.enabled", "false")
 
   /** [[builder]] with the thread count from SPARK_GRAFT_CPUS. */

@@ -28,11 +28,10 @@ final case class SharePriceInfo(time: Timestamp, coins: Double, forecast: Double
 
 object Team {
   val values: Seq[String] = Seq("ALOUATE", "BONOBO", "CAPUCIN", "DRILL", "SAGOUIN")
-  def isValid(t: String): Boolean = values.contains(t)
 }
 
 /** A trading team member (reference: model/trader/Trader.java:9-18,
-  * model/Team.java:3-10 — 5-value enum kept as a validated String). */
+  * model/Team.java:3-10 — 5-value enum kept as a String). */
 final case class Trader(team: String, name: String) {
   /** Stable grouping key (reference: monkey-flink-helper TraderKeySelector.java:7-12). */
   def key: String = s"${team}_$name"

@@ -26,12 +26,9 @@ object RunningAggs {
   def runningSum(value: Column, partition: Column, order: Column, tieBreak: Column): Column =
     sum(value).over(runningFrame(partition, order, tieBreak))
 
-  /** A5 — running product via exp∘sum∘ln (positive factors only), the
-    * batch analog of the mult accumulator (SharePriceDataflow.java:72-96). */
-  def runningProduct(factor: Column, partition: Column, order: Column, tieBreak: Column): Column =
-    exp(sum(log(factor)).over(runningFrame(partition, order, tieBreak)))
-
-  /** Group-total product (same identity, whole-group frame). */
+  /** A5 — group-total product via exp∘sum∘ln (positive factors only),
+    * the batch analog of the mult accumulator
+    * (SharePriceDataflow.java:72-96). */
   def groupProduct(factor: Column): Column = exp(sum(log(factor)))
 
   /** A4 — final EMA per key over time-ordered values: repartition on

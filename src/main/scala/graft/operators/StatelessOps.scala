@@ -56,15 +56,6 @@ object StatelessOps {
   def jsonIntField(props: Column, field: String): Column =
     regexp_extract(props, "\"" + field + "\": ([0-9]+)", 1).cast("long")
 
-  /** P14 — op→delta sign conventions (TraderStateUpdater.java:141-172,
-    * MarketOrderType.java:3-21): BUY costs coins/gains shares, SELL
-    * mirrors; generalized to any (type, amount) pair. */
-  def coinsDelta(opType: Column, amount: Column): Column =
-    when(opType === "BUY", -amount).when(opType === "SELL", amount).otherwise(lit(0.0))
-
-  def sharesDelta(opType: Column, shares: Column): Column =
-    when(opType === "BUY", shares).when(opType === "SELL", -shares).otherwise(lit(0))
-
   /** R1/R2 — split/select routing as a single pass computing a route
     * tag (katas/Chapter02:174-217). Downstream consumers filter on the
     * tag; the frame is computed once (no native split in Spark). */

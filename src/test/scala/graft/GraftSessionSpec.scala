@@ -1,5 +1,8 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.functions._
 import graft.streaming.SparkSpec
 
@@ -19,6 +22,15 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.conf.get(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
+  }
+
+  test("both Hadoop file APIs resolve the file scheme to the graft classes") {
+    val conf = spark.sessionState.newHadoopConf()
+    assert(FileSystem.getFileSystemClass("file", conf) === classOf[GraftLocalFileSystem])
+    assert(conf.getClass("fs.AbstractFileSystem.file.impl", null) === classOf[GraftLocalFs])
+    // FileContext builds its AbstractFileSystem per use, from this conf
+    assert(FileContext.getFileContext(new URI("file:///"), conf)
+      .getDefaultFileSystem.isInstanceOf[GraftLocalFs])
   }
 
   test("TypedImperativeAggregate stays hash-based past 128 distinct keys") {
