@@ -47,79 +47,36 @@ object Bench {
     // process (the best unthrottled estimate — it can only sharpen),
     // and dilation is evaluated lazily against the CURRENT nominal so
     // a burst spanning startup cannot freeze an inflated baseline in.
-    var probeSink = 0L // defeats dead-code elimination of the spin
-    def spinOnce(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 40000000) { // xorshift64: fixed work, no memory traffic
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        i += 1
-      }
-      probeSink += x
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spin = SpinProbe.fromEnv()
     var probeNominal = {
       // JIT warmup, then seed the floor with the best of 10
-      (1 to 3).foreach(_ => spinOnce())
-      (1 to 10).map(_ => spinOnce()).min
+      (1 to 3).foreach(_ => spin.narrow())
+      (1 to 10).map(_ => spin.narrow()).min
     }
     // WIDE probe (VERDICT r14 #1/#2): the single-thread probe catches
     // full-core steal but is blind to PARTIAL multi-core steal — a
     // 32-thread stage losing a third of its cores reads probe ≈ 1.0
     // (the r14 driver artifact passed the dirty gate with 11 queries
     // physically impossibly faster at 8 cores than 32). The wide probe
-    // runs the SAME fixed spin on one thread per bench core
-    // concurrently and times the slowest: when external load occupies
-    // k of our N cores, ~k probe threads must time-share and the wall
-    // dilates ~2x, while the 1-thread probe still finds a free core.
-    // Width = the bench's own core count, not the box's: an 8-core
-    // bench on a 32-core box is only harmed when IT cannot get 8
-    // cores. MINUS TWO (calibrated): a fully-saturating probe times
-    // the Spark JVM's own post-query daemon/GC tail as if it were
-    // steal (measured 1.15-1.46x on an idle box); two spare cores
-    // absorb that self-noise, and any external burst wider than the
-    // headroom still forces probe threads to time-share (~2x). Probes
-    // share a pool (thread creation is not part of the measurement
-    // beyond the first call).
-    val wideN = math.max(2, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      Runtime.getRuntime.availableProcessors()) - 2)
-    val wideSink = new java.util.concurrent.atomic.AtomicLong()
-    val widePool = java.util.concurrent.Executors.newFixedThreadPool(wideN,
-      r => { val t = new Thread(r, "bench-wide-probe"); t.setDaemon(true); t })
-    def wideSpinOnce(): Double = {
-      val latch = new java.util.concurrent.CountDownLatch(wideN)
-      val t0 = System.nanoTime()
-      (1 to wideN).foreach { _ =>
-        widePool.execute { () =>
-          var x = 0x9E3779B97F4A7C15L
-          var i = 0
-          while (i < 40000000) {
-            x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-            i += 1
-          }
-          wideSink.addAndGet(x)
-          latch.countDown()
-        }
-      }
-      latch.await()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // runs the SAME fixed spin on one thread per bench core (minus two,
+    // see SpinProbe.fromEnv) concurrently and times the slowest: when
+    // external load occupies k of our N cores, ~k probe threads must
+    // time-share and the wall dilates ~2x, while the 1-thread probe
+    // still finds a free core.
     var wideNominal = {
-      (1 to 2).foreach(_ => wideSpinOnce())
-      (1 to 5).map(_ => wideSpinOnce()).min
+      (1 to 2).foreach(_ => spin.wide())
+      (1 to 5).map(_ => spin.wide()).min
     }
     var lastWide = wideNominal
     def probe(): Double = {
-      val p = spinOnce()
+      val p = spin.narrow()
       if (p < probeNominal) probeNominal = p
       // min of two back-to-back wide spins: a single ~40 ms wide spin
       // can be dilated by our own JVM's GC tail right after a heavy
       // query (self-noise, not steal); real co-tenant bursts last
       // seconds-minutes and dilate both spins, so min-of-2 keeps the
       // signal and drops the one-off pause class.
-      val w = math.min(wideSpinOnce(), wideSpinOnce())
+      val w = math.min(spin.wide(), spin.wide())
       if (w < wideNominal) wideNominal = w
       lastWide = w
       p
@@ -313,7 +270,7 @@ object Bench {
     // never shadow a full run in regression diffs.
     val onlyJson = only.map(_.toSeq.sorted.map("\"" + _ + "\"")
       .mkString(""""only":[""", ",", "],")).getOrElse("")
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$onlyJson"queries":$qs,"failed":$failedJson,"load":$loadStart%.2f,"load_end":$loadEnd%.2f,"probe_nominal_ms":${probeNominal * 1000}%.1f,"probes":$probes,"probe_wide_nominal_ms":${wideNominal * 1000}%.1f,"probe_wide_n":$wideN,"probes_wide":$probesWide,"dirty":$dirty,"dirty_queries":$dirtyJson,"sf":"$sfDir"}"""
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$onlyJson"queries":$qs,"failed":$failedJson,"load":$loadStart%.2f,"load_end":$loadEnd%.2f,"probe_nominal_ms":${probeNominal * 1000}%.1f,"probes":$probes,"probe_wide_nominal_ms":${wideNominal * 1000}%.1f,"probe_wide_n":${spin.wideN},"probes_wide":$probesWide,"dirty":$dirty,"dirty_queries":$dirtyJson,"sf":"$sfDir"}"""
     // VERDICT r9 #5: the driver keeps only a truncated log TAIL, and the
     // one ~7 KB JSON line got clipped mid-line in r9 ("parsed": null, 94
     // of 184 per-query numbers lost). Persist the complete map to a

@@ -6,11 +6,17 @@ import org.apache.spark.sql.classic.{ExpressionColumnNode, ExpressionUtils}
 /** Package-placed bridge: Spark 4 made the Expression↔Column seams
   * (`ExpressionUtils`, `ColumnNode`) private[sql]; custom native
   * expressions still need them to surface as Columns in classic mode.
-  * This is the only file outside the graft namespace.
+  * The listener bus is private[spark] too. This is the only file
+  * outside the graft namespace.
   */
 object GraftSqlBridge {
   def toColumn(e: Expression): Column = Column(ExpressionColumnNode(e))
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`graft.tools.TaskMeter` reads task ends only after this). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Runtime twin of [[graft.GraftExtensions]]: register every native
     * graft function on an EXISTING session so `spark.sql(...)` can

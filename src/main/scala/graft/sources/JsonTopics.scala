@@ -43,11 +43,6 @@ object JsonTopics {
     // the reference's consumers resume past compacted/expired segments
     "failOnDataLoss" -> "false")
 
-  /** Producer options for the Kafka branch (MarketDataflow.java:133-137). */
-  def kafkaWriteOptions(k: KafkaTopic): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> k.bootstrapServers,
-    "topic" -> k.topic)
-
   /** Streaming read over either transport. The Kafka branch decodes
     * the binary key/value into the same (key, value struct) columns
     * the dir branch produces, so downstream operators are
@@ -63,23 +58,6 @@ object JsonTopics {
       }.load()
         .select(col("key").cast("string").cast(keyType).as("key"),
           from_json(col("value").cast("string"), valueSchema).as("value"))
-  }
-
-  /** Streaming write over either transport. Expects the topic envelope
-    * (a `key` column and a `value` struct column); the Kafka branch
-    * serializes value to JSON — the reference's producer record shape
-    * (BaseJsonSerde.java:15-54). */
-  def writeStreamTo(df: DataFrame, topic: TopicTransport,
-                    checkpoint: String): StreamingQuery = topic match {
-    case DirTopic(dir) => writeStream(df, dir, checkpoint)
-    case k: KafkaTopic =>
-      startOneStore(df, kafkaWriteOptions(k).foldLeft(
-        df.select(col("key").cast("string").as("key"),
-          to_json(col("value")).as("value"))
-          .writeStream.format("kafka")
-          .option("checkpointLocation", checkpoint)) {
-        case (w, (opt, v)) => w.option(opt, v)
-      })
   }
 
   /** Streaming read of a topic dir: JSON lines → (key, value struct). */

@@ -20,18 +20,7 @@ object Explain {
     })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        println(f"[stage] id=${si.stageId} tasks=${si.numTasks} " +
-          f"run=${m.executorRunTime / 1e3}%.1fs cpu=${m.executorCpuTime / 1e9}%.1fs " +
-          f"gc=${m.jvmGCTime / 1e3}%.1fs deser=${m.executorDeserializeTime / 1e3}%.1fs " +
-          f"shufR=${m.shuffleReadMetrics.totalBytesRead} shufW=${m.shuffleWriteMetrics.bytesWritten} " +
-          si.name.takeWhile(_ != '\n').take(60))
-      }
-    })
+    TaskMeter.attach(spark, Some(System.out))
     // comma-separated names run as a sequence (JVM cross-query effects:
     // a megamorphic kernel in one query can deoptimize the next)
     val names = name.split(",").toSeq

@@ -10,48 +10,19 @@ package graft.tools
   * faster at 8 cores than 32 with probe ≈ 1.0).
   *
   * `runMain graft.tools.ProbeCalib [seconds]` — no Spark session; the
-  * probe bodies mirror graft.Bench's byte for byte.
+  * probes are graft.Bench's own ([[graft.SpinProbe]]).
   */
 object ProbeCalib {
   def main(args: Array[String]): Unit = {
     val seconds = args.headOption.map(_.toInt).getOrElse(60)
-    var sink = 0L
-    def spinOnce(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 40000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      sink += x
-      (System.nanoTime() - t0) / 1e9
-    }
-    val wideN = math.max(2, math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      Runtime.getRuntime.availableProcessors()) - 2)
-    val wideSink = new java.util.concurrent.atomic.AtomicLong()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(wideN,
-      r => { val t = new Thread(r, "probe-calib-wide"); t.setDaemon(true); t })
-    def wideSpinOnce(): Double = {
-      val latch = new java.util.concurrent.CountDownLatch(wideN)
-      val t0 = System.nanoTime()
-      (1 to wideN).foreach { _ =>
-        pool.execute { () =>
-          var x = 0x9E3779B97F4A7C15L
-          var i = 0
-          while (i < 40000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-          wideSink.addAndGet(x)
-          latch.countDown()
-        }
-      }
-      latch.await()
-      (System.nanoTime() - t0) / 1e9
-    }
-    (1 to 3).foreach { _ => spinOnce(); wideSpinOnce() }
-    var narrowNominal = (1 to 10).map(_ => spinOnce()).min
-    var wideNominal = (1 to 5).map(_ => wideSpinOnce()).min
+    val spin = graft.SpinProbe.fromEnv()
+    (1 to 3).foreach { _ => spin.narrow(); spin.wide() }
+    var narrowNominal = (1 to 10).map(_ => spin.narrow()).min
+    var wideNominal = (1 to 5).map(_ => spin.wide()).min
     val end = System.nanoTime() + seconds * 1000000000L
     while (System.nanoTime() < end) {
-      val p = spinOnce()
-      val w = math.min(wideSpinOnce(), wideSpinOnce())
+      val p = spin.narrow()
+      val w = math.min(spin.wide(), spin.wide())
       if (p < narrowNominal) narrowNominal = p
       if (w < wideNominal) wideNominal = w
       val load = java.lang.management.ManagementFactory

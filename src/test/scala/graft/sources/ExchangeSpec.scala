@@ -26,7 +26,7 @@ class ExchangeSpec extends SparkSpec {
     assert(a.map(_.mult).distinct.length > 90) // actually random-ish
   }
 
-  test("kafka transport builds the reference's consumer/producer options " +
+  test("kafka transport builds the reference's consumer options " +
     "(no broker in this container — integration untestable here)") {
     val k = JsonTopics.KafkaTopic("broker:9092", "market-orders", "latest")
     assert(JsonTopics.kafkaReadOptions(k) == Map(
@@ -34,9 +34,6 @@ class ExchangeSpec extends SparkSpec {
       "subscribe" -> "market-orders",
       "startingOffsets" -> "latest",
       "failOnDataLoss" -> "false"))
-    assert(JsonTopics.kafkaWriteOptions(k) == Map(
-      "kafka.bootstrap.servers" -> "broker:9092",
-      "topic" -> "market-orders"))
     // the dir branch of the SAME transport API dispatches to the
     // JSON-lines reader and stays a streaming plan
     val dir = Files.createTempDirectory("graft_kafka_dir").toString
