@@ -34,12 +34,12 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet carries INT64 TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // floor AQE coalescing at the core count: it sizes partitions by
-      // shuffle INPUT bytes and otherwise serializes explosive joins.
-      // minPartitionNum is inert in Spark 4 (parallelismFirst honors
-      // only minPartitionSize): a ~1 MB shuffle feeding a CPU-heavy
-      // stage still coalesced to ONE task. Small size floor = real floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
+      // AQE coalescing sizes partitions by shuffle INPUT bytes and
+      // otherwise serializes explosive joins. Its partition-count floor
+      // (minPartitionNum, unset) defaults to defaultParallelism under
+      // parallelismFirst, and local[cpus] makes that cpus. Its size
+      // floor defaults to 1 MB, which coalesced a ~1 MB shuffle feeding
+      // a CPU-heavy stage to ONE task; 64k lets the count floor hold.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         ObjectHashFallbackThreshold.toString)

@@ -87,7 +87,14 @@ object MarketDataflow {
     (LedgerState(Some(ns), newTotal), enriched)
   }
 
-  /** Streaming T1+A3 keyed by trader key (team_name). */
+  /** Streaming T1+A3 keyed by trader key (team_name).
+    *
+    * Order contract: a trader's updaters apply in micro-batch order
+    * first, then by (time, txnId) inside a batch — arrival order across
+    * batches, as the reference's keyed state sees its Kafka partition.
+    * [[ledgerBatch]] sorts all of them by event time instead, so the two
+    * end on equal balances only when every operation is acceptable in
+    * any order. RecoverySpec's closed-loop restart test relies on that. */
   def ledger(spark: SparkSession,
              updates: Dataset[(String, TraderStateUpdater)]): Dataset[(String, TxnEvent)] = {
     import spark.implicits._

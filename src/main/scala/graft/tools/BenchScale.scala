@@ -743,15 +743,13 @@ object BenchScale {
       val corpus = spark.range(n).select(col("id"),
         pmod(xxhash64(concat(lit("zx_"), col("id"))), lit(4096)).as("x"),
         pmod(xxhash64(concat(lit("zy_"), col("id"))), lit(4096)).as("y"))
-      // written, not staged: reading parquet back runs a schema job, which
-      // would shift the RDD-id-seeded range sampling of the layouts below
       corpus.repartitionByRange(64, col("x")).sortWithinPartitions("x")
         .write.mode("overwrite").parquet(s"$dir/linear") // untimed
       val wSec = meter.measure(ZOrderLayout.write(corpus, s"$dir/z",
         Seq(col("x"), col("y")), bits = 12, numFiles = 64)).sec
       // band = one full 512-wide y-slab (1/8 of the domain): the 64
       // z-range files tile 512x512 curve cells, so ~8 files intersect
-      // exactly — plus up to ~8 straddlers, because range-sampled
+      // exactly — plus up to ~8 straddlers, because count-balanced
       // file boundaries fall at arbitrary z values, not slab edges
       // (a file can span two y-slabs). Worst case ~16/64 = 0.25 of
       // the files; the gate sits just above it, against the linear

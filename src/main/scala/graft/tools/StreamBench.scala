@@ -2,49 +2,33 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import java.time.Instant
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import scala.collection.mutable
+import scala.concurrent.{ExecutionContext, Future}
+import scala.jdk.CollectionConverters._
 
-import graft.model._
-import graft.sources.JsonTopics
-import graft.streaming.MarketDataflow
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQuery, StreamingQueryProgress}
+
+import graft.streaming.MarketLoop
 
 /** Streaming throughput/latency receipt for the FULL market loop
-  * (VERDICT r13 Next #2) — the standing-pipeline half of the grading
-  * that the batch BenchScale ladders cover for the batch half.
+  * (VERDICT r13 Next #2), the standing-pipeline half of what the batch
+  * BenchScale ladders grade.
   *
-  * Drives the production dir-topic shape end to end, three streaming
-  * queries started through `JsonTopics.writeStream` and connected by
-  * checkpointed JSON topics exactly as the reference's jobs are
-  * connected by Kafka topics (MarketDataflow.java:85-137):
-  *
-  *   generator → orders/prices topics
-  *     → Q1 `j1_pricing`  (global-key CoProcess, the reference's
-  *                         connect+keyBy("FOO")) → updaters topic
-  *     → Q2 `t1_ledger`   (per-trader T1+A3 fold; input = updaters
-  *                         topic ∪ returns topic — the FEEDBACK edge)
-  *     → Q3 `t2_roi`      (transformWithState + RocksDB timers;
-  *                         matured returns → returns topic, closing
-  *                         the loop through the dir-topic)
-  *
-  * Per rate rung: generate orders at `rate` rec/s (plus 5 % INVEST
-  * updaters and 20 prices/s) into the source topics for a sustained
-  * window, then report per-query sustained rec/s, micro-batch latency
-  * distribution (p50/p95/max of triggerExecution), and state-store
+  * Each rate rung starts a fresh [[MarketLoop]] and feeds it from a
+  * generator thread: orders at `rate` rec/s plus 5 % INVEST updaters
+  * and 20 prices/s for a sustained window. Per query it reports
+  * sustained rec/s, the p50/p95/max of triggerExecution and the state
   * cost (RocksDB commit time summed over the store tasks, state rows,
-  * memory) from the StreamingQueryProgress feed. A rung that cannot
+  * memory), all from the query's own progress. A rung that cannot
   * drain its backlog within the drain allowance is stamped
-  * `drained:false` — that rung IS the saturation point.
-  *
-  * The reference's operating envelope is ~70 rec/s
-  * (Chapter03_Windowing.java:157-173 test load; BASELINE.md). The
-  * known scale ceiling by construction: J1 is keyed on the constant
-  * "FOO" (one market = one key — reference semantics), so its state
-  * task is serial at any cluster size; T1/T2 shard by trader/txnId
-  * and scale out. The rungs make that ceiling a measured number
-  * instead of a design note.
+  * `drained:false`: that rung IS the saturation point. J1 is keyed on
+  * the constant "FOO" (one market = one key, the reference's
+  * semantics), so its state task is serial at any cluster size; the
+  * rungs make that ceiling a measured number. The reference's
+  * envelope is ~70 rec/s (Chapter03_Windowing.java:157-173; BASELINE.md).
   *
   * `runMain graft.tools.StreamBench [rate,rate,...]` (default
   * 1000,10000,50000); env SPARK_GRAFT_STREAM_WINDOW (gen seconds,
@@ -57,68 +41,42 @@ object StreamBench {
   /** Writes JSON-lines topic files at a steady rate from the driver.
     * Files are staged outside the topic dir and moved in atomically so
     * the file source never lists a half-written file. */
-  private final class Generator(root: Path, ordersDir: Path, pricesDir: Path,
-                                investsDir: Path, rate: Int, windowSec: Int) {
+  private final class Generator(root: Path, rate: Int, windowSec: Int) {
     @volatile var orders = 0L
     @volatile var invests = 0L
     @volatile var prices = 0L
     @volatile var genWallMs = 0L
 
-    private val traders = 256
-    private val tickMs = 500L
-
-    private def publish(dir: Path, name: String, content: StringBuilder): Unit = {
-      val tmp = root.resolve(name)
-      Files.write(tmp, content.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    private def publish(topic: String, tick: Int, lines: Iterator[String]): Unit = {
+      val tmp = root.resolve(f"${topic}_$tick%06d.json")
+      Files.write(tmp, lines.mkString.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, MarketLoop.topic(root, topic).resolve(tmp.getFileName),
+        StandardCopyOption.ATOMIC_MOVE)
     }
 
     def run(): Unit = {
+      val tickMs = 500L
       val t0 = System.currentTimeMillis()
-      val deadline = t0 + windowSec * 1000L
-      var tick = 0
-      var oSeq = 0L
-      var iSeq = 0L
       val ordersPerTick = math.max(1, (rate * tickMs / 1000L).toInt)
       val investsPerTick = math.max(1, ordersPerTick / 20) // 5 % INVEST
       val pricesPerTick = 10 // 20 prices/s at 500 ms ticks
-      val ob = new StringBuilder(ordersPerTick * 160)
-      val ib = new StringBuilder(investsPerTick * 200)
-      val pb = new StringBuilder(pricesPerTick * 120)
-      while (System.currentTimeMillis() < deadline) {
+      var tick = 0
+      while (System.currentTimeMillis() < t0 + windowSec * 1000L) {
         val tickStart = System.currentTimeMillis()
-        val ts = java.time.Instant.ofEpochMilli(tickStart).toString
-        ob.setLength(0); ib.setLength(0); pb.setLength(0)
-        var i = 0
-        while (i < ordersPerTick) {
-          val side = if ((oSeq & 1L) == 0L) "BUY" else "SELL"
-          ob.append("{\"key\":\"T").append(oSeq % traders)
-            .append("\",\"value\":{\"time\":\"").append(ts)
-            .append("\",\"txnId\":\"o").append(oSeq)
-            .append("\",\"orderType\":\"").append(side)
-            .append("\",\"shares\":1}}\n")
-          oSeq += 1; i += 1
-        }
-        i = 0
-        while (i < investsPerTick) {
-          // invested 0.01 keeps maturation delays (totalInvestments ms)
-          // inside the window and traders mostly solvent
-          ib.append("{\"key\":\"T").append(iSeq % traders)
-            .append("\",\"value\":{\"txnId\":\"i").append(iSeq)
-            .append("\",\"updaterType\":\"INVEST\",\"time\":\"").append(ts)
-            .append("\",\"coinsDiff\":-0.01,\"sharesDiff\":0,")
-            .append("\"addBailout\":false,\"fedMonkeys\":0,\"investDiff\":1}}\n")
-          iSeq += 1; i += 1
-        }
-        i = 0
-        while (i < pricesPerTick) {
-          pb.append("{\"key\":\"FOO\",\"value\":{\"time\":\"").append(ts)
-            .append("\",\"coins\":2.0,\"forecast\":2.1}}\n")
-          i += 1
-        }
-        publish(ordersDir, f"orders_$tick%06d.json", ob)
-        publish(investsDir, f"invests_$tick%06d.json", ib)
-        publish(pricesDir, f"prices_$tick%06d.json", pb)
+        val ts = Instant.ofEpochMilli(tickStart).toString
+        // 256 traders; BUY and SELL alternate
+        publish("orders", tick, (orders until orders + ordersPerTick).iterator.map { o =>
+          val side = if (o % 2 == 0) "BUY" else "SELL"
+          s"""{"key":"T${o % 256}","value":{"time":"$ts","txnId":"o$o","orderType":"$side","shares":1}}\n"""
+        })
+        // invested 0.01 keeps maturation delays (totalInvestments ms)
+        // inside the window and traders mostly solvent
+        publish("invests", tick, (invests until invests + investsPerTick).iterator.map { i =>
+          s"""{"key":"T${i % 256}","value":{"txnId":"i$i","updaterType":"INVEST","time":"$ts",""" +
+            s""""coinsDiff":-0.01,"sharesDiff":0,"addBailout":false,"fedMonkeys":0,"investDiff":1}}\n"""
+        })
+        publish("prices", tick, Iterator.fill(pricesPerTick)(
+          s"""{"key":"FOO","value":{"time":"$ts","coins":2.0,"forecast":2.1}}\n"""))
         orders += ordersPerTick; invests += investsPerTick; prices += pricesPerTick
         tick += 1
         val spent = System.currentTimeMillis() - tickStart
@@ -128,30 +86,21 @@ object StreamBench {
     }
   }
 
-  // ------------------------------------------------------- progress capture
+  // ------------------------------------------------------- progress polling
 
-  private final case class Batch(wallMs: Long, inputRows: Long, triggerMs: Long,
-                                 stateRows: Long, commitMs: Long, stateMemBytes: Long)
+  private def triggerMs(p: StreamingQueryProgress): Long = p.durationMs.get("triggerExecution")
+  /** When the batch ended: its trigger start plus its trigger time. */
+  private def endMs(p: StreamingQueryProgress): Long =
+    Instant.parse(p.timestamp).toEpochMilli + triggerMs(p)
 
-  /** Progress per query, keyed by query id (`JsonTopics.writeStream`
-    * names no query). */
-  private final class Capture extends StreamingQueryListener {
-    val batches = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, java.util.concurrent.ConcurrentLinkedQueue[Batch]]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      val so = p.stateOperators
-      val b = Batch(
-        System.currentTimeMillis(),
-        p.numInputRows,
-        Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L),
-        if (so == null) 0L else so.map(_.numRowsTotal).sum,
-        if (so == null) 0L else so.map(_.commitTimeMs).sum,
-        if (so == null) 0L else so.map(_.memoryUsedBytes).sum)
-      batches.computeIfAbsent(p.id, _ => new java.util.concurrent.ConcurrentLinkedQueue[Batch]())
-        .add(b)
-    }
+  /** Executed micro-batches per query, keyed by batch id, polled from
+    * each query's own `recentProgress`. That buffer keeps the last 100
+    * progresses, so a poll every 500 ms cannot miss a batch. */
+  private final class Batches(qs: Map[String, StreamingQuery]) {
+    private val byQuery = qs.keys.map(_ -> mutable.TreeMap.empty[Long, StreamingQueryProgress]).toMap
+    def poll(): Unit = for ((n, q) <- qs; p <- q.recentProgress if p.durationMs.containsKey("addBatch"))
+      byQuery(n).getOrElseUpdate(p.batchId, p)
+    def apply(q: String): Seq[StreamingQueryProgress] = byQuery(q).values.toSeq
   }
 
   private def pct(xs: Seq[Long], p: Double): Long =
@@ -160,91 +109,53 @@ object StreamBench {
 
   // ---------------------------------------------------------------- a rung
 
-  private def runRung(spark: SparkSession, cap: Capture, rate: Int,
-                      windowSec: Int): String = {
-    import spark.implicits._
-    cap.batches.clear()
-
+  /** One rate rung over a fresh [[MarketLoop]]: its JSON line. */
+  private[graft] def runRung(spark: SparkSession, rate: Int, windowSec: Int): String = {
     val root = Files.createTempDirectory(s"graft_streambench_$rate")
-    def mk(n: String): Path = { val p = root.resolve(n); Files.createDirectories(p); p }
-    val ordersDir = mk("orders"); val pricesDir = mk("prices")
-    val updatersDir = mk("updaters"); val investsDir = mk("invests")
-    val eventsDir = mk("events"); val returnsDir = mk("returns")
+    val qs = MarketLoop.start(spark, root, _ => 0.05)
+    val batches = new Batches(qs)
 
-    val orderSchema = Encoders.product[MarketOrder].schema
-    val priceSchema = Encoders.product[SharePriceInfo].schema
-    val updaterSchema = Encoders.product[TraderStateUpdater].schema
-    val eventSchema = Encoders.product[TxnEvent].schema
-
-    // Q1 — J1 pricing: orders+prices topics → updaters topic
-    val ordersIn = JsonTopics.readStream(spark, ordersDir.toString, "string", orderSchema)
-      .select(col("key").as("_1"), col("value").as("_2")).as[(String, MarketOrder)]
-    val pricesIn = JsonTopics.readStream(spark, pricesDir.toString, "string", priceSchema)
-      .select("value.*").as[SharePriceInfo]
-    val q1 = JsonTopics.writeStream(MarketDataflow.priceOrders(spark, ordersIn, pricesIn)
-      .toDF("key", "value"), updatersDir.toString, root.resolve("cp_j1").toString)
-
-    // Q2 — T1+A3 ledger: updaters topic (J1 output) ∪ invests topic
-    // ∪ returns topic (T2 feedback) → events topic. Invests ride their
-    // OWN topic dir: a dir that is a file-sink output carries
-    // _spark_metadata, and a file source reading it trusts that log
-    // exclusively — hand-published files dropped beside sink output
-    // would be invisible (and in the reference the trader ops arrive
-    // on their own topic anyway).
-    val updatersIn = JsonTopics.readStream(spark, updatersDir.toString, "string", updaterSchema)
-      .union(JsonTopics.readStream(spark, investsDir.toString, "string", updaterSchema))
-      .union(JsonTopics.readStream(spark, returnsDir.toString, "string", updaterSchema))
-      .select(col("key").as("_1"), col("value").as("_2")).as[(String, TraderStateUpdater)]
-    val q2 = JsonTopics.writeStream(MarketDataflow.ledger(spark, updatersIn)
-      .toDF("key", "value"), eventsDir.toString, root.resolve("cp_t1").toString)
-
-    // Q3 — T2 ROI: events topic → RocksDB timers → returns topic
-    val eventsIn = JsonTopics.readStream(spark, eventsDir.toString, "string", eventSchema)
-      .select(col("key").as("_1"), col("value").as("_2")).as[(String, TxnEvent)]
-    val q3 = JsonTopics.writeStream(MarketDataflow.roiReturns(spark, eventsIn, _ => 0.05)
-      .toDF("key", "value"), returnsDir.toString, root.resolve("cp_t2").toString)
-
-    // sustained generation window
-    val gen = new Generator(root, ordersDir, pricesDir, investsDir, rate, windowSec)
-    gen.run()
+    // sustained generation window on its own thread, polled from this one
+    val gen = new Generator(root, rate, windowSec)
+    val generated = Future(gen.run())(ExecutionContext.global)
+    while (!generated.isCompleted) { Thread.sleep(500); batches.poll() }
+    generated.value.get.get // a generator failure fails the rung
     val genEnd = System.currentTimeMillis()
 
-    // drain: J1 and the ledger have consumed everything when their two
-    // latest progresses read zero input rows AND J1 has processed at
-    // least the generated row count. Timer-driven T2 keeps triggering
-    // on its own — bounded allowance instead of processAllAvailable
+    // drain: J1 and the ledger have consumed everything when J1 has
+    // processed at least the generated row count and neither has read
+    // input for 5 s. Timer-driven T2 keeps triggering on its own, so
+    // the wait is a bounded allowance instead of processAllAvailable
     // (which never settles under registered timers).
     val genRows = gen.orders + gen.prices
     val drainDeadline = genEnd + math.max(40, windowSec) * 1000L
-    def rows(q: StreamingQuery): Seq[Batch] = {
-      val queue = cap.batches.get(q.id)
-      if (queue == null) Seq.empty
-      else { import scala.jdk.CollectionConverters._; queue.asScala.toSeq }
-    }
-    // a file source emits NO zero-input progress events while idle, so
-    // "quiet" is time-based: no batch consumed input for 5 s
-    def quiet(q: StreamingQuery): Boolean = rows(q).filter(_.inputRows > 0).lastOption
-      .exists(b => System.currentTimeMillis() - b.wallMs - b.triggerMs > 5000)
+    def quiet(q: String): Boolean = batches(q).filter(_.numInputRows > 0).lastOption
+      .exists(p => System.currentTimeMillis() - endMs(p) - triggerMs(p) > 5000)
     var drained = false
     while (!drained && System.currentTimeMillis() < drainDeadline) {
-      Thread.sleep(1000)
-      drained = rows(q1).map(_.inputRows).sum >= genRows && quiet(q1) && quiet(q2)
+      Thread.sleep(500)
+      batches.poll()
+      drained = batches("j1").map(_.numInputRows).sum >= genRows && quiet("j1") && quiet("t1")
     }
-    Seq(q1, q2, q3).foreach(_.stop())
+    qs.values.foreach(_.stop())
+    batches.poll()
 
-    def stats(q: StreamingQuery): String = {
-      val all = rows(q)
-      val active = all.filter(_.inputRows > 0)
-      val trig = active.map(_.triggerMs)
-      val input = all.map(_.inputRows).sum
+    def stats(q: String): String = {
+      val all = batches(q)
+      val active = all.filter(_.numInputRows > 0)
+      val trig = active.map(triggerMs)
+      val input = all.map(_.numInputRows).sum
       val span =
         if (active.size < 2) 0.0
-        else (active.last.wallMs + active.last.triggerMs - active.head.wallMs) / 1000.0
+        else (endMs(active.last) + triggerMs(active.last) - endMs(active.head)) / 1000.0
       val rps = if (span > 0) input / span else 0.0
-      val lastState = all.lastOption.map(_.stateRows).getOrElse(0L)
+      def stateSum(p: StreamingQueryProgress, f: StateOperatorProgress => Long): Long =
+        p.stateOperators.map(f).sum
+      val lastState = all.lastOption.map(stateSum(_, _.numRowsTotal)).getOrElse(0L)
       // commitTimeMs summed over the state store tasks, not wall time
-      val commitMean = if (active.isEmpty) 0L else active.map(_.commitMs).sum / active.size
-      val mem = all.lastOption.map(_.stateMemBytes).getOrElse(0L)
+      val commitMean =
+        if (active.isEmpty) 0L else active.map(stateSum(_, _.commitTimeMs)).sum / active.size
+      val mem = all.lastOption.map(stateSum(_, _.memoryUsedBytes)).getOrElse(0L)
       f"""{"rows":$input,"batches":${all.size},"active_batches":${active.size},""" +
         f""""rps":$rps%.0f,"trigger_p50_ms":${pct(trig, 0.50)},"trigger_p95_ms":${pct(trig, 0.95)},""" +
         f""""trigger_max_ms":${trig.maxOption.getOrElse(0L)},"state_rows":$lastState,""" +
@@ -253,11 +164,10 @@ object StreamBench {
     val line =
       f"""{"rate":$rate,"window_sec":$windowSec,"generated":{"orders":${gen.orders},""" +
         f""""prices":${gen.prices},"invests":${gen.invests},"gen_wall_ms":${gen.genWallMs}},""" +
-        f""""drained":$drained,"j1_pricing":${stats(q1)},""" +
-        f""""t1_ledger":${stats(q2)},"t2_roi":${stats(q3)}}"""
+        f""""drained":$drained,"j1_pricing":${stats("j1")},""" +
+        f""""t1_ledger":${stats("t1")},"t2_roi":${stats("t2")}}"""
     // best-effort cleanup of the rung's topic+checkpoint tree
     try {
-      import scala.jdk.CollectionConverters._
       Files.walk(root).iterator().asScala.toSeq.reverse.foreach(p =>
         try Files.deleteIfExists(p) catch { case _: Throwable => () })
     } catch { case _: Throwable => () }
@@ -270,17 +180,15 @@ object StreamBench {
     val windowSec = sys.env.get("SPARK_GRAFT_STREAM_WINDOW").map(_.toInt).getOrElse(40)
     val spark = graft.GraftSession.builderFromEnv("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val cap = new Capture
-    spark.streams.addListener(cap)
     val rungs = rates.map { r =>
       System.err.println(s"[streambench] rung rate=$r window=${windowSec}s")
-      val line = runRung(spark, cap, r, windowSec)
+      val line = runRung(spark, r, windowSec)
       println(line)
       line
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT", {
       val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
-        .format(java.time.Instant.now.atZone(java.time.ZoneOffset.UTC))
+        .format(Instant.now.atZone(java.time.ZoneOffset.UTC))
       s"dev/stream_throughput_$ts.json"
     })
     val doc = rungs.mkString("{\"metric\":\"stream_throughput\",\"rungs\":[\n", ",\n", "\n]}\n")

@@ -1,5 +1,8 @@
 package graft.tools
 
+import scala.collection.Searching.{Found, InsertionPoint}
+
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,12 +19,11 @@ import graft.functions.InterleaveBits
   * shard that can match and scanning the table (the OPTIMIZE
   * ZORDER BY discipline of lakehouse formats; Morton 1966).
   *
-  * Scale shape: ONE range-exchange on the z-value (repartitionByRange
-  * samples the curve, so files are balanced even when the value
-  * distribution is skewed) + an in-partition sort — no global sort,
-  * no driver participation; numFiles is the layout knob
-  * (tableBytes / targetFileBytes, same sizing rule as
-  * [[BucketedLayout]]).
+  * Scale shape: one count of rows per curve-key prefix (the file cut
+  * points, balanced even when the value distribution is skewed), ONE
+  * exchange routing each row to its file + an in-partition sort — no
+  * global sort; numFiles is the layout knob (tableBytes /
+  * targetFileBytes, same sizing rule as [[BucketedLayout]]).
   *
   * ZOrderLayoutSpec carries the receipt: on a 2-D uniform corpus a
   * non-leading-column box scan touches a fraction of the z-layout's
@@ -126,11 +128,12 @@ object ZOrderLayout {
   }
 
   /** Write `df` curve-ordered by `zCols` (already bucketed to
-    * [0, 2^bits)) into `path` as `numFiles` parquet files: one range
-    * exchange on the curve key, in-partition sort, key dropped before
-    * write (the skipping payoff lives in the ORIGINAL columns'
-    * per-file stats — persisting the derived key is the caller's
-    * choice via keepZ). The curve-family sidecar is written LAST. */
+    * [0, 2^bits)) into `path` as `numFiles` parquet files: one
+    * exchange on the file of each curve key ([[byFile]]), in-partition
+    * sort, key dropped before write (the skipping payoff lives in the
+    * ORIGINAL columns' per-file stats — persisting the derived key is
+    * the caller's choice via keepZ). The curve-family sidecar is
+    * written LAST. */
   def write(df: DataFrame, path: String, zCols: Seq[Column], bits: Int,
             numFiles: Int, keepZ: Boolean = false,
             curve: String = "morton"): Unit = {
@@ -139,11 +142,38 @@ object ZOrderLayout {
     val keyed = df.withColumn(zc, curveKey(zCols, bits, curve))
     val laid =
       if (numFiles == 1) keyed.coalesce(1).sortWithinPartitions(zc)
-      else keyed.repartitionByRange(numFiles, col(zc)).sortWithinPartitions(zc)
+      else byFile(keyed, zc, zCols.length * bits, numFiles).sortWithinPartitions(zc)
     (if (keepZ) laid else laid.drop(zc))
       .write.mode("overwrite").parquet(path)
     java.nio.file.Files.writeString(
       new java.io.File(path, FamilyMarker).toPath,
       curveFamily(zCols.length, bits, curve) + "\n"): Unit
+  }
+
+  /** `keyed` in `numFiles` partitions, one per file, each holding one
+    * contiguous range of the curve key `zc` (nulls in the first). The
+    * cuts come from an exact count of rows per 16-bit key prefix, so the
+    * same rows give the same files whatever the session ran before
+    * (repartitionByRange samples with seeds taken from RDD ids). */
+  private def byFile(keyed: DataFrame, zc: String, keyBits: Int, numFiles: Int): DataFrame = {
+    val shift = math.max(0, keyBits - 16)
+    val counts = keyed.groupBy(shiftright(col(zc), shift)).count().na.drop().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val before = counts.scanLeft(0L)(_ + _._2)
+    // file f starts at the first prefix with f/numFiles of the rows
+    // before it; a prefix holding more than a file's share means fewer files
+    val cuts = (1 until numFiles).flatMap(f =>
+      counts.lift(before.indexWhere(_ * numFiles >= f * before.last)).map(_._1)).distinct
+    val z = keyed.schema.fieldIndex(zc)
+    val routed = keyed.rdd.keyBy { r =>
+      if (r.isNullAt(z)) 0
+      else cuts.search(r.getLong(z) >> shift) match {
+        case Found(i) => i + 1
+        case InsertionPoint(i) => i
+      }
+    }
+    // an Int's hash is itself: HashPartitioner sends file f to partition f
+    keyed.sparkSession.createDataFrame(
+      routed.partitionBy(new HashPartitioner(numFiles)).values, keyed.schema)
   }
 }

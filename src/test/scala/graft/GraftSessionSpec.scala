@@ -24,6 +24,13 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
   }
 
+  test("AQE's coalescing floor is the core count without a minPartitionNum conf") {
+    assert(spark.conf.getOption("spark.sql.adaptive.coalescePartitions.minPartitionNum").isEmpty)
+    // unset, CoalesceShufflePartitions floors at defaultParallelism: the
+    // local[4] harness session's thread count
+    assert(spark.sparkContext.defaultParallelism === 4)
+  }
+
   test("both Hadoop file APIs resolve the file scheme to the graft classes") {
     val conf = spark.sessionState.newHadoopConf()
     assert(FileSystem.getFileSystemClass("file", conf) === classOf[GraftLocalFileSystem])

@@ -1,10 +1,18 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model._
+import graft.sources.JsonTopics
 
 /** Checkpoint-recovery restart proof (VERDICT r12 Next #1) — the last
   * reference runtime property (§2.12 fault tolerance) previously
@@ -27,7 +35,10 @@ import graft.model._
   *     restart — timers live in the state store, not the JVM;
   *  3. an event-time WINDOW open across the restart closes with the
   *     pre-stop partial aggregate merged in (watermark + window state
-  *     recovery, kata03's tumbling sum).
+  *     recovery, kata03's tumbling sum);
+  *  4. the whole closed loop (J1 → T1 → T2 → returns → T1, started
+  *     through [[MarketLoop]]) restarted at once loses and repeats no
+  *     TxnEvent, and its ledger ends where the batch twin does.
   */
 class RecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -157,6 +168,103 @@ class RecoverySpec extends SparkSpec {
     val (trader, u) = returns.head
     assert(trader == "B_b" && u.updaterType == UpdaterType.RETURN)
     assert(math.abs(u.coinsDiff - 0.2) < 1e-12 && u.investDiff == -1)
+  }
+
+  /** Lines of a file-sink topic in commit order: batch by batch from
+    * its `_spark_metadata` log, each file's lines as written. */
+  private def committedLines(topic: Path): Seq[String] = {
+    val log = topic.resolve("_spark_metadata")
+    val PathField = "\"path\":\"([^\"]+)\"".r
+    Option(log.toFile.list()).getOrElse(Array.empty[String]).toSeq
+      .filter(_.matches("[0-9]+(\\.compact)?")).sortBy(_.takeWhile(_.isDigit).toLong)
+      .flatMap(n => Files.readAllLines(log.resolve(n)).asScala.drop(1))
+      .flatMap(l => PathField.findFirstMatchIn(l).map(m => new URI(m.group(1)).getPath))
+      .distinct
+      .flatMap(f => Files.readAllLines(Paths.get(f)).asScala)
+  }
+
+  test("closed loop: J1, T1 and T2 restarted through MarketLoop lose and repeat nothing") {
+    val root = Files.createTempDirectory("graft-recovery-loop")
+    def topic(n: String): String = MarketLoop.topic(root, n).toString
+    def publish[T: Encoder](n: String, rows: Seq[T]): Unit =
+      JsonTopics.write(rows.toDS().toDF("key", "value"), topic(n))
+    // 8 traders, each with 4 orders and 2 INVESTs, half in each lifetime.
+    // A trader only buys (4 shares at 2.0 out of 10 coins) or only sells
+    // (4 of its 5 shares), and an INVEST costs 0.01, so every operation
+    // is accepted in any order: the contract under which the streaming
+    // ledger and the event-time-sorted batch twin end on equal balances
+    // (MarketDataflow.ledger).
+    val traders = 8
+    def orders(half: Int): Seq[(String, MarketOrder)] = (0 until 16).map { i =>
+      val k = half * 16 + i
+      val side = if (k % 2 == 0) "BUY" else "SELL"
+      s"T${k % traders}" -> MarketOrder(ts(t0 + 1000 * half + k), s"o$k", side, 1)
+    }
+    def invests(half: Int): Seq[(String, TraderStateUpdater)] = (0 until traders).map { i =>
+      val k = half * traders + i
+      s"T$i" -> Semantics.investDelta(Investment(ts(t0 + 1000 * half + k), s"i$k", 0.01))
+    }
+    def inputRows(q: StreamingQuery): Long =
+      q.recentProgress.filter(_.durationMs.containsKey("addBatch")).map(_.numInputRows).sum
+
+    // lifetime 1: the one price and the first half; stop all three
+    // queries once t1 has committed a batch that read input
+    val first = MarketLoop.start(spark, root, _ => 1.5)
+    try {
+      publish("prices", Seq("FOO" -> SharePriceInfo(ts(t0), 2.0, 2.1)))
+      publish("orders", orders(0))
+      publish("invests", invests(0))
+      eventually(120000, "t1 batch that read input") { inputRows(first("t1")) > 0 }
+    } finally first.values.foreach(_.stop())
+
+    // lifetime 2, same root: no new price, so the second half's orders
+    // are priced only if J1's price cell was recovered
+    val second = MarketLoop.start(spark, root, _ => 1.5)
+    val mapper = new ObjectMapper()
+    def events: Seq[JsonNode] = committedLines(MarketLoop.topic(root, "events"))
+      .map(l => mapper.readTree(l))
+    def op(e: JsonNode): String = e.get("value").get("txnResult").get("opType").asText
+    try {
+      publish("orders", orders(1))
+      publish("invests", invests(1))
+      // every order and INVEST has its TxnEvent, and every INVEST its RETURN's
+      eventually(120000, "32 order, 16 INVEST and 16 RETURN TxnEvents") {
+        events.map(op).groupBy(identity).view.mapValues(_.size).toMap ==
+          Map(UpdaterType.MARKET -> 32, UpdaterType.INVEST -> 16, UpdaterType.RETURN -> 16)
+      }
+    } finally second.values.foreach(_.stop())
+
+    val evs = events
+    def result(e: JsonNode): JsonNode = e.get("value").get("txnResult")
+    val ids = evs.map(e => (op(e), result(e).get("txnId").asText))
+    assert(ids.distinct.size === ids.size, "a TxnEvent was repeated")
+    def idsOf(t: String): Set[String] = ids.filter(_._1 == t).map(_._2).toSet
+    assert(idsOf(UpdaterType.MARKET) === (0 until 32).map(k => s"o$k").toSet)
+    assert(idsOf(UpdaterType.INVEST) === (0 until 16).map(k => s"i$k").toSet)
+    assert(evs.forall(e => result(e).get("status").asText == TxnResultType.ACCEPTED))
+    // one RETURN per accepted INVEST (all of them, as asserted above)
+    assert(idsOf(UpdaterType.RETURN) === idsOf(UpdaterType.INVEST))
+
+    // each trader's last TxnEvent in commit order carries its final
+    // ledger; the batch twin folds the same three input topics
+    val streamFinal = evs.groupBy(_.get("key").asText).map { case (t, es) =>
+      t -> result(es.last).get("state")
+    }
+    def updaters(n: String): Dataset[(String, TraderStateUpdater)] =
+      JsonTopics.read(spark, topic(n), "string", Encoders.product[TraderStateUpdater].schema)
+        .select(col("key").as("_1"), col("value").as("_2")).as[(String, TraderStateUpdater)]
+    val batchFinal = MarketDataflow.ledgerBatch(spark,
+        updaters("updaters").union(updaters("invests")).union(updaters("returns")))
+      .collect().groupBy(_._1).map { case (t, es) => t -> es.last._2.txnResult.state }
+    assert(streamFinal.keySet === batchFinal.keySet)
+    assert(streamFinal.size === traders)
+    batchFinal.foreach { case (t, b) =>
+      val s = streamFinal(t)
+      assert(math.abs(s.get("coins").asDouble - b.coins) < 1e-9, t)
+      assert((s.get("shares").asInt, s.get("bailouts").asInt, s.get("fedMonkeys").asInt,
+        s.get("inFlightInvestments").asInt) === ((b.shares, b.bailouts, b.fedMonkeys,
+        b.inFlightInvestments)), t)
+    }
   }
 
   test("kata03: a window open across the restart closes with pre-stop state merged") {

@@ -1,0 +1,34 @@
+package graft.tools
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+import graft.streaming.SparkSpec
+
+/** StreamBench's rung end to end at a tiny rate: one fresh market loop,
+  * the generator thread, the progress polling and the drain rule, down
+  * to the JSON line a rung prints. */
+class StreamBenchSpec extends SparkSpec {
+
+  private def fields(n: JsonNode): Set[String] = n.fieldNames().asScala.toSet
+
+  test("a 200 rec/s rung drains and prints every field of its JSON line") {
+    val line = StreamBench.runRung(spark, rate = 200, windowSec = 4)
+    val doc = new ObjectMapper().readTree(line)
+    assert(fields(doc) === Set("rate", "window_sec", "generated", "drained",
+      "j1_pricing", "t1_ledger", "t2_roi"), line)
+    assert(fields(doc.get("generated")) === Set("orders", "prices", "invests", "gen_wall_ms"))
+    val hop = Set("rows", "batches", "active_batches", "rps", "trigger_p50_ms",
+      "trigger_p95_ms", "trigger_max_ms", "state_rows", "commit_task_sum_ms_mean",
+      "state_mem_bytes")
+    Seq("j1_pricing", "t1_ledger", "t2_roi").foreach(q => assert(fields(doc.get(q)) === hop, q))
+    assert(doc.get("drained").asBoolean, line)
+    val gen = doc.get("generated")
+    // 100 orders and 10 prices a 500 ms tick
+    assert(gen.get("orders").asLong > 0 && gen.get("orders").asLong % 100 == 0, line)
+    assert(gen.get("prices").asLong * 10 === gen.get("orders").asLong, line)
+    assert(doc.get("j1_pricing").get("rows").asLong ===
+      gen.get("orders").asLong + gen.get("prices").asLong, line)
+  }
+}
