@@ -106,11 +106,11 @@ object Dedup {
   def contaminationCheck(train: DataFrame, eval: DataFrame,
                          textCol: String = "text", idCol: String = "doc_id",
                          n: Int = 8): DataFrame = {
-    // spread before the shingle explode (r15, see [[spreadNarrow]]) —
+    // spread before the shingle explode (r15, see [[Spread]]) —
     // both sides: the train scan is the wide one, the eval side is
     // small but pays the same single-task serialization at small SF
     def shingles(df: DataFrame, idAs: String): DataFrame =
-      spreadNarrow(df.select(col(idCol).as(idAs), col(textCol).as("__text")))
+      Spread.narrow(df.select(col(idCol).as(idAs), col(textCol).as("__text")))
         .select(col(idAs),
           graft.operators.StatelessOps.tokenArray(col("__text")).as("toks"))
         .where(size(col("toks")) >= n)
@@ -166,7 +166,7 @@ object Dedup {
     val w = Window.partitionBy(col("h"))
     // spread the narrow projection first (r15): the shingle explode
     // otherwise runs at scan parallelism — one task at small SF
-    val kept = spreadNarrow(
+    val kept = Spread.narrow(
         docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("__text")))
       .select(col("doc_id"), toks2(col("__text")).as("toks"))
       .where(size(col("toks")) >= n)
@@ -270,9 +270,8 @@ object Dedup {
     // idiom — pair fan-out bounded by maxBlock·(maxBlock−1)/2).
     // Input spread first (r15): single-row-group scans tokenized as
     // one task; collect_list partials neither grow nor collapse under
-    // the spread (see [[spreadNarrow]]).
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val blocks = spreadNarrow(docs.select(col(idCol).cast("long").as("id"),
+    // the spread (see [[Spread]]).
+    val blocks = Spread.narrow(docs.select(col(idCol).cast("long").as("id"),
         col(textCol).as("__text")))
       .select(col("id"), substring(col("__text"), 1, prefixLen).as("pfx"),
         toks.as("toks"))
@@ -287,7 +286,7 @@ object Dedup {
     // idiom): AQE coalesces the small block aggregate to ~3 partitions
     // and the |block|²·DP work — the expensive part — serialized onto
     // 3 of 32 cores (measured 3.0 CPU-s in 3 tasks at sf0.1)
-    blocks.repartition(n)
+    blocks.repartition(Spread.width(docs.sparkSession))
       .select(explode(expr(
         """flatten(transform(ms, a -> transform(ms, b ->
           |  struct(a.id AS doc_a, a.pfx AS pfx_a, b.id AS doc_b, b.pfx AS pfx_b))))"""
@@ -365,35 +364,13 @@ object Dedup {
     }
   }
 
-  /** Spread a narrow projection across the session's parallelism when
-    * its scan has fewer partitions — a small corpus in a single
-    * parquet row group otherwise tokenizes/shingles as ONE task
-    * (measured r15: dd_containment's shingle stage ran 1.0-1.8 s
-    * single-task at sf0.1 while 31 cores idled). At 100 TB the scan is
-    * already parallel and this is a no-op. Safe exactly when the
-    * downstream keys are doc/shingle-grained — collect_list partials
-    * and (doc, hash) distincts neither grow nor collapse under the
-    * spread; VOCAB-keyed aggregate pipelines must NOT use it (the r14
-    * ta_* revert: 32 copies of vocab partials cross the shuffle). */
-  private[graft] def spreadNarrow(df: DataFrame): DataFrame = {
-    // streaming frames cannot be partition-counted (.rdd) or usefully
-    // round-robin-repartitioned — micro-batch parallelism is the
-    // source's concern; pass them through (contaminationCheck's
-    // streaming-train twin hits this path)
-    if (df.isStreaming) return df
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    if (df.rdd.getNumPartitions < n) df.repartition(n) else df
-  }
-
   /** Distinct-token shingle set per doc with mod-2^31 hashes — the
     * shared front end of MinHash and Jaccard. Tokenizer is THE single
     * definition in StatelessOps.explodeTokens (oracle parity for every
     * dedup and text-analysis query depends on one tokenizer per engine). */
   private def tokenHashes(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val slim = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    val spread = spreadNarrow(slim)
-    spread.select(col("doc_id"),
-        StatelessOps.explodeTokens(col("__text")).as("tok"))
+    Spread.narrow(docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")))
+      .select(col("doc_id"), StatelessOps.explodeTokens(col("__text")).as("tok"))
       .filter(length(col("tok")) > 0)
       // FULL 60-bit token hash (r12): the near-dup identity paths
       // (minhash banding, jaccard token sets, simhash bit votes) all
@@ -469,12 +446,11 @@ object Dedup {
       .select(col("doc_id"), bucketArray(bands, rowsPerBand).as("bands"))
       .select(col("doc_id"), col("bands"),
         posexplode(col("bands")).as(Seq("band", "bucket")))
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     saltedBucketGroups(banded,
       struct(col("doc_id").as("_1"), col("bands").as("_2")), maxBucket)
       // AQE coalesces this small aggregate to ~1 partition; the pair
       // emission below is the expensive part, so rebalance first.
-      .repartition(n).as[(Int, Seq[(Long, Seq[Long])])]
+      .repartition(Spread.width(spark)).as[(Int, Seq[(Long, Seq[Long])])]
       // Dedicated iterator class, not Iterator.flatMap chains: the
       // shared combinator call sites go megamorphic in a long-lived
       // session (43 bench queries in one JVM) and the kernel
@@ -808,7 +784,6 @@ object Dedup {
     val width = 32 / chunks
     val spark = docs.sparkSession
     import spark.implicits._
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val sigs = simHash(docs, textCol, idCol)
     val banded = sigs.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until chunks).map(c =>
@@ -816,7 +791,7 @@ object Dedup {
         .as(Seq("band", "bucket")))
     saltedBucketGroups(banded,
       struct(col("doc_id").as("_1"), col("simhash").as("_2")), maxBucket)
-      .repartition(n)
+      .repartition(Spread.width(spark))
       .as[(Int, Seq[(Long, Long)])]
       .mapPartitions(groups => new HammingIterator(groups, maxDist, width))
       .toDF("doc_a", "doc_b", "hamming")
@@ -943,8 +918,8 @@ object Dedup {
   def crossDocNgrams(docs: DataFrame, textCol: String, idCol: String,
                      n: Int = 3): DataFrame = {
     require(n >= 2, "n >= 2 (a 1-gram fraction is just token overlap)")
-    // spread before the gram explode (r15, see [[spreadNarrow]])
-    val toksDf = spreadNarrow(docs.select(col(idCol).cast("long").as("doc_id"),
+    // spread before the gram explode (r15, see [[Spread]])
+    val toksDf = Spread.narrow(docs.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("__text")))
       .select(col("doc_id"), StatelessOps.tokenArray(col("__text")).as("toks"))
       .filter(size(col("toks")) >= n)
@@ -993,8 +968,8 @@ object Dedup {
   def duplicatedSpans(docs: DataFrame, textCol: String, idCol: String,
                       n: Int = 3, minRun: Int = 2): DataFrame = {
     require(n >= 2 && minRun >= 1, "need n >= 2 and minRun >= 1")
-    // spread before the gram explode (r15, see [[spreadNarrow]])
-    val toksDf = spreadNarrow(docs.select(col(idCol).cast("long").as("doc_id"),
+    // spread before the gram explode (r15, see [[Spread]])
+    val toksDf = Spread.narrow(docs.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("__text")))
       .select(col("doc_id"), StatelessOps.tokenArray(col("__text")).as("toks"))
       .filter(size(col("toks")) >= n)
@@ -1044,7 +1019,7 @@ object Dedup {
       .agg(collect_set(col("cpos").cast("int")).as("cov"))
     // spread the apply pass too (r15): its tokenize otherwise runs at
     // scan parallelism, and the join keys on doc_id (doc-grained, safe)
-    spreadNarrow(docs.select(col(idCol).cast("long").as("doc_id"),
+    Spread.narrow(docs.select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("__text")))
       .select(col("doc_id"), StatelessOps.tokenArray(col("__text")).as("toks"))
       .join(cov, Seq("doc_id"), "left")
@@ -1105,7 +1080,6 @@ object Dedup {
     val mask = if (width == 64) -1L else (1L << width) - 1
     val spark = hashes.sparkSession
     import spark.implicits._
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // Recompose the 64-bit signature once: hi = bits 32..63, lo =
     // bits 0..31, so chunk c = (sig >>> c·width) & mask — identical
     // chunk keys to the former hi/lo-split form at width 8. Both
@@ -1122,7 +1096,7 @@ object Dedup {
           .as(Seq("band", "bucket")))
     saltedBucketGroups(banded,
       struct(col("doc_id").as("_1"), col("sig").as("_2")), maxBucket)
-      .repartition(n)
+      .repartition(Spread.width(spark))
       .as[(Int, Seq[(Long, Long)])]
       // same kernel as simHashPairs: chunks × width covers the full
       // 64-bit signature; dist is the exact 64-bit popcount
@@ -1158,7 +1132,6 @@ object Dedup {
     val k = bands * rowsPerBand
     val spark = docs.sparkSession
     import spark.implicits._
-    val n = docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val sigsWithToks = tokenHashes(docs, textCol, idCol)
       .select(col("doc_id") +: col("h") +:
         (0 until k).map(j => Hashing.affine61(col("h"), j).as(s"a$j")): _*)
@@ -1173,7 +1146,7 @@ object Dedup {
     saltedBucketGroups(banded,
       struct(col("doc_id").as("_1"), col("toks").as("_2"), col("bands").as("_3")),
       maxBucket)
-      .repartition(n)
+      .repartition(Spread.width(spark))
       .as[(Int, Seq[(Long, Seq[Long], Seq[Long])])]
       // dedicated iterator class — see PairIterator's megamorphism note
       .mapPartitions(groups => new GroupJaccardIterator(groups, threshold, spanningOnly))

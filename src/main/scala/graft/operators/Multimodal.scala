@@ -49,12 +49,11 @@ object Multimodal {
                    bytesPerFrame: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len"))
+    // same split-width note as asPngPayload: spread the narrow frame
+    // across the executor width before the CPU-heavy encode
+    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
+        octet_length(col(textCol)).cast("long").as("byte_len")))
       .as[(Long, Long)]
-      // same split-width note as asPngPayload: spread the narrow frame
-      // across the executor width before the CPU-heavy encode
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         val buf = new ByteArrayOutputStream(8192)
         val writer = ImageIO.getImageWritersByFormatName("gif").next()
@@ -100,16 +99,15 @@ object Multimodal {
   def asPngPayload(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len"))
+    // the scan of a small fixture file yields 1-2 splits, which would
+    // run the CPU-heavy encode/decode/resize chain on 1-2 cores; spread
+    // the NARROW 2-column frame across the executor width BEFORE
+    // synthesis (see [[Spread]]), so the heavy kernels downstream stay
+    // payload-colocated (payload bytes themselves never shuffle — the
+    // real-ingest property this fixture stands in for)
+    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
+        octet_length(col(textCol)).cast("long").as("byte_len")))
       .as[(Long, Long)]
-      // the scan of a small fixture file yields 1-2 splits, which
-      // would run the CPU-heavy encode/decode/resize chain on 1-2
-      // cores; spread the NARROW 2-column frame across the executor
-      // width BEFORE synthesis, so the heavy kernels downstream stay
-      // payload-colocated (payload bytes themselves never shuffle —
-      // the real-ingest property this fixture stands in for)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         val buf = new ByteArrayOutputStream(4096)
         it.map { case (docId, byteLen) =>
@@ -245,10 +243,9 @@ object Multimodal {
   def asCellGridPayload(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len"))
+    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
+        octet_length(col(textCol)).cast("long").as("byte_len")))
       .as[(Long, Long)]
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         val buf = new ByteArrayOutputStream(4096)
         it.map { case (docId, byteLen) =>
@@ -379,10 +376,9 @@ object Multimodal {
                    sampleRate: Int = 8000, seedMod: Long = 0L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len"))
+    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
+        octet_length(col(textCol)).cast("long").as("byte_len")))
       .as[(Long, Long)]
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         it.map { case (docId0, byteLen) =>
           // seedMod > 0 buckets the PCM seed (the asCellGridPayload

@@ -217,15 +217,9 @@ object Similarity {
     // corpus in a few parquet row groups scans as 1-4 tasks — the n×k
     // cosine job then runs nearly serial (measured 10× on the
     // semdedup ladder). Spread the narrow (vec_id, embD) projection
-    // to executor width when the scan is narrower; a corpus-scale
-    // scan (thousands of row groups — the 100 TB case) skips the
-    // shuffle entirely. The tokenHashes idiom.
-    val wide = spark.sparkContext.defaultParallelism
-    val corpusD = {
-      val slim = corpus.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("embD"))
-      if (slim.rdd.getNumPartitions < wide) slim.repartition(wide) else slim
-    }
+    // to executor width when the scan is narrower (see [[Spread]]).
+    val corpusD = Spread.narrow(corpus.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("embD")))
     // init: k md5-smallest vectors (TakeOrderedAndProject — an order
     // statistic, never a corpus-wide window), numbered in hash order
     // on the driver
@@ -312,9 +306,7 @@ object Similarity {
   def ivfAssign(corpus: DataFrame, cents: DataFrame): DataFrame = {
     // spread a narrow scan to executor width before the n×k cosine
     // work (same rationale as kmeansTrain; no-op on wide scans)
-    val wide = corpus.sparkSession.sparkContext.defaultParallelism
-    val slim = corpus.select(col("vec_id"), col("embedding"))
-    val spread = if (slim.rdd.getNumPartitions < wide) slim.repartition(wide) else slim
+    val spread = Spread.narrow(corpus.select(col("vec_id"), col("embedding")))
     // pair-INVARIANT work hoisted out of the n×k inner loop: the
     // float→double cast and |v| fold happen once per corpus row, |c|
     // once per centroid — only the dot product is inherent per-pair
@@ -748,14 +740,13 @@ object Similarity {
     // Quantize + slice each vector ONCE into (vec_id, sub, sub_m) —
     // m short rows per vector, instead of re-slicing 64 doubles per
     // (vector × m·ksub codebook row) pair inside the loop. The frame
-    // is repartitioned to executor width because the downstream join
-    // is narrow and otherwise inherits the input's file-split count
-    // (a bin-packed small-file scan runs the whole expansion in 1-2
-    // tasks), and eagerly checkpointed because every Lloyd iteration
-    // re-reads it. The checkpoint footprint is bounded by the
-    // trainSample contract above (m rows per SAMPLED vector).
-    val subRows = corpusD
-      .repartition(spark.sparkContext.defaultParallelism)
+    // is spread to executor width (see [[Spread]]) because the
+    // downstream join is narrow and otherwise inherits the input's
+    // file-split count (a bin-packed small-file scan runs the whole
+    // expansion in 1-2 tasks), and eagerly checkpointed because every
+    // Lloyd iteration re-reads it. The checkpoint footprint is bounded
+    // by the trainSample contract above (m rows per SAMPLED vector).
+    val subRows = Spread.narrow(corpusD)
       .select(col("vec_id"), posexplode(expr(
         s"""transform(sequence(0, ${m - 1}), s ->
            |  transform(slice(embD, s * $dSub + 1, $dSub),

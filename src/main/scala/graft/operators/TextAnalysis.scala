@@ -921,13 +921,8 @@ object TextAnalysis {
 
   def winnowFingerprint(df: DataFrame, textCol: String, idCol: String,
                         k: Int = 4, w: Int = 8): DataFrame = {
-    // spread first when the scan has fewer partitions than the session
-    // parallelism (a small corpus in one row group scans as ONE task);
-    // at scan scale (many files/row groups) this is a no-op branch
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val slim = df.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-    val spread = if (slim.rdd.getNumPartitions < n) slim.repartition(n) else slim
-    spread
+    // spread before the winnow kernel (see [[Spread]])
+    Spread.narrow(df.select(col(idCol).as("doc_id"), col(textCol).as("__t")))
       .select(col("doc_id"),
         graft.functions.WinnowSummary.winnowSummary(col("__t"), k, w).as("__ws"))
       .filter(col("__ws").isNotNull)

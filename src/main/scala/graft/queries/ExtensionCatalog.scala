@@ -1356,8 +1356,7 @@ object ExtensionCatalog {
     // spread before the regex-heavy quality gate (r15): the curation
     // chain otherwise runs its scan+gate+hash stages as ONE task on a
     // single-row-group fixture; downstream keys are doc/hash-grained
-    val gated = TextAnalysis.qualityFeatures(
-      graft.operators.Dedup.spreadNarrow(docs), "text")
+    val gated = TextAnalysis.qualityFeatures(Spread.narrow(docs), "text")
       .filter(col("quality_score") >= 0.7 && col("lang").isin("en", "fr"))
       .select(col("doc_id"), col("text"))
     val survivors = Dedup.exact(gated, "text", "doc_id")

@@ -581,7 +581,7 @@ object QueryCatalog {
     // side, so the join runs inside the probe scan's tasks — one task
     // on a single-row-group fixture (measured 0.8-1.2 s serialized, 31
     // cores idle). No-op once the scan is parallel (the 100 TB case).
-    val a = graft.operators.Dedup.spreadNarrow(
+    val a = Spread.narrow(
       ev.select(col("event_type"), col("event_id").as("id_a"),
         col("value").as("v_a"), cell.as("cell")))
     val b = ev.select(col("event_type"), col("event_id").as("id_b"),

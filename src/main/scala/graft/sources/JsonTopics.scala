@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.StructType
   *
   * The wire semantics carried over: tolerant parsing (unknown fields
   * ignored — from_json drops them; malformed rows become null values,
-  * not failures), ISO-8601 UTC timestamps, key+value envelope. The
-  * same API shape would bind to `format("kafka")` on a real cluster —
-  * only `load`/`save` options change.
+  * not failures), ISO-8601 UTC timestamps, key+value envelope. Only
+  * the directory transport exists: the build ships no Kafka connector,
+  * so nothing here binds to `format("kafka")`.
   *
   * The broker-mediated feedback loop (T2's RETURN updaters looping
   * back into trader-state-updates, MarketDataflow.java:130-165) is
@@ -23,42 +23,6 @@ import org.apache.spark.sql.types.StructType
   * as another query's source dir.
   */
 object JsonTopics {
-
-  /** Transport selection: a topic is either a directory of JSON-lines
-    * (the in-container stand-in) or a real Kafka topic — the record
-    * shape ({"key", "value"} envelope, tolerant JSON value) is
-    * identical, so dataflows are written once against this API. */
-  sealed trait TopicTransport
-  final case class DirTopic(dir: String) extends TopicTransport
-  final case class KafkaTopic(bootstrapServers: String, topic: String,
-                              startingOffsets: String = "earliest") extends TopicTransport
-
-  /** Consumer options for the Kafka branch — the reference's consumer
-    * wiring (bootstrap servers + subscribe + offset reset,
-    * MarketDataflow.java:85-97). Pure, unit-testable without a broker. */
-  def kafkaReadOptions(k: KafkaTopic): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> k.bootstrapServers,
-    "subscribe" -> k.topic,
-    "startingOffsets" -> k.startingOffsets,
-    // the reference's consumers resume past compacted/expired segments
-    "failOnDataLoss" -> "false")
-
-  /** Streaming read over either transport. The Kafka branch decodes
-    * the binary key/value into the same (key, value struct) columns
-    * the dir branch produces, so downstream operators are
-    * transport-agnostic. Untested against a live broker in this
-    * container (none available) — the option construction is
-    * unit-tested instead. */
-  def readStreamFrom(spark: SparkSession, topic: TopicTransport, keyType: String,
-                     valueSchema: StructType): DataFrame = topic match {
-    case DirTopic(dir) => readStream(spark, dir, keyType, valueSchema)
-    case k: KafkaTopic =>
-      kafkaReadOptions(k).foldLeft(spark.readStream.format("kafka")) {
-        case (r, (opt, v)) => r.option(opt, v)
-      }.load()
-        .select(col("key").cast("string").cast(keyType).as("key"),
-          from_json(col("value").cast("string"), valueSchema).as("value"))
-  }
 
   /** Streaming read of a topic dir: JSON lines → (key, value struct). */
   def readStream(spark: SparkSession, dir: String, keyType: String,
@@ -111,9 +75,10 @@ object JsonTopics {
     * at 1, then restores the caller's value. The query copies the
     * session conf while it starts, so it keeps one state store after
     * the restore. Starts are serialized so that two concurrent ones
-    * cannot restore each other's value. Batch queries running on the
-    * same session in other threads would see the 1 while a start is in
-    * flight. */
+    * cannot restore each other's value. Batch queries planned on the
+    * same session in other threads see the 1 as their shuffle width
+    * while a start is in flight; their scan spreads do not, because
+    * [[graft.operators.Spread]] sizes by `defaultParallelism`. */
   private def startOneStore(df: DataFrame, writer: DataStreamWriter[Row]): StreamingQuery =
     synchronized {
       val conf = df.sparkSession.conf

@@ -89,9 +89,26 @@ object StreamBench {
   // ------------------------------------------------------- progress polling
 
   private def triggerMs(p: StreamingQueryProgress): Long = p.durationMs.get("triggerExecution")
-  /** When the batch ended: its trigger start plus its trigger time. */
-  private def endMs(p: StreamingQueryProgress): Long =
-    Instant.parse(p.timestamp).toEpochMilli + triggerMs(p)
+  /** A batch's (start ms, trigger ms): `timestamp` is when its trigger began. */
+  private def timing(p: StreamingQueryProgress): (Long, Long) =
+    (Instant.parse(p.timestamp).toEpochMilli, triggerMs(p))
+
+  /** The time the batches that read input, given as (start ms,
+    * trigger ms) in batch order, cover: from the first one's start to
+    * the last one's end. 0 when there are none. */
+  private[tools] def spanMs(active: Seq[(Long, Long)]): Long =
+    if (active.isEmpty) 0L else active.last._1 + active.last._2 - active.head._1
+
+  /** Input rows per second over [[spanMs]]. */
+  private[tools] def rps(rows: Long, active: Seq[(Long, Long)]): Double = {
+    val span = spanMs(active)
+    if (span > 0) rows * 1000.0 / span else 0.0
+  }
+
+  /** A query is quiet once more than 5 s have passed since its last
+    * batch that read input, (start ms, trigger ms), ended. */
+  private[tools] def quiet(lastActive: Option[(Long, Long)], nowMs: Long): Boolean =
+    lastActive.exists { case (start, trigger) => nowMs - (start + trigger) > 5000 }
 
   /** Executed micro-batches per query, keyed by batch id, polled from
     * each query's own `recentProgress`. That buffer keeps the last 100
@@ -129,13 +146,13 @@ object StreamBench {
     // (which never settles under registered timers).
     val genRows = gen.orders + gen.prices
     val drainDeadline = genEnd + math.max(40, windowSec) * 1000L
-    def quiet(q: String): Boolean = batches(q).filter(_.numInputRows > 0).lastOption
-      .exists(p => System.currentTimeMillis() - endMs(p) - triggerMs(p) > 5000)
+    def quietNow(q: String): Boolean =
+      quiet(batches(q).filter(_.numInputRows > 0).lastOption.map(timing), System.currentTimeMillis())
     var drained = false
     while (!drained && System.currentTimeMillis() < drainDeadline) {
       Thread.sleep(500)
       batches.poll()
-      drained = batches("j1").map(_.numInputRows).sum >= genRows && quiet("j1") && quiet("t1")
+      drained = batches("j1").map(_.numInputRows).sum >= genRows && quietNow("j1") && quietNow("t1")
     }
     qs.values.foreach(_.stop())
     batches.poll()
@@ -145,10 +162,7 @@ object StreamBench {
       val active = all.filter(_.numInputRows > 0)
       val trig = active.map(triggerMs)
       val input = all.map(_.numInputRows).sum
-      val span =
-        if (active.size < 2) 0.0
-        else (endMs(active.last) + triggerMs(active.last) - endMs(active.head)) / 1000.0
-      val rps = if (span > 0) input / span else 0.0
+      val rate = rps(input, active.map(timing))
       def stateSum(p: StreamingQueryProgress, f: StateOperatorProgress => Long): Long =
         p.stateOperators.map(f).sum
       val lastState = all.lastOption.map(stateSum(_, _.numRowsTotal)).getOrElse(0L)
@@ -157,7 +171,7 @@ object StreamBench {
         if (active.isEmpty) 0L else active.map(stateSum(_, _.commitTimeMs)).sum / active.size
       val mem = all.lastOption.map(stateSum(_, _.memoryUsedBytes)).getOrElse(0L)
       f"""{"rows":$input,"batches":${all.size},"active_batches":${active.size},""" +
-        f""""rps":$rps%.0f,"trigger_p50_ms":${pct(trig, 0.50)},"trigger_p95_ms":${pct(trig, 0.95)},""" +
+        f""""rps":$rate%.0f,"trigger_p50_ms":${pct(trig, 0.50)},"trigger_p95_ms":${pct(trig, 0.95)},""" +
         f""""trigger_max_ms":${trig.maxOption.getOrElse(0L)},"state_rows":$lastState,""" +
         f""""commit_task_sum_ms_mean":$commitMean,"state_mem_bytes":$mem}"""
     }

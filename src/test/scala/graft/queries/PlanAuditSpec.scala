@@ -88,6 +88,20 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("scan spreads: each spreading query keeps its round-robin exchange count") {
+    // Spread.narrow's exchanges per query at sf0.001, with one mm_*
+    // query per Multimodal payload function. pipe_pretrain spreads
+    // inside the prefix sum it runs while the query is built, so its
+    // returned plan carries none.
+    Seq("j_band" -> 1, "pipe_pretrain" -> 0, "ta_winnow" -> 1,
+      "dd_contaminated" -> 2, "dd_containment" -> 1,
+      "mm_decode_meta" -> 1, "mm_frames" -> 1, "mm_phash" -> 1,
+      "mm_audio_meta" -> 1).foreach { case (q, n) =>
+      assert("RoundRobinPartitioning".r.findAllIn(plan(q)).size == n,
+        s"$q wants $n round-robin exchanges")
+    }
+  }
+
   test("emb_pq: encode is one narrow pass — no shuffle, no join at all") {
     val p = plan("emb_pq")
     // the codebook is a driver-held literal inside the argmin

@@ -26,22 +26,6 @@ class ExchangeSpec extends SparkSpec {
     assert(a.map(_.mult).distinct.length > 90) // actually random-ish
   }
 
-  test("kafka transport builds the reference's consumer options " +
-    "(no broker in this container — integration untestable here)") {
-    val k = JsonTopics.KafkaTopic("broker:9092", "market-orders", "latest")
-    assert(JsonTopics.kafkaReadOptions(k) == Map(
-      "kafka.bootstrap.servers" -> "broker:9092",
-      "subscribe" -> "market-orders",
-      "startingOffsets" -> "latest",
-      "failOnDataLoss" -> "false"))
-    // the dir branch of the SAME transport API dispatches to the
-    // JSON-lines reader and stays a streaming plan
-    val dir = Files.createTempDirectory("graft_kafka_dir").toString
-    val df = JsonTopics.readStreamFrom(spark, JsonTopics.DirTopic(dir), "string",
-      new StructType().add("txnId", StringType))
-    assert(df.isStreaming && df.columns.toSeq == Seq("key", "value"))
-  }
-
   test("K3 console sink starts and drains a micro-batch") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -8,7 +8,8 @@ import graft.streaming.SparkSpec
 
 /** StreamBench's rung end to end at a tiny rate: one fresh market loop,
   * the generator thread, the progress polling and the drain rule, down
-  * to the JSON line a rung prints. */
+  * to the JSON line a rung prints; then the rps span and the quiet rule
+  * on hand-made batch timings. */
 class StreamBenchSpec extends SparkSpec {
 
   private def fields(n: JsonNode): Set[String] = n.fieldNames().asScala.toSet
@@ -30,5 +31,20 @@ class StreamBenchSpec extends SparkSpec {
     assert(gen.get("prices").asLong * 10 === gen.get("orders").asLong, line)
     assert(doc.get("j1_pricing").get("rows").asLong ===
       gen.get("orders").asLong + gen.get("prices").asLong, line)
+  }
+
+  test("rps spans the first active batch's start to the last one's end") {
+    // batches as (start ms, trigger ms)
+    val active = Seq((0L, 100L), (1000L, 200L))
+    assert(StreamBench.spanMs(active) === 1200L)
+    assert(StreamBench.rps(600, active) === 500.0)
+    assert(StreamBench.rps(600, Nil) === 0.0)
+  }
+
+  test("a query is quiet once 5 s have passed since its last active batch ended") {
+    val last = Some((1000L, 200L))
+    assert(StreamBench.quiet(last, nowMs = 6201))
+    assert(!StreamBench.quiet(last, nowMs = 6199))
+    assert(!StreamBench.quiet(None, nowMs = Long.MaxValue))
   }
 }
