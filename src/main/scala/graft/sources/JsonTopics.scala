@@ -59,6 +59,11 @@ object JsonTopics {
     * faster than four stores commit. Revisit the count if J1 ever
     * prices key-parallel.
     *
+    * One store also means one task and no exchange: `MarketDataflow`
+    * coalesces each stateful input to one partition, which already
+    * satisfies a one-store operator, so the planner adds no hash
+    * exchange and a micro-batch runs as one stage of one task.
+    *
     * The count is fixed when the checkpoint is first created: Spark
     * records `spark.sql.shuffle.partitions` in the offset log at the
     * first batch and every restart reads it back from there. A
@@ -74,11 +79,14 @@ object JsonTopics {
   /** Starts `writer` (built over `df`) with `spark.sql.shuffle.partitions`
     * at 1, then restores the caller's value. The query copies the
     * session conf while it starts, so it keeps one state store after
-    * the restore. Starts are serialized so that two concurrent ones
-    * cannot restore each other's value. Batch queries planned on the
-    * same session in other threads see the 1 as their shuffle width
-    * while a start is in flight; their scan spreads do not, because
-    * [[graft.operators.Spread]] sizes by `defaultParallelism`. */
+    * the restore. With one store, a stateful input coalesced to one
+    * partition needs no exchange, so the query's batches run as one
+    * task (see [[writeStream]]). Starts are serialized so that two
+    * concurrent ones cannot restore each other's value. Batch queries
+    * planned on the same session in other threads see the 1 as their
+    * shuffle width while a start is in flight; their scan spreads do
+    * not, because [[graft.operators.Spread]] sizes by
+    * `defaultParallelism`. */
   private def startOneStore(df: DataFrame, writer: DataStreamWriter[Row]): StreamingQuery =
     synchronized {
       val conf = df.sparkSession.conf

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.model._
@@ -24,13 +24,32 @@ import graft.model._
   */
 object MarketDataflow {
 
+  /** Coalesces a stateful operator's input to one partition. Every topic
+    * query starts through [[graft.sources.JsonTopics.writeStream]] with
+    * `spark.sql.shuffle.partitions` at 1, so it has one state store. A
+    * `Coalesce 1` reports `SinglePartition`, which satisfies that one
+    * store's distribution, so the planner inserts no hash exchange: a
+    * micro-batch runs as one stage of one task instead of one scan task
+    * per input file that shuffle-writes, plus the state task. A query
+    * started with more stores still gets its exchange, so results do not
+    * depend on how the query was started. */
+  private def onePartition[T](ds: Dataset[T]): Dataset[T] = ds.coalesce(1)
+
   // ------------------------------------------------------- J1 order pricing
 
   /** J1 state: latest price + per-trader time-ordered order buffer
     * (MarketDataflow.java:192-207; the PriorityQueue becomes a sorted
     * replay inside the micro-batch, SURVEY §7.3). A Vector, so that
     * buffering n orders before the first price appends in O(n), not
-    * O(n²). */
+    * O(n²).
+    *
+    * Streaming J1 stores it through a binary (Java serialization)
+    * encoder, not its product encoder. The product encoder's
+    * deserializer walks the Vector with a `MapObjects` lambda variable
+    * whose id is fresh each time a micro-batch's plan resolves the
+    * encoder, so its generated code never matched the codegen cache
+    * and Janino compiled it again in every batch (about 40 ms). The
+    * binary encoder's deserializer is the same code every batch. */
   final case class PricingState(lastPrice: Option[Double],
                                 buffered: Vector[(String, MarketOrder)])
 
@@ -66,14 +85,15 @@ object MarketDataflow {
     val l = orders.map { case (trader, o) => ("FOO", o.time, (trader, o)) }
     val r = prices.map(p => ("FOO", p.time, p.coins))
     CoProcess.coFlatMap[(String, MarketOrder), Double, PricingState, (String, TraderStateUpdater)](
-      CoProcess.tagged(l, r), PricingState.init, onOrder, onPrice)
+      onePartition(CoProcess.tagged(l, r)), PricingState.init, onOrder, onPrice)(
+      Encoders.javaSerialization[PricingState], implicitly, implicitly, implicitly)
   }
 
   // ---------------------------------------------------------- T1 + A3 ledger
 
   /** Ledger state: trader ledger + running accepted-investment total
     * (T1 MarketDataflow.java:284-310 fused with A3 :319-339 — one
-    * state cell, one shuffle on the trader key). */
+    * state cell per trader key). */
   final case class LedgerState(state: Option[TraderState], totalInvested: Double)
 
   /** Apply one updater: returns the enriched TxnEvent. Pure core
@@ -98,7 +118,7 @@ object MarketDataflow {
   def ledger(spark: SparkSession,
              updates: Dataset[(String, TraderStateUpdater)]): Dataset[(String, TxnEvent)] = {
     import spark.implicits._
-    updates.groupByKey(_._1)
+    onePartition(updates).groupByKey(_._1)
       .flatMapGroupsWithState[LedgerState, (String, TxnEvent)](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (trader: String, it: Iterator[(String, TraderStateUpdater)],
@@ -163,8 +183,7 @@ object MarketDataflow {
     @transient private var state: ValueState[RoiState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[RoiState]("roi",
-        Encoders.product[RoiState], TTLConfig.NONE)
+      state = getHandle.getValueState[RoiState]("roi", RoiProcessor.stateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(txnId: String, rows: Iterator[(String, TxnEvent)],
         tv: TimerValues): Iterator[(String, TraderStateUpdater)] = {
@@ -191,13 +210,20 @@ object MarketDataflow {
       }
   }
 
+  object RoiProcessor {
+    /** Built once per JVM: `init` runs in every task, and deriving a
+      * product encoder there is Scala reflection whose class lookups go
+      * through the session class loader. */
+    private val stateEncoder: Encoder[RoiState] = Encoders.product[RoiState]
+  }
+
   def roiReturns(spark: SparkSession,
                  acceptedInvests: Dataset[(String, TxnEvent)],
                  sampler: Double => Double): Dataset[(String, TraderStateUpdater)] = {
     import spark.implicits._
-    acceptedInvests
+    onePartition(acceptedInvests
       .filter(e => e._2.txnResult.status == TxnResultType.ACCEPTED &&
-        e._2.investedCoins > 0)
+        e._2.investedCoins > 0))
       .groupByKey(_._2.txnResult.txnId)
       .transformWithState(new RoiProcessor(sampler),
         TimeMode.ProcessingTime(), OutputMode.Append())

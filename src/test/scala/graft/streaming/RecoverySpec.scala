@@ -48,13 +48,6 @@ class RecoverySpec extends SparkSpec {
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-recovery-$tag").toString
 
-  /** Poll until `cond` or fail after `ms`. */
-  private def eventually(ms: Long, what: String)(cond: => Boolean): Unit = {
-    val deadline = System.currentTimeMillis() + ms
-    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
-    assert(cond, s"timed out after ${ms}ms waiting for: $what")
-  }
-
   test("ledger: keyed state + exactly-once file sink survive a checkpoint restart") {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = tmp("ledger-ckpt")

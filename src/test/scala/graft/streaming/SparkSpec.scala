@@ -14,4 +14,13 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def ts(ms: Long): java.sql.Timestamp = new java.sql.Timestamp(ms)
+
+  /** Polls `cond` every 200 ms for up to `ms`, then asserts it. For
+    * queries that `processAllAvailable` cannot wait on, such as those
+    * with processing-time timers. */
+  def eventually(ms: Long, what: String)(cond: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + ms
+    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(200)
+    assert(cond, s"timed out after ${ms}ms waiting for: $what")
+  }
 }
