@@ -475,7 +475,8 @@ object Dedup {
     * several bands is emitted once per band; downstream consumers
     * dedup as needed, or use [[minHashLshStreamDeduped]] (event-time
     * input), whose watermarked dedup stage closes the divergence with
-    * horizon-bounded state. */
+    * horizon-bounded state. Hand-rolled, not a keyed fold: arrivals pair
+    * in ARRIVAL order, against ONE membership set built per batch. */
   def minHashLshStream(docs: DataFrame, textCol: String, idCol: String,
                        bands: Int = 4, rowsPerBand: Int = 4,
                        maxBucket: Int = 2048): Dataset[(Long, Long)] = {
@@ -515,7 +516,7 @@ object Dedup {
     * carries the event time of the arrival that produced it; the dedup
     * stage's state is bounded by the horizon's pair-arrival volume —
     * the same eviction contract as [[exactStream]]. Output
-    * (doc_a, doc_b, ts). */
+    * (doc_a, doc_b, ts). Hand-rolled as [[minHashLshStream]] is. */
   def minHashLshStreamDeduped(docs: DataFrame, textCol: String, idCol: String,
                               tsCol: String, horizon: String = "10 minutes",
                               bands: Int = 4, rowsPerBand: Int = 4,

@@ -154,34 +154,25 @@ object EventAnalytics {
                    tsCol: String, stages: Seq[String]): DataFrame = {
     require(stages.nonEmpty && stages.distinct == stages,
       "funnelStream: stages must be non-empty and distinct")
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = df.sparkSession
     import spark.implicits._
     val stageIdx = stages.zipWithIndex.toMap
     val k = stages.size
-    df.select(col(userCol).cast("long").as("user"),
+    val rows = df.select(col(userCol).cast("long").as("user"),
         col(typeCol).as("etype"),
         unix_micros(col(tsCol).cast("timestamp")).as("us"))
       .as[EvFunRow]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[EvFunState, EvFunOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (user, rows, state) =>
-        var ts = state.getOption.map(_.ts)
-          .getOrElse(Vector.fill(k)(Long.MinValue))
-        val out = Vector.newBuilder[EvFunOut]
-        rows.toVector.sortBy(_.us).foreach { r =>
-          stageIdx.get(r.etype).foreach { i =>
-            val eligible = ts(i) == Long.MinValue &&
-              (i == 0 || (ts(i - 1) != Long.MinValue && r.us > ts(i - 1)))
-            if (eligible) {
-              ts = ts.updated(i, r.us)
-              out += EvFunOut(user, stages(i), r.us)
-            }
-          }
+    SecondarySort.keyedFoldStream(rows)(_.user, _.us,
+      () => EvFunState(Vector.fill(k)(Long.MinValue)),
+      (st: EvFunState, r: EvFunRow) => {
+        val ts = st.ts
+        stageIdx.get(r.etype) match {
+          case Some(i) if ts(i) == Long.MinValue &&
+              (i == 0 || (ts(i - 1) != Long.MinValue && r.us > ts(i - 1))) =>
+            (EvFunState(ts.updated(i, r.us)), Seq(EvFunOut(r.user, stages(i), r.us)))
+          case _ => (st, Seq.empty)
         }
-        state.update(EvFunState(ts))
-        out.result().iterator
-      }.toDF(userCol, "stage", "stage_us")
+      }).toDF(userCol, "stage", "stage_us")
   }
 
   /** Streaming twin of [[retention]] (VERDICT r9 #6): per-user O(1)
@@ -199,29 +190,21 @@ object EventAnalytics {
     * the batch window-MIN cohort); late cross-batch data is out of
     * contract, as in [[funnelStream]]. */
   def retentionStream(df: DataFrame, userCol: String, tsCol: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(userCol).cast("long").as("user"),
+    val rows = df.select(col(userCol).cast("long").as("user"),
         expr(s"unix_micros(CAST(${tsCol} AS TIMESTAMP)) div 86400000000").as("day"))
       .as[EvRetRow]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[EvRetState, EvRetOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (user, rows, state) =>
-        var st = state.getOption.getOrElse(EvRetState(Long.MinValue, Long.MinValue))
-        val out = Vector.newBuilder[EvRetOut]
-        rows.toVector.sortBy(_.day).foreach { r =>
-          if (st.cohort == Long.MinValue) {
-            st = EvRetState(r.day, r.day)
-            out += EvRetOut(user, r.day, 0L)
-          } else if (r.day > st.lastDay) {
-            st = st.copy(lastDay = r.day)
-            out += EvRetOut(user, st.cohort, r.day - st.cohort)
-          } // r.day == lastDay: same-day repeat, already emitted;
-            // r.day < lastDay: cross-batch late data, out of contract
-        }
-        state.update(st)
-        out.result().iterator
-      }.toDF(userCol, "cohort_day", "day_offset")
+    SecondarySort.keyedFoldStream(rows)(_.user, _.day,
+      () => EvRetState(Long.MinValue, Long.MinValue),
+      (st: EvRetState, r: EvRetRow) =>
+        if (st.cohort == Long.MinValue)
+          (EvRetState(r.day, r.day), Seq(EvRetOut(r.user, r.day, 0L)))
+        else if (r.day > st.lastDay)
+          (st.copy(lastDay = r.day), Seq(EvRetOut(r.user, st.cohort, r.day - st.cohort)))
+        // r.day == lastDay: same-day repeat, already emitted;
+        // r.day < lastDay: cross-batch late data, out of contract
+        else (st, Seq.empty)
+    ).toDF(userCol, "cohort_day", "day_offset")
   }
 }

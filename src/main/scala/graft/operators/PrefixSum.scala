@@ -130,21 +130,12 @@ object PrefixSum {
     * on their partitions and re-join by key downstream. The per-batch
     * sort buffer is bounded by the micro-batch, not the stream. */
   def runningSumStream(df: DataFrame, orderCol: String, valueCol: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(orderCol).cast("long").as("k"), col(valueCol).cast("long").as("v"))
-      .as[KV]
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[Long, KVRun](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, rows, state) =>
-          var acc = state.getOption.getOrElse(0L)
-          val out = rows.toVector.sortBy(_.k).map { kv =>
-            acc += kv.v
-            KVRun(kv.k, kv.v, acc)
-          }
-          state.update(acc)
-          out.iterator
-      }.toDF("k", "v", "running")
+    SecondarySort.keyedFoldStream(
+        df.select(col(orderCol).cast("long").as("k"), col(valueCol).cast("long").as("v"))
+          .as[KV])(_ => 0, _.k, () => 0L,
+        (acc: Long, kv: KV) => (acc + kv.v, Seq(KVRun(kv.k, kv.v, acc + kv.v))))
+      .toDF("k", "v", "running")
   }
 }

@@ -111,7 +111,8 @@ object Snapshot {
     * repeated deletes never re-emit); keys the log never touches
     * stay silent in their initial base state. Integral keys by
     * contract (the state key encoder); unknown ops raise in-plan as
-    * in the batch form. */
+    * in the batch form. Hand-rolled, not a keyed fold: it has an initial
+    * state, and a batch's emission depends on its START state. */
   def applyLogStream(base: DataFrame, log: DataFrame, keyCol: String,
                      versionCol: String, opCol: String,
                      contentCols: Seq[String]): DataFrame = {

@@ -231,29 +231,21 @@ object TimeSeries {
     * Late/out-of-order data is out of contract, as in [[saxStream]]. */
   def rollingZStream(df: DataFrame, keyCol: String, orderCol: String,
                      valueCol: String, thresh: Double = 3.0): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("long").as("key"),
+    val rows = df.select(col(keyCol).cast("long").as("key"),
         col(orderCol).cast("long").as("ord"),
         round(col(valueCol) * 1000000).cast("long").as("vc"))
       .as[TsRow]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TsZState, TsZOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        var st = state.getOption.getOrElse(TsZState(Vector.empty))
-        val out = rows.toVector.sortBy(_.ord).flatMap { r =>
-          val emit =
-            if (st.last8.length == 8) {
-              val (z, anom) = zScoreTap(st.last8, r.vc, thresh)
-              Some(TsZOut(key, r.ord, z, anom))
-            } else None
-          st = TsZState((st.last8 :+ r.vc).takeRight(8))
-          emit
-        }
-        state.update(st)
-        out.iterator
-      }.toDF(keyCol, orderCol, "z", "is_anom")
+    SecondarySort.keyedFoldStream(rows)(_.key, _.ord, () => TsZState(Vector.empty),
+      (st: TsZState, r: TsRow) => {
+        val emit =
+          if (st.last8.length == 8) {
+            val (z, anom) = zScoreTap(st.last8, r.vc, thresh)
+            Seq(TsZOut(r.key, r.ord, z, anom))
+          } else Seq.empty
+        (TsZState((st.last8 :+ r.vc).takeRight(8)), emit)
+      }).toDF(keyCol, orderCol, "z", "is_anom")
   }
 
   /** Per-key time-grid resample with linear interpolation: for every
@@ -420,7 +412,9 @@ object TimeSeries {
     * pre-agg twin); a tie split across micro-batches — like
     * out-of-order data — is out of contract ([[saxStream]] posture).
     * Timestamps must be non-negative epoch micros (the alignment
-    * uses plain integer division). */
+    * uses plain integer division). Hand-rolled, not a keyed fold:
+    * equal-instant rows collapse BEFORE the fold, and its absent start
+    * state has no `TsEvState` sentinel (an `Option` is a new schema). */
   def resampleStream(df: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String, idCol: String,
                      stepSec: Long = 3600L): DataFrame = {
@@ -483,27 +477,19 @@ object TimeSeries {
     * would be the extension). */
   def saxStream(df: DataFrame, keyCol: String, orderCol: String,
                 valueCol: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("long").as("key"),
+    val rows = df.select(col(keyCol).cast("long").as("key"),
         col(orderCol).cast("long").as("ord"),
         round(col(valueCol) * 1000000).cast("long").as("vc"))
       .as[TsRow]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TsState, TsWord](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        var st = state.getOption.getOrElse(TsState(Vector.empty, 0L))
-        val out = rows.toVector.sortBy(_.ord).flatMap { r =>
-          val n = st.n + 1
-          val window = st.last7 :+ r.vc
-          st = TsState(window.takeRight(7), n)
-          if (window.length == 8) Some(TsWord(key, n, saxWord(window)))
-          else None
-        }
-        state.update(st)
-        out.iterator
-      }.toDF(keyCol, "rn", "sax")
+    SecondarySort.keyedFoldStream(rows)(_.key, _.ord, () => TsState(Vector.empty, 0L),
+      (st: TsState, r: TsRow) => {
+        val n = st.n + 1
+        val window = st.last7 :+ r.vc
+        (TsState(window.takeRight(7), n),
+          if (window.length == 8) Seq(TsWord(r.key, n, saxWord(window))) else Seq.empty)
+      }).toDF(keyCol, "rn", "sax")
   }
 
   /** Motif per key: the most frequent SAX word (ties break to the
@@ -791,25 +777,18 @@ object TimeSeries {
   def holtStream(df: DataFrame, keyCol: String, orderCol: String,
                  valueCol: String,
                  alpha: Double = 0.2, beta: Double = 0.1): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(keyCol).cast("long").as("key"),
+    val rows = df.select(col(keyCol).cast("long").as("key"),
         col(orderCol).cast("long").as("ord"),
         col(valueCol).cast("double").as("x"))
       .as[TsXRow]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TsHoltState, TsHoltOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        var st = state.getOption.getOrElse(TsHoltState(0.0, 0.0, seeded = false))
-        val out = rows.toVector.sortBy(_.ord).map { r =>
-          val (nl, nb) = holtStep(
-            if (st.seeded) Some((st.l, st.b)) else None, r.x, alpha, beta)
-          st = TsHoltState(nl, nb, seeded = true)
-          TsHoltOut(key, r.ord, nl, nb)
-        }
-        state.update(st)
-        out.iterator
-      }.toDF(keyCol, orderCol, "level", "trend")
+    SecondarySort.keyedFoldStream(rows)(_.key, _.ord,
+      () => TsHoltState(0.0, 0.0, seeded = false),
+      (st: TsHoltState, r: TsXRow) => {
+        val (nl, nb) = holtStep(
+          if (st.seeded) Some((st.l, st.b)) else None, r.x, alpha, beta)
+        (TsHoltState(nl, nb, seeded = true), Seq(TsHoltOut(r.key, r.ord, nl, nb)))
+      }).toDF(keyCol, orderCol, "level", "trend")
   }
 }

@@ -2,15 +2,16 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder}
+
+import graft.operators.SecondarySort
 
 /** Two-input keyed stateful processing — Spark's Structured Streaming
   * has no CoProcessFunction (SURVEY §4.1), so the reference's
   * `connect + RichCoFlatMapFunction` operators (J1 MarketDataflow.java
   * :99-112,190-268; J2 SharePriceDataflow.java:125-132,227-266; J3
   * MonkeyStockTrader.java:141-156,208-236) are re-expressed as a
-  * tagged union into ONE `flatMapGroupsWithState`.
+  * tagged union folded by ONE keyed fold ([[SecondarySort]]).
   *
   * Micro-batch caveat (SURVEY §7.3): rows of both sides arrive
   * unordered within a batch, so each invocation sorts its group's rows
@@ -35,25 +36,31 @@ object CoProcess {
     l.union(r)
   }
 
+  /** Replay order: event time, the right/"state" side first at equal
+    * timestamps. */
+  private def order[L, R]: Tagged[L, R] => (Long, Boolean) =
+    t => (t.time.getTime, t.left.isDefined)
+
+  /** The per-event transition over the tagged union: the one step that
+    * the streaming, replay and batch forms all fold. */
+  private def step[L, R, S, O](onLeft: (S, Timestamp, L) => (S, Seq[O]),
+                               onRight: (S, Timestamp, R) => (S, Seq[O])): (S, Tagged[L, R]) => (S, Seq[O]) =
+    (s, row) => row match {
+      case Tagged(_, t, Some(l), _) => onLeft(s, t, l)
+      case Tagged(_, t, _, Some(r)) => onRight(s, t, r)
+      case _                        => (s, Seq.empty)
+    }
+
   /** The coFlatMap core: replay a time-sorted group through per-event
-    * transitions. Pure — shared by the streaming operator and its
-    * batch twin, and unit-testable standalone. */
+    * transitions. Pure — the per-group fold of the streaming operator,
+    * and unit-testable standalone. */
   def replay[L, R, S, O](rows: Seq[Tagged[L, R]], init: S,
                          onLeft: (S, Timestamp, L) => (S, Seq[O]),
-                         onRight: (S, Timestamp, R) => (S, Seq[O])): (S, Seq[O]) = {
-    val sorted = rows.sortBy(t => (t.time.getTime, t.left.isDefined))
-    sorted.foldLeft((init, Vector.empty[O])) { case ((s, acc), row) =>
-      val (s2, out) = row match {
-        case Tagged(_, t, Some(l), _) => onLeft(s, t, l)
-        case Tagged(_, t, _, Some(r)) => onRight(s, t, r)
-        case _                        => (s, Seq.empty)
-      }
-      (s2, acc ++ out)
-    }
-  }
+                         onRight: (S, Timestamp, R) => (S, Seq[O])): (S, Seq[O]) =
+    SecondarySort.foldSorted(rows, order[L, R], init, step(onLeft, onRight))
 
   /** Streaming coFlatMap over a tagged union: keyed state carried
-    * across micro-batches via flatMapGroupsWithState.
+    * across micro-batches by [[SecondarySort.keyedFoldStream]].
     *
     * State-API choice (deliberate): T2's maturation timers use Spark
     * 4's `transformWithState` (MarketDataflow.RoiProcessor) because
@@ -65,15 +72,9 @@ object CoProcess {
   def coFlatMap[L, R, S, O](tagged: Dataset[Tagged[L, R]], init: S,
                             onLeft: (S, Timestamp, L) => (S, Seq[O]),
                             onRight: (S, Timestamp, R) => (S, Seq[O]))(
-      implicit se: Encoder[S], oe: Encoder[O],
-      ke: Encoder[String], toe: Encoder[(String, O)]): Dataset[O] =
-    tagged.groupByKey(_.key)
-      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[Tagged[L, R]], state: GroupState[S]) =>
-          val (s2, out) = replay(it.toSeq, state.getOption.getOrElse(init), onLeft, onRight)
-          state.update(s2)
-          out.iterator
-      }
+      implicit se: Encoder[S], oe: Encoder[O], ke: Encoder[String]): Dataset[O] =
+    SecondarySort.keyedFoldStream(tagged)(_.key, order[L, R], () => init,
+      step(onLeft, onRight))
 
   /** Batch twin: the same per-event transitions, but as a secondary
     * sort — repartition on the key, sort within partitions by
@@ -89,11 +90,6 @@ object CoProcess {
     val sorted = tagged
       .repartition(col("key"))
       .sortWithinPartitions(col("key"), col("time"), col("left").isNotNull)
-    graft.operators.SecondarySort.keyedFold(sorted)(_.key, () => init,
-      (s: S, row: Tagged[L, R]) => row match {
-        case Tagged(_, t, Some(l), _) => onLeft(s, t, l)
-        case Tagged(_, t, _, Some(r)) => onRight(s, t, r)
-        case _                        => (s, Seq.empty)
-      })
+    SecondarySort.keyedFold(sorted)(_.key, () => init, step(onLeft, onRight))
   }
 }

@@ -65,7 +65,9 @@ object Katas {
   }
 
   /** K04 — per-key EMA emitted per event (Chapter04:86-178, α=0.1,
-    * seeded with the first observation; exact double fold order). */
+    * seeded with the first observation; exact double fold order). The
+    * streaming state is a bare `Double`, absent until the first price: a
+    * keyed fold's `Option[Double]` would be a new state schema. */
   def kata04(spark: SparkSession,
              prices: Dataset[(String, SharePriceInfo)]): Dataset[(String, Double)] = {
     import spark.implicits._

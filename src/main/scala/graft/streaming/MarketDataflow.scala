@@ -3,9 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.model._
+import graft.operators.SecondarySort
 
 /** The transaction engine (reference MarketDataflow.java:57-183,
   * SURVEY §3.3):
@@ -49,7 +50,11 @@ object MarketDataflow {
     * whose id is fresh each time a micro-batch's plan resolves the
     * encoder, so its generated code never matched the codegen cache
     * and Janino compiled it again in every batch (about 40 ms). The
-    * binary encoder's deserializer is the same code every batch. */
+    * binary encoder's deserializer is the same code every batch.
+    *
+    * Buffer bound: `buffered` holds only orders from before the FIRST
+    * price, which drains it; after that [[onOrder]] never buffers, so
+    * the buffer stays empty (CoProcessSpec pins it). */
   final case class PricingState(lastPrice: Option[Double],
                                 buffered: Vector[(String, MarketOrder)])
 
@@ -86,7 +91,7 @@ object MarketDataflow {
     val r = prices.map(p => ("FOO", p.time, p.coins))
     CoProcess.coFlatMap[(String, MarketOrder), Double, PricingState, (String, TraderStateUpdater)](
       onePartition(CoProcess.tagged(l, r)), PricingState.init, onOrder, onPrice)(
-      Encoders.javaSerialization[PricingState], implicitly, implicitly, implicitly)
+      Encoders.javaSerialization[PricingState], implicitly, implicitly)
   }
 
   // ---------------------------------------------------------- T1 + A3 ledger
@@ -107,6 +112,14 @@ object MarketDataflow {
     (LedgerState(Some(ns), newTotal), enriched)
   }
 
+  /** [[ledgerStep]] over a keyed updater: the one step both ledger
+    * forms fold. */
+  private def ledgerRow(s: LedgerState,
+                        row: (String, TraderStateUpdater)): (LedgerState, Seq[(String, TxnEvent)]) = {
+    val (s2, ev) = ledgerStep(s, row._2)
+    (s2, Seq(row._1 -> ev))
+  }
+
   /** Streaming T1+A3 keyed by trader key (team_name).
     *
     * Order contract: a trader's updaters apply in micro-batch order
@@ -118,21 +131,9 @@ object MarketDataflow {
   def ledger(spark: SparkSession,
              updates: Dataset[(String, TraderStateUpdater)]): Dataset[(String, TxnEvent)] = {
     import spark.implicits._
-    onePartition(updates).groupByKey(_._1)
-      .flatMapGroupsWithState[LedgerState, (String, TxnEvent)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (trader: String, it: Iterator[(String, TraderStateUpdater)],
-         gs: GroupState[LedgerState]) =>
-          val sorted = it.toVector.sortBy { case (_, u) => (u.time.getTime, u.txnId) }
-          val init = gs.getOption.getOrElse(LedgerState(None, 0.0))
-          val (fin, out) = sorted.foldLeft((init, Vector.empty[(String, TxnEvent)])) {
-            case ((s, acc), (_, u)) =>
-              val (s2, ev) = ledgerStep(s, u)
-              (s2, acc :+ (trader -> ev))
-          }
-          gs.update(fin)
-          out.iterator
-      }
+    SecondarySort.keyedFoldStream(onePartition(updates))(_._1,
+      (row: (String, TraderStateUpdater)) => (row._2.time.getTime, row._2.txnId),
+      () => LedgerState(None, 0.0), ledgerRow)
   }
 
   /** Batch twin of the ledger fold — secondary sort on
@@ -145,11 +146,7 @@ object MarketDataflow {
     val sorted = updates.toDF("_1", "_2").as[(String, TraderStateUpdater)]
       .repartition(col("_1"))
       .sortWithinPartitions(col("_1"), col("_2.time"), col("_2.txnId"))
-    graft.operators.SecondarySort.keyedFold(sorted)(_._1, () => LedgerState(None, 0.0),
-      (s: LedgerState, row: (String, TraderStateUpdater)) => {
-        val (s2, ev) = ledgerStep(s, row._2)
-        (s2, Seq(row._1 -> ev))
-      })
+    SecondarySort.keyedFold(sorted)(_._1, () => LedgerState(None, 0.0), ledgerRow)
   }
 
   // ------------------------------------------------------------ T2 ROI loop
@@ -175,7 +172,8 @@ object MarketDataflow {
     * transformWithState requires the RocksDB state store
     * (`spark.sql.streaming.stateStore.providerClass =
     * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`)
-    * — its timer/column-family contract is RocksDB-only. */
+    * — its timer/column-family contract is RocksDB-only. Its output
+    * comes from timers, so it is no [[SecondarySort.keyedFoldStream]]. */
   final case class RoiState(trader: String, txnId: String, returned: Double)
 
   final class RoiProcessor(sampler: Double => Double)

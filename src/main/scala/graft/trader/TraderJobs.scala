@@ -3,9 +3,9 @@ package graft.trader
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model._
+import graft.operators.SecondarySort
 import graft.streaming.{CoProcess, Tagged}
 
 /** The trading-bot jobs (reference monkey-flink-trader; SURVEY notes
@@ -27,33 +27,26 @@ object TraderJobs {
     (counter + 1, trader -> MarketOrder(p.time, txnId, orderType, 1))
   }
 
+  /** [[followStep]] over a keyed price: the one step both
+    * followForecast forms fold. */
+  private def followRow(counter: Int,
+                        row: (String, SharePriceInfo)): (Int, Seq[(String, MarketOrder)]) = {
+    val (c2, order) = followStep(counter, row._1, row._2)
+    (c2, Seq(order))
+  }
+
   def followForecast(spark: SparkSession,
                      prices: Dataset[(String, SharePriceInfo)]): Dataset[(String, MarketOrder)] = {
     import spark.implicits._
     if (prices.isStreaming)
-      prices.groupByKey(_._1)
-        .flatMapGroupsWithState[Int, (String, MarketOrder)](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (trader: String, it: Iterator[(String, SharePriceInfo)], gs: GroupState[Int]) =>
-            var c = gs.getOption.getOrElse(0)
-            val out = it.toVector.sortBy(_._2.time.getTime).map { case (_, p) =>
-              val (c2, order) = followStep(c, trader, p)
-              c = c2; order
-            }
-            gs.update(c)
-            out.iterator
-        }
+      SecondarySort.keyedFoldStream(prices)(_._1, _._2.time.getTime, () => 0, followRow)
     else {
       // batch twin as a secondary sort — no per-key heap buffer
       import org.apache.spark.sql.functions.col
       val sorted = prices.toDF("_1", "_2").as[(String, SharePriceInfo)]
         .repartition(col("_1"))
         .sortWithinPartitions(col("_1"), col("_2.time"))
-      graft.operators.SecondarySort.keyedFold(sorted)(_._1, () => 0,
-        (c: Int, row: (String, SharePriceInfo)) => {
-          val (c2, order) = followStep(c, row._1, row._2)
-          (c2, Seq(order))
-        })
+      SecondarySort.keyedFold(sorted)(_._1, () => 0, followRow)
     }
   }
 

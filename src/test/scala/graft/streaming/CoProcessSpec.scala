@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.model._
 
@@ -83,6 +84,34 @@ class CoProcessSpec extends SparkSpec {
       MarketDataflow.onOrder, MarketDataflow.onPrice)
     assert(out.map(_._2.coinsDiff) == Seq(-3.0))
     assert(st.lastPrice.contains(3.0) && st.buffered.isEmpty)
+  }
+
+  test("J1 buffer bound: before the first price the buffer holds every order, " +
+    "after it the buffer is empty whatever follows") {
+    type Row = Tagged[(String, MarketOrder), Double]
+    val genRow: Gen[Row] = for {
+      t <- Gen.choose(0L, 30L)
+      isPrice <- Gen.frequency(1 -> true, 4 -> false)
+      i <- Gen.choose(0, 999)
+    } yield
+      if (isPrice) Tagged("FOO", ts(t0 + t), None, Some(1.0 + i))
+      else Tagged("FOO", ts(t0 + t), Some((s"T${i % 7}", MarketOrder(ts(t0 + t), s"o$i", "BUY", 1))), None)
+    // micro-batches: each is one replay from the state the last one left
+    val genBatches = Gen.choose(1, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(0, 12).flatMap(m => Gen.listOfN(m, genRow))))
+    val prop = Prop.forAll(genBatches) { batches =>
+      var st = MarketDataflow.PricingState.init
+      var priced = false
+      var orders = 0
+      batches.forall { b =>
+        st = CoProcess.replay(b, st, MarketDataflow.onOrder, MarketDataflow.onPrice)._1
+        priced ||= b.exists(_.right.isDefined)
+        orders += b.count(_.left.isDefined)
+        if (priced) st.buffered.isEmpty else st.buffered.size == orders
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("price dataflow: hype + mults compose price with EMA forecast") {
