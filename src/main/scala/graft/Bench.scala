@@ -22,10 +22,23 @@ import org.apache.spark.sql.SparkSession
   * same for the N-wide probe that catches PARTIAL multi-core steal
   * (r15). The JSON line is also the LAST stdout line of the sbt run
   * (build.sbt drops the [success] epilogue) so a tail parser works.
+  *
+  * Hermetic store root: with neither `graft.index.dir` nor
+  * `GRAFT_INDEX_DIR` set, the run points `graft.index.dir` at a fresh
+  * directory and deletes it at exit, so the written-artifact queries
+  * (dd_lsh_probe, pipe_incremental) write their store in every run
+  * instead of finding one an earlier process left under java tmpdir.
+  * The sidecar (not the stdout line) records the root as "index_dir".
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if (!sys.props.contains("graft.index.dir") && !sys.env.contains("GRAFT_INDEX_DIR")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-index-bench-").toFile
+      sys.addShutdownHook(org.apache.spark.network.util.JavaUtils.deleteRecursively(dir))
+      sys.props("graft.index.dir") = dir.getPath
+    }
+    val indexDir = graft.tools.ArtifactStore.root
     val spark = GraftSession.builderFromEnv("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -300,7 +313,8 @@ object Bench {
         System.err.println(s"[bench] $sidecar0 exists - refusing to overwrite, writing $alt")
         alt
       }
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(sidecar), line + "\n")
+    val sidecarLine = line.stripSuffix("}") + s""","index_dir":"$indexDir"}"""
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(sidecar), sidecarLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: $e") }
     println(line)
     System.err.println(s"[bench] artifact: $sidecar")

@@ -42,3 +42,24 @@ object AccumulateNote {
   def accumulateNote(c: Column, acc: LongAccumulator): Column =
     GraftSqlBridge.toColumn(AccumulateNote(GraftSqlBridge.toExpression(c), acc))
 }
+
+/** One named [[LongAccumulator]] per live SparkContext — the counter an
+  * [[AccumulateNote]] (or a driver-side `add`) bumps, read back as a
+  * session-scoped observability signal. Stopped contexts are evicted
+  * on each registration, so a context-cycling JVM (test harness,
+  * notebook server) doesn't grow the map without bound. */
+final class ContextCounter(name: String) {
+  private val accs = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.SparkContext, LongAccumulator]()
+
+  /** This session's accumulator, registered on first use. */
+  def apply(spark: org.apache.spark.sql.SparkSession): LongAccumulator = {
+    accs.keySet.removeIf(_.isStopped)
+    accs.computeIfAbsent(spark.sparkContext, sc => sc.longAccumulator(name))
+  }
+
+  /** The count on this session's context so far — 0, without
+    * registering anything, when nothing was ever counted there. */
+  def value(spark: org.apache.spark.sql.SparkSession): Long =
+    Option(accs.get(spark.sparkContext)).fold(0L)(_.value.longValue)
+}

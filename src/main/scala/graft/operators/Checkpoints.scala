@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
 
 /** THE checkpoint-release helper (one definition, four former copies):
   * free a superseded localCheckpoint's storage blocks now instead of
@@ -15,11 +15,52 @@ import org.apache.spark.sql.DataFrame
   * with that context, and a failed unpersist must never fail the
   * caller. */
 object Checkpoints {
-  def unpersist(df: DataFrame): Unit =
+  def unpersist(df: Dataset[_]): Unit =
     try df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     } catch { case _: Throwable => () }
+}
+
+/** THE single-slot session memo (one definition, eleven former
+  * hand-rolled slots in [[graft.queries.ExtensionCatalog]]): holds at
+  * most one (key, value) pair — train once, serve many. Keys carry the
+  * session identity, source dir and data fingerprint, so a new session
+  * or data changing under the same path misses and rebuilds.
+  *
+  * On replacement a `DataFrame` value that is not the incoming
+  * instance goes through [[Checkpoints.unpersist]] (a no-op unless its
+  * plan is a checkpoint's LogicalRDD); any other value (driver-held
+  * centroids, codebooks) is simply dropped. The replaced frame becomes
+  * unusable, which is the point: readers always fetch the current
+  * slot.
+  *
+  * SERIAL-EXECUTION ASSUMPTION (ADVICE r5): immediate release is safe
+  * only because catalog queries run one at a time from one driver
+  * thread (the Verify/Bench/driver harness contract). A concurrent
+  * holder of the REPLACED frame would lose its blocks with no
+  * recompute path (truncated lineage). A multi-tenant driver would
+  * defer the release to the replacing query's completion instead. */
+final class SessionMemo[V <: AnyRef] {
+  private val slot = new java.util.concurrent.atomic.AtomicReference[(String, V)]()
+
+  /** The held value on a key hit; otherwise builds, stores and returns
+    * it. */
+  def apply(key: String)(build: => V): V = slot.get() match {
+    case (k, v) if k == key => v
+    case _ => put(key, build)
+  }
+
+  /** Stores `v` under `key` unconditionally (owners that always
+    * recompute) and returns it. */
+  def put(key: String, v: V): V = {
+    val prev = slot.getAndSet((key, v))
+    if (prev != null) prev._2 match {
+      case df: Dataset[_] if !(df eq v) => Checkpoints.unpersist(df)
+      case _ => ()
+    }
+    v
+  }
 }
 
 /** The memory half of every adaptive driver-finish gate (review r11):

@@ -626,7 +626,7 @@ object Dedup {
     // projection never leaves whole-stage codegen; task retries can
     // over-count — it is a signal, not a metric for correctness
     // decisions.
-    val acc = oversizedAcc(banded.sparkSession)
+    val acc = oversizedCounter(banded.sparkSession)
     val note = (c: org.apache.spark.sql.Column) =>
       graft.functions.AccumulateNote.accumulateNote(c, acc)
     banded
@@ -643,24 +643,15 @@ object Dedup {
       .select(col("band"), col("members"))
   }
 
-  private val oversizedAccs =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext,
-      org.apache.spark.util.LongAccumulator]()
-
-  private def oversizedAcc(spark: org.apache.spark.sql.SparkSession) = {
-    // evict stopped contexts so a context-cycling JVM (test harness,
-    // notebook server) doesn't grow the map without bound
-    oversizedAccs.keySet.removeIf(_.isStopped)
-    oversizedAccs.computeIfAbsent(spark.sparkContext,
-      sc => sc.longAccumulator("graft.dedup.rowsInOversizedBuckets"))
-  }
+  private val oversizedCounter =
+    new graft.functions.ContextCounter("graft.dedup.rowsInOversizedBuckets")
 
   /** Rows seen in salted buckets OVER the cap across every salted
     * kernel run on this session's SparkContext since startup — the
     * observable counterpart of the documented cross-shard-pair
     * recall degradation. 0 means every bucket was exact. */
   def oversizedBucketRows(spark: org.apache.spark.sql.SparkSession): Long =
-    oversizedAcc(spark).value
+    oversizedCounter.value(spark)
 
   /** HALF_UP at 6 decimals, parity-exact with Spark round() and the
     * DuckDB oracle. The BigDecimal path (Double.toString + parse — a

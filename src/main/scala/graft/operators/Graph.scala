@@ -107,7 +107,7 @@ object Graph {
       .head()
     val (hubs, dropped) = (row.getLong(0), row.getLong(1))
     if (dropped > 0) {
-      droppedWedgeAcc(deg.sparkSession).add(dropped)
+      droppedWedgeCounter(deg.sparkSession).add(dropped)
       System.err.println(s"[graft.graph] $kernel: hub cap maxDegree=" +
         s"$maxDegree trimmed $hubs hub centers, dropping $dropped wedges " +
         "(recall degradation - see Graph.droppedWedges)")
@@ -152,7 +152,7 @@ object Graph {
   private[operators] def noteSkew(spark: org.apache.spark.sql.SparkSession,
                                   kernel: String, wedges: Long,
                                   symRows: Long, maxDeg: Long): Unit = {
-    skewWarnAcc(spark).add(1)
+    skewWarnCounter(spark).add(1)
     System.err.println(s"[graft.graph] $kernel: degree-skewed substrate - " +
       s"$wedges wedges from $symRows symmetric edge rows (max degree " +
       s"$maxDeg); the exact uncapped kernel is quadratic at hubs. " +
@@ -170,38 +170,24 @@ object Graph {
   def wedgeSkewed(wedges: Long, symRows: Long): Boolean =
     wedges > 100000000L && wedges > 32L * symRows
 
-  private val skewWarnAccs =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext,
-      org.apache.spark.util.LongAccumulator]()
-
-  private def skewWarnAcc(spark: org.apache.spark.sql.SparkSession) = {
-    skewWarnAccs.keySet.removeIf(_.isStopped)
-    skewWarnAccs.computeIfAbsent(spark.sparkContext,
-      sc => sc.longAccumulator("graft.graph.skewWarnings"))
-  }
+  private val skewWarnCounter =
+    new graft.functions.ContextCounter("graft.graph.skewWarnings")
 
   /** Number of uncapped link-prediction runs on this session's
     * SparkContext whose substrate tripped the degree-skew precheck —
     * the observable half of the exact-by-default decision. */
   def skewWarnings(spark: org.apache.spark.sql.SparkSession): Long =
-    Option(skewWarnAccs.get(spark.sparkContext)).map(_.value.longValue).getOrElse(0L)
+    skewWarnCounter.value(spark)
 
-  private val droppedWedgeAccs =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext,
-      org.apache.spark.util.LongAccumulator]()
-
-  private def droppedWedgeAcc(spark: org.apache.spark.sql.SparkSession) = {
-    droppedWedgeAccs.keySet.removeIf(_.isStopped)
-    droppedWedgeAccs.computeIfAbsent(spark.sparkContext,
-      sc => sc.longAccumulator("graft.graph.droppedWedges"))
-  }
+  private val droppedWedgeCounter =
+    new graft.functions.ContextCounter("graft.graph.droppedWedges")
 
   /** Wedges dropped by the `maxDegree` hub cap across every capped
     * link-prediction run on this session's SparkContext — the
     * observable counterpart of the documented recall degradation.
     * 0 means every capped run was exact. */
   def droppedWedges(spark: org.apache.spark.sql.SparkSession): Long =
-    Option(droppedWedgeAccs.get(spark.sparkContext)).map(_.value.longValue).getOrElse(0L)
+    droppedWedgeCounter.value(spark)
 
   def pageRankMicro(edges: DataFrame, srcCol: String, dstCol: String,
                     iterations: Int = 5, dampingPct: Int = 85,

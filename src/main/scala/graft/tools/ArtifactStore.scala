@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   * Adding the next learned artifact (quality classifier, importance
   * weights) is: pick a prefix + marker, write tables, `publish`, read
-  * via `readTable`.
+  * via `readTable`, and add its row to [[ArtifactBuild.kinds]].
   */
 object ArtifactStore {
 
@@ -37,7 +37,7 @@ object ArtifactStore {
     .orElse(sys.env.get("GRAFT_INDEX_DIR"))
     .getOrElse(sys.props("java.io.tmpdir") + "/graft-index")
 
-  private[tools] def md5hex(s: String): String =
+  private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 

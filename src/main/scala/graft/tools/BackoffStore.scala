@@ -26,9 +26,6 @@ import graft.operators.TextAnalysis
   * contract is unchanged (BackoffPersistSpec pins the round trip). */
 object BackoffStore {
 
-  /** Same warehouse root as the ANN/BPE tables. */
-  def root: String = ArtifactStore.root
-
   /** One directory per (source dir, data fingerprint) — data changing
     * under the same path gets a NEW model, never stale counts. */
   def path(dir: String, fingerprint: String): String =
@@ -63,37 +60,5 @@ object BackoffStore {
       tbl("lm_trigrams", "w1" -> StringType, "w2" -> StringType,
         "w3" -> StringType, "c3" -> LongType),
       tbl("lm_total", "n_total" -> LongType))
-  }
-}
-
-/** LM-build entry point — the [[IndexBuild]]/[[BpeBuild]] twin for
-  * the backoff model: train once on the catalog's even-doc_id split,
-  * write the fingerprint-keyed tables, and every later session's
-  * ta_backoff scores against them instead of re-aggregating.
-  *
-  * usage: runMain graft.tools.BackoffBuild <sfDir> [outDir]
-  */
-object BackoffBuild {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse {
-      System.err.println("usage: graft.tools.BackoffBuild <sfDir> [outDir]")
-      sys.exit(2)
-    }
-    val spark = graft.GraftSession.builderFromEnv("8").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fp = IndexStore.dataFingerprint(sfDir, "documents")
-    val p = args.lift(1).getOrElse(BackoffStore.path(sfDir, fp))
-    if (BackoffStore.ready(p)) {
-      println(s"backoff model already ready: $p")
-    } else {
-      import org.apache.spark.sql.functions.col
-      // the catalog's held-out contract: the model half is the
-      // even-doc_id split (a production build would pass a reference
-      // corpus here instead)
-      BackoffStore.write(spark,
-        graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 0), p)
-      println(s"backoff model written: $p")
-    }
-    spark.stop()
   }
 }

@@ -21,9 +21,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (BpePersistSpec pins the round trip). */
 object BpeStore {
 
-  /** Same warehouse root as the ANN index tables. */
-  def root: String = ArtifactStore.root
-
   /** One directory per (source dir, data fingerprint) — data changing
     * under the same path gets a NEW table, never stale merges. */
   def path(dir: String, fingerprint: String): String =
@@ -50,32 +47,5 @@ object BpeStore {
     ArtifactStore.readTable(spark, p, "bpe_merges",
       "rank" -> LongType, "lhs" -> StringType, "rhs" -> StringType,
       "pair_count" -> LongType)
-  }
-}
-
-/** Tokenizer-build entry point — the [[IndexBuild]] twin for the BPE
-  * merge table: train once, write the fingerprint-keyed table, and
-  * every later session's ta_bpe / segment / token-count queries read
-  * it instead of re-running the induction.
-  *
-  * usage: runMain graft.tools.BpeBuild <sfDir> [outDir]
-  */
-object BpeBuild {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse {
-      System.err.println("usage: graft.tools.BpeBuild <sfDir> [outDir]")
-      sys.exit(2)
-    }
-    val spark = graft.GraftSession.builderFromEnv("8").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fp = IndexStore.dataFingerprint(sfDir, "documents")
-    val p = args.lift(1).getOrElse(BpeStore.path(sfDir, fp))
-    if (BpeStore.ready(p)) {
-      println(s"merge table already ready: $p")
-    } else {
-      BpeStore.write(spark, graft.Tables.documents(spark, sfDir), p)
-      println(s"merge table written: $p")
-    }
-    spark.stop()
   }
 }

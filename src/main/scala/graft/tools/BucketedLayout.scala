@@ -11,7 +11,7 @@ import graft.Tables
   * ZERO Exchange on either side — at warehouse scale this converts the
   * recurring dominant shuffle of every order-grain query into a
   * one-time layout cost, amortized across all downstream runs (the
-  * IndexBuild/IndexStore pattern, applied to relational layout).
+  * ArtifactBuild/IndexStore pattern, applied to relational layout).
   *
   * Buckets are assigned by `hash(key) % numBuckets` at WRITE time, so
   * the join-time co-location contract is: same key column type, same
@@ -38,8 +38,8 @@ object BucketedLayout {
   private def writtenKey(spark: SparkSession, sfDir: String,
                          numBuckets: Int, prefix: String) =
     (System.identityHashCode(spark), prefix, sfDir,
-      IndexStore.dataFingerprint(sfDir, "lineitem") + "|" +
-        IndexStore.dataFingerprint(sfDir, "orders"), numBuckets)
+      ArtifactStore.dataFingerprint(sfDir, "lineitem") + "|" +
+        ArtifactStore.dataFingerprint(sfDir, "orders"), numBuckets)
 
   /** 8-hex-char key of an sfDir — shared by the on-disk location AND
     * the catalog's sf-scoped table-name prefix

@@ -32,21 +32,12 @@ import graft.operators.Similarity
   */
 object IndexStore {
 
-  /** Warehouse root, fingerprints and publish discipline live in
-    * [[ArtifactStore]] (VERDICT r9 #4 — one core, four delegating
-    * stores); these forwarders keep existing call sites stable. */
-  def root: String = ArtifactStore.root
-
-  private[tools] def md5hex(s: String): String = ArtifactStore.md5hex(s)
-
   /** One directory per (source dir, data fingerprint): data changing
     * under the same path gets a NEW index directory, so a written
-    * index can never serve stale results. */
+    * index can never serve stale results. Warehouse root, fingerprints
+    * and publish discipline live in [[ArtifactStore]] (VERDICT r9 #4). */
   def path(dir: String, fingerprint: String): String =
     ArtifactStore.path("", dir, fingerprint)
-
-  def dataFingerprint(d: String, table: String): String =
-    ArtifactStore.dataFingerprint(d, table)
 
   private val ReadyMarker = "_GRAFT_INDEX_READY"
 

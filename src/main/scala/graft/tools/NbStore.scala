@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.operators.TextAnalysis
 
@@ -24,8 +23,6 @@ import graft.operators.TextAnalysis
   * bit-identically to an in-session one and the DuckDB oracle
   * contract is unchanged (NbPersistSpec pins the round trip). */
 object NbStore {
-
-  def root: String = ArtifactStore.root
 
   def path(dir: String, fingerprint: String): String =
     ArtifactStore.path("nb_", dir, fingerprint)
@@ -62,33 +59,5 @@ object NbStore {
       "w" -> StringType, "sArr" -> ArrayType(LongType))
     TextAnalysis.NbModel(labRows.map(_._1).toSeq, labRows.map(_._2).toSeq,
       labRows.map(_._3).toSeq, cond)
-  }
-}
-
-/** Classifier-build entry point — the [[BackoffBuild]] twin for the
-  * NB gate: train once on the catalog's even-doc_id split, write the
-  * fingerprint-keyed tables, and every later session's ta_nbayes
-  * classifies against them instead of re-training.
-  *
-  * usage: runMain graft.tools.NbBuild <sfDir> [outDir]
-  */
-object NbBuild {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse {
-      System.err.println("usage: graft.tools.NbBuild <sfDir> [outDir]")
-      sys.exit(2)
-    }
-    val spark = graft.GraftSession.builderFromEnv("8").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fp = IndexStore.dataFingerprint(sfDir, "documents")
-    val p = args.lift(1).getOrElse(NbStore.path(sfDir, fp))
-    if (NbStore.ready(p)) {
-      println(s"nb model already ready: $p")
-    } else {
-      NbStore.write(spark,
-        graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 0), p)
-      println(s"nb model written: $p")
-    }
-    spark.stop()
   }
 }

@@ -46,8 +46,6 @@ import graft.operators.Dedup
   */
 object SignatureStore {
 
-  def root: String = ArtifactStore.root
-
   /** Algorithm-family version baked into both the store PATH and the
     * written meta (r12): the bucket values are a function of the
     * tokenizer + hash family + banding, and a store written under an
@@ -61,9 +59,6 @@ object SignatureStore {
 
   def path(dir: String, fingerprint: String): String =
     ArtifactStore.path("sig_", dir, s"$fingerprint|$Family")
-
-  def dataFingerprint(d: String, table: String): String =
-    ArtifactStore.dataFingerprint(d, table)
 
   private val ReadyMarker = "_GRAFT_SIG_READY"
 

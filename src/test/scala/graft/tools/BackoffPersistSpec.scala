@@ -34,7 +34,7 @@ class BackoffPersistSpec extends SparkSpec {
       assert(fresh.nonEmpty)
 
       val p = BackoffStore.path(dataDir,
-        IndexStore.dataFingerprint(dataDir, "documents"))
+        ArtifactStore.dataFingerprint(dataDir, "documents"))
       assert(!BackoffStore.ready(p), "model must not pre-exist")
       BackoffStore.write(spark,
         docs.filter(col("doc_id") % 2 === 0), p)

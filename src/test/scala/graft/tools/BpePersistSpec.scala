@@ -23,7 +23,7 @@ class BpePersistSpec extends SparkSpec {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").coalesce(1)
         .write.parquet(s"$dataDir/documents.parquet")
       val docs = Tables.documents(spark, dataDir)
-      val p = BpeStore.path(dataDir, IndexStore.dataFingerprint(dataDir, "documents"))
+      val p = BpeStore.path(dataDir, ArtifactStore.dataFingerprint(dataDir, "documents"))
       assert(!BpeStore.ready(p), "merge table must not pre-exist")
       BpeStore.write(spark, docs, p)
       assert(BpeStore.ready(p), "ready marker missing after write")

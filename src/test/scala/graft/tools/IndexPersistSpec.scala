@@ -9,7 +9,7 @@ import graft.operators.Similarity
 import graft.queries.ExtensionCatalog
 import graft.streaming.SparkSpec
 
-/** Written-index persistence (VERDICT r5 #4): IndexBuild's tables are
+/** Written-index persistence (VERDICT r5 #4): ArtifactBuild index's tables are
   * bit-faithful round-trips of the driver-held training values, and
   * catalog probes READ the written tables (plan witness) with results
   * identical to in-session builds. A fresh data dir guarantees the
@@ -26,7 +26,7 @@ class IndexPersistSpec extends SparkSpec {
       spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").coalesce(1)
         .write.parquet(s"$dataDir/embeddings.parquet")
       val corpus = Tables.embeddings(spark, dataDir)
-      val p = IndexStore.path(dataDir, IndexStore.dataFingerprint(dataDir, "embeddings"))
+      val p = IndexStore.path(dataDir, ArtifactStore.dataFingerprint(dataDir, "embeddings"))
       assert(!IndexStore.ready(p), "index must not pre-exist")
       IndexStore.writeAll(spark, corpus, p)
       assert(IndexStore.ready(p), "ready marker missing after writeAll")

@@ -35,7 +35,7 @@ class MooreLewisPersistSpec extends SparkSpec {
       val flags = fresh.map(_.last.asInstanceOf[Long])
       assert(flags == Set(0L, 1L), s"selected flag degenerate: $flags")
 
-      val fp = IndexStore.dataFingerprint(dataDir, "documents")
+      val fp = ArtifactStore.dataFingerprint(dataDir, "documents")
       val pIn = BackoffStore.path(dataDir, fp + "|ml_in")
       val pGen = BackoffStore.path(dataDir, fp + "|ml_gen")
       assert(!BackoffStore.ready(pIn) && !BackoffStore.ready(pGen))

@@ -34,7 +34,7 @@ class NbPersistSpec extends SparkSpec {
       assert(fresh.nonEmpty)
 
       val p = NbStore.path(dataDir,
-        IndexStore.dataFingerprint(dataDir, "documents"))
+        ArtifactStore.dataFingerprint(dataDir, "documents"))
       assert(!NbStore.ready(p), "model must not pre-exist")
       NbStore.write(spark, docs.filter(col("doc_id") % 2 === 0), p)
       assert(NbStore.ready(p), "ready marker missing after write")

@@ -140,7 +140,7 @@ class SigPersistSpec extends SparkSpec {
       spark.read.parquet(s"$sfDir/documents.parquet").coalesce(1)
         .write.parquet(s"$dataDir/documents.parquet")
       val p = SignatureStore.path(dataDir,
-        SignatureStore.dataFingerprint(dataDir, "documents"))
+        ArtifactStore.dataFingerprint(dataDir, "documents"))
       assert(!SignatureStore.ready(p))
       val first = graft.queries.ExtensionCatalog.ddLshProbe(spark, dataDir)
         .as[(Long, Long)].collect().toSet
