@@ -85,15 +85,27 @@ object DriverFinish {
   def fits(rows: Long): Boolean =
     rows <= Runtime.getRuntime.maxMemory / 5L / BytesPerRow
 
-  /** The gate decision with the heap guard applied: `gate ==
-    * Long.MaxValue` is an EXPLICIT force-driver request (GateCalib's
-    * "driver" arm, BenchScale's twin-equality replays) and bypasses
-    * the guard — otherwise a small-heap harness would silently
-    * measure the distributed path while labeling it "driver"
-    * (review r11). A declined in-gate finish notes itself once to
-    * stderr so the path choice is never invisible. `rows` must count
-    * EVERYTHING the twin collects (edges PLUS seeds for bfs/sssp). */
-  def take(gate: Long, rows: Long): Boolean =
+  /** THE driver-finish gate, one call for every kernel that has a
+    * twin: true when the gate is live (> 0), `count` (the kernel's own
+    * unit: directed rows, symmetric rows, canonical edges) and
+    * `extraRows` (bfs/sssp's seeds) are both within it, and the
+    * collect of `count + extraRows` rows passes the heap guard.
+    * `count` is by-name, so gate 0 (the ladders' forced-distributed
+    * path) and an over-gate `extraRows` never pay it.
+    *
+    * `gate == Long.MaxValue` is an EXPLICIT force-driver request
+    * (GateCalib's "driver" arm, BenchScale's twin-equality replays)
+    * and bypasses the heap guard — otherwise a small-heap harness
+    * would silently measure the distributed path while labeling it
+    * "driver". A declined in-gate finish notes itself once to stderr
+    * so the path choice is never invisible. */
+  def chooses(gate: Long, count: => Long, extraRows: Long = 0L): Boolean =
+    gate > 0 && extraRows <= gate && {
+      val n = count
+      n <= gate && take(gate, n + extraRows)
+    }
+
+  private def take(gate: Long, rows: Long): Boolean =
     if (gate == Long.MaxValue) true
     else if (fits(rows)) true
     else {

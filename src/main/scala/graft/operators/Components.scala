@@ -75,8 +75,7 @@ object Components {
       _.dataType == org.apache.spark.sql.types.LongType)
     // driverFinishEdges > 0: passing 0 forces the distributed rounds
     // even on an empty edge set (the force-distributed contract)
-    if (driverFinishEdges > 0 && initEdges <= driverFinishEdges &&
-        longIds && DriverFinish.take(driverFinishEdges, initEdges)) {
+    if (longIds && DriverFinish.chooses(driverFinishEdges, initEdges)) {
       val out = driverFinish(edges.sparkSession, e)
       // the collect consumed the checkpoint - free its blocks now
       Checkpoints.unpersist(e)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge lists — the PageRank companion
@@ -42,18 +42,94 @@ import org.apache.spark.sql.functions._
   * ≈ 4–5M symmetric rows. Units are whatever count the kernel
   * compares — directed rows (pagerank/bfs/sssp/hits) or symmetric rows
   * (labelprop/kcore). The collect at the 4M gate is ≤ ~100 MB of
-  * driver tuples; ladders force the distributed path with 0.
+  * driver tuples; ladders force the distributed path with 0. The
+  * whole gate decision is one [[DriverFinish.chooses]] call.
+  *
+  * UNDIRECTED INPUT: the eight undirected kernels (labelPropagation,
+  * kCore, commonNeighbors, adamicAdar, jaccardLinks, assortativity,
+  * triangleCounts, modularity) take one [[Graph.Undirected]], which
+  * decides who canonicalizes the edge set and who releases it:
+  *  - `Undirected(edges, aCol, bCol)`: any pairs (duplicates, reversed
+  *    copies, self-loops). The kernel canonicalizes them ({a, b} as
+  *    a < b, self-loops out, distinct); when its policy materializes
+  *    that set, the kernel checkpoints it, owns it and releases it
+  *    before it returns or throws.
+  *  - `Undirected.canonical(frame, aCol, bCol)`: the caller's frame is
+  *    ALREADY canonical and materialized (a memoized checkpoint, such
+  *    as the catalog's co-purchase edge set). Kernels read its blocks
+  *    as they are, skip the canonicalization shuffle, and never
+  *    release it.
+  * Each kernel keeps its own materialization policy for a raw set.
+  * labelPropagation and kCore checkpoint it only while the driver gate
+  * is live (it funds the gate count and the half-edge collect as
+  * narrow block reads); a forced-distributed caller (gate 0, the scale
+  * ladders) keeps one materialization, the symmetric cache. modularity
+  * stays lazy: it checkpoints its community-tagged frame instead. The
+  * link predictors, assortativity and triangleCounts checkpoint
+  * eagerly, because the set feeds several plan branches and a lazy
+  * upstream (the catalog's k-NN chain) would replay once per branch.
   */
 object Graph {
 
-  /** Integer-exact PageRank. `edges` is DIRECTED (callers wanting the
-    * undirected semantics union both directions); every node must
-    * appear as a source at least once (the node universe is the
-    * distinct source set — dangling sinks would need a mass-return
-    * term that floor arithmetic can't make exact, so they are out of
-    * contract). Returns (node, r) with r in micro-units after
-    * `iterations` rounds from a uniform 1 000 000 start.
-    */
+  /** An undirected edge set; see the object scaladoc for the contract
+    * of its two constructors. */
+  final class Undirected private (edges: DataFrame, aCol: String,
+                                  bCol: String, isCanonical: Boolean) {
+    private[Graph] def spark: SparkSession = edges.sparkSession
+
+    /** Runs `body` over this call's canonical (a, b) set, checkpointed
+      * when `materialize` and the set is not caller-canonical, and
+      * releases that checkpoint when `body` returns or throws (or
+      * earlier, at `View.release`). */
+    private[Graph] def use[T](materialize: Boolean)(body: Undirected.View => T): T = {
+      val ab =
+        if (isCanonical)
+          edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+        else edges.select(
+            least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
+            greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
+          .filter(col("a") < col("b"))
+          .distinct()
+      val owned = materialize && !isCanonical
+      val view = new Undirected.View(if (owned) ab.localCheckpoint() else ab, owned)
+      try body(view) finally view.release()
+    }
+  }
+
+  object Undirected {
+    def apply(edges: DataFrame, aCol: String, bCol: String): Undirected =
+      new Undirected(edges, aCol, bCol, isCanonical = false)
+
+    def canonical(frame: DataFrame, aCol: String, bCol: String): Undirected =
+      new Undirected(frame, aCol, bCol, isCanonical = true)
+
+    /** One kernel call's canonical set: `ab` holds (a, b) longs, a < b. */
+    private[Graph] final class View(val ab: DataFrame, owned: Boolean) {
+      /** Frees the call's own checkpoint early; never a caller's set. */
+      def release(): Unit = if (owned) Checkpoints.unpersist(ab)
+
+      /** Both directions as (`s`, `d`): every node appears as `s`. */
+      def sym(s: String = "s", d: String = "d"): DataFrame =
+        ab.select(col("a").as(s), col("b").as(d))
+          .union(ab.select(col("b").as(s), col("a").as(d)))
+
+      /** The set collected and symmetrized in memory: rows 2i and
+        * 2i + 1 are (a, b) and (b, a). */
+      def collectSym(): Array[(Long, Long)] = {
+        import ab.sparkSession.implicits._
+        val half = ab.as[(Long, Long)].collect()
+        val rows = new Array[(Long, Long)](half.length * 2)
+        var i = 0
+        while (i < half.length) {
+          rows(2 * i) = half(i)
+          rows(2 * i + 1) = (half(i)._2, half(i)._1)
+          i += 1
+        }
+        rows
+      }
+    }
+  }
+
   /** Pins `canChangeCachedPlanOutputPartitioning=false` around `body`:
     * a cached frame's partitioning is usable by the outer planner only
     * when AQE is barred from re-shaping the cached plan's output
@@ -83,17 +159,56 @@ object Graph {
     * cap is a no-op with a zero count. Hubs contribute the LEAST
     * signal per wedge in this family (Adamic-Adar's 1/ln(deg) exists
     * precisely to discount them), so the trim removes the most
-    * expensive, least informative wedges first. */
-  private def capCenters(sym: DataFrame, deg: DataFrame, maxDegree: Int,
-                         kernel: String): DataFrame = {
+    * expensive, least informative wedges first. This is the center
+    * filter of [[commonNeighbors]] and [[jaccardLinks]]; [[topLinks]]
+    * notes the drop count. */
+  private def capCenters(maxDegree: Int)(sym: DataFrame, deg: DataFrame): DataFrame =
     if (maxDegree <= 0) sym
-    else {
-      noteDroppedWedges(deg, maxDegree, kernel)
-      sym.join(deg.filter(col("deg") <= maxDegree).select(col("s")), Seq("s"))
+    else sym.join(deg.filter(col("deg") <= maxDegree).select(col("s")), Seq("s"))
+
+  /** The wedge link-predictor pipeline of [[commonNeighbors]],
+    * [[adamicAdar]] and [[jaccardLinks]]: eager canonical set,
+    * symmetric list, degree frame (checkpointed only when capped: the
+    * drop count and the center filter both read it), drop count or skew
+    * precheck, wedge self-join on the center, anti join to non-adjacent
+    * pairs, and a checkpointed top-N by (`rank` desc, a, b). A predictor
+    * supplies its center filter (`centers`: (sym, deg) → (s, d,
+    * `carry`…)), its per-pair aggregates, the joins its score needs
+    * before the anti join (`scored`), and its columns after (a, b). */
+  private def topLinks(g: Undirected, kernel: String, topN: Int,
+                       maxDegree: Int, rank: String)
+                      (centers: (DataFrame, DataFrame) => DataFrame,
+                       pairAggs: Seq[Column], outCols: Seq[Column],
+                       carry: Seq[String] = Nil,
+                       scored: (DataFrame, DataFrame) => DataFrame =
+                         (wed, _) => wed): DataFrame = {
+    require(topN >= 1)
+    g.use(materialize = true) { c =>
+      val symAll = c.sym()
+      val degLazy = symAll.groupBy(col("s")).agg(count(lit(1)).as("deg"))
+      val degOpt = if (maxDegree <= 0) None else Some(degLazy.localCheckpoint())
+      val deg = degOpt.getOrElse(degLazy)
+      try {
+        if (maxDegree > 0) noteDroppedWedges(deg, maxDegree, kernel)
+        else warnWedgeSkew(symAll, kernel)
+        val ws = centers(symAll, deg)
+        val wed = ws.select(Seq(col("s"), col("d").as("xa")) ++ carry.map(col): _*)
+          .join(ws.select(col("s"), col("d").as("xb")), Seq("s"))
+          .filter(col("xa") < col("xb"))
+          .groupBy(col("xa"), col("xb"))
+          .agg(pairAggs.head, pairAggs.tail: _*)
+        val und = c.ab
+        scored(wed, deg)
+          .join(und, wed("xa") === und("a") && wed("xb") === und("b"), "left_anti")
+          .select(Seq(col("xa").as("a"), col("xb").as("b")) ++ outCols: _*)
+          .orderBy(col(rank).desc, col("a"), col("b"))
+          .limit(topN)
+          .localCheckpoint()
+      } finally degOpt.foreach(Checkpoints.unpersist)
     }
   }
 
-  /** The loud half of [[capCenters]]: counts the wedges an exact
+  /** The loud half of the hub cap: counts the wedges an exact
     * top-degree trim at `maxDegree` drops (deg·(deg−1)/2 per hub) into
     * the [[droppedWedges]] accumulator + a stderr line. One cheap
     * aggregate over the (checkpointed) degree frame, eager by design —
@@ -189,6 +304,14 @@ object Graph {
   def droppedWedges(spark: org.apache.spark.sql.SparkSession): Long =
     droppedWedgeCounter.value(spark)
 
+  /** Integer-exact PageRank. `edges` is DIRECTED (callers wanting the
+    * undirected semantics union both directions); every node must
+    * appear as a source at least once (the node universe is the
+    * distinct source set — dangling sinks would need a mass-return
+    * term that floor arithmetic can't make exact, so they are out of
+    * contract). Returns (node, r) with r in micro-units after
+    * `iterations` rounds from a uniform 1 000 000 start.
+    */
   def pageRankMicro(edges: DataFrame, srcCol: String, dstCol: String,
                     iterations: Int = 5, dampingPct: Int = 85,
                     validateUniverse: Boolean = true,
@@ -216,10 +339,7 @@ object Graph {
     // — same floor divisions, same exact sums (GraphSpec pins the
     // equality; IterativeKernelPropertySpec pins both against the
     // reference).
-    if (driverFinishEdges > 0 && {
-          val n = e.count()
-          n <= driverFinishEdges && DriverFinish.take(driverFinishEdges, n)
-        }) {
+    if (DriverFinish.chooses(driverFinishEdges, e.count())) {
       pageRankDriver(edges.sparkSession, e, iterations,
         dampingPct, validateUniverse)
     } else {
@@ -363,11 +483,7 @@ object Graph {
     // the driver path no longer builds them (r14); the gate count is
     // one pass over the caller's frame (catalog callers hand memoized
     // checkpoints or narrow projections of one).
-    if (driverFinishEdges > 0 && nSeeds <= driverFinishEdges && {
-          val nEdges = e0.count()
-          nEdges <= driverFinishEdges &&
-            DriverFinish.take(driverFinishEdges, nEdges + nSeeds)
-        }) {
+    if (DriverFinish.chooses(driverFinishEdges, e0.count(), extraRows = nSeeds)) {
       val out = bfsDriver(edges.sparkSession, e0, sd, maxHops)
       Checkpoints.unpersist(sd)
       out
@@ -441,11 +557,7 @@ object Graph {
     // machinery — the pageRankMicro r14 slimming); the negative-weight
     // guard still fires on every path that reads w (the driver collect
     // and the distributed materialization both do).
-    if (driverFinishEdges > 0 && nSeeds <= driverFinishEdges && {
-          val nEdges = e0.count()
-          nEdges <= driverFinishEdges &&
-            DriverFinish.take(driverFinishEdges, nEdges + nSeeds)
-        }) {
+    if (DriverFinish.chooses(driverFinishEdges, e0.count(), extraRows = nSeeds)) {
       val out =
         try ssspDriver(edges.sparkSession, e0, sd, maxRounds)
         finally Checkpoints.unpersist(sd)
@@ -548,51 +660,20 @@ object Graph {
     * exact integer counts and the same (count desc, label asc) argmax
     * make the two paths bit-identical — GraphSpec pins the equality
     * and a randomized property pins both against a plain reference. */
-  def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       rounds: Int = 4,
-                       driverFinishEdges: Long = 4000000L,
-                       assumeCanonical: Boolean = false): DataFrame = {
+  def labelPropagation(g: Undirected, rounds: Int = 4,
+                       driverFinishEdges: Long = 4000000L): DataFrame = {
     require(rounds >= 1)
-    withStableCachePartitioning(edges.sparkSession) {
-    // assumeCanonical + driver-path slimming: see kCore — the gate
-    // count and the driver collect read the canonical HALF-edge
-    // blocks; the 2m-row symmetrize/repartition/cache is built only
-    // when the distributed rounds actually run (r14).
-    // checkpoint only when the driver gate is LIVE; a forced-
-    // distributed caller (gate 0 — the scale ladders) keeps the r13
-    // shape exactly (see kCore)
-    val gateLive = driverFinishEdges > 0
-    val (ec, ownEc) =
-      if (assumeCanonical)
-        (edges.select(col(aCol).cast("long").as("a"),
-          col(bCol).cast("long").as("b")), false)
-      else {
-        val canon = edges.select(
-            least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-            greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-          .filter(col("a") < col("b"))
-          .distinct()
-        if (gateLive) (canon.localCheckpoint(), true) else (canon, false)
-      }
-    if (gateLive && {
-          val m = 2L * ec.count()
-          m <= driverFinishEdges && DriverFinish.take(driverFinishEdges, m)
-        }) {
-      import edges.sparkSession.implicits._
-      val half = ec.select(col("a"), col("b")).as[(Long, Long)].collect()
-      if (ownEc) Checkpoints.unpersist(ec)
-      val symRows = new Array[(Long, Long)](half.length * 2)
-      var i = 0
-      while (i < half.length) {
-        symRows(2 * i) = half(i)
-        symRows(2 * i + 1) = (half(i)._2, half(i)._1)
-        i += 1
-      }
-      labelPropDriver(edges.sparkSession, symRows, rounds)
+    withStableCachePartitioning(g.spark) {
+    // the gate count and the driver collect read the canonical
+    // HALF-edge blocks; the 2m-row symmetrize/repartition/cache is
+    // built only when the distributed rounds actually run
+    g.use(materialize = driverFinishEdges > 0) { c =>
+    if (DriverFinish.chooses(driverFinishEdges, 2L * c.ab.count())) {
+      val rows = c.collectSym()
+      c.release()
+      labelPropDriver(g.spark, rows, rounds)
     } else {
-    val ed = ec.select(col("a").as("src"), col("b").as("dst"))
-      .union(ec.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src")).persist()
+    val ed = c.sym("src", "dst").repartition(col("src")).persist()
     val m = ed.count()
     // symmetry ⇒ every node appears as src, so the label vector and
     // each round's update cover the whole universe — no dangling case
@@ -642,7 +723,7 @@ object Graph {
     // in-task map stays in memory at any rung — the same sizing a
     // real cluster applies via spark.sql.shuffle.partitions.
     val aggParts = math.max(
-      edges.sparkSession.sessionState.conf.numShufflePartitions,
+      g.spark.sessionState.conf.numShufflePartitions,
       (m / 2000000L).toInt + 1)
     for (_ <- 1 to rounds) {
       val prev = labels
@@ -670,8 +751,8 @@ object Graph {
     Checkpoints.unpersist(labels)
     Checkpoints.unpersist(remapRaw)
     ed.unpersist()
-    if (ownEc) Checkpoints.unpersist(ec)
     out
+    }
     }
     }
   }
@@ -754,74 +835,37 @@ object Graph {
     * Returns (node, core_deg) — every surviving node with its degree
     * INSIDE the core (≥ k by construction); empty when the graph has
     * no k-core. */
-  def kCore(edges: DataFrame, aCol: String, bCol: String,
-            k: Option[Long] = None,
-            maxRounds: Int = 12,
-            driverFinishEdges: Long = 4000000L,
-            assumeCanonical: Boolean = false): DataFrame = {
+  def kCore(g: Undirected, k: Option[Long] = None, maxRounds: Int = 12,
+            driverFinishEdges: Long = 4000000L): DataFrame = {
     require(maxRounds >= 1)
-    withStableCachePartitioning(edges.sparkSession) {
-    // `assumeCanonical`: the input is ALREADY (a < b, distinct) AND
-    // eagerly materialized (a memoized checkpoint) — skip the
-    // canonicalization shuffle and read its blocks directly (the
-    // triangleCounts flag, generalized r14). Otherwise canonicalize
-    // and checkpoint HERE: the count, the driver collect, and the
-    // distributed symmetrize all read the canonical HALF-edge blocks —
-    // the old shape symmetrized + repartitioned + cached BEFORE the
-    // gate, so the driver path paid a 2m-row shuffle, a 2m-row cache,
-    // a full distinct-count shuffle for n0, and a 2m-row collect for
-    // work it finishes on m rows in memory.
-    // the canonicalization is checkpointed only when the driver gate
-    // is LIVE (it funds the gate count + the half-edge collect as
-    // narrow block reads); a forced-distributed caller (gate 0 — the
-    // scale ladders) keeps the r13 shape exactly: lazy canonical ec,
-    // one materialization (the symmetric cache), zero extra passes
-    val gateLive = driverFinishEdges > 0
-    val (ec, ownEc) =
-      if (assumeCanonical)
-        (edges.select(col(aCol).cast("long").as("a"),
-          col(bCol).cast("long").as("b")), false)
-      else {
-        val canon = edges.select(
-            least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-            greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-          .filter(col("a") < col("b"))
-          .distinct()
-        if (gateLive) (canon.localCheckpoint(), true) else (canon, false)
-      }
-    val m2Pre = if (gateLive) 2L * ec.count() else -1L
-    if (gateLive && m2Pre <= driverFinishEdges &&
-        DriverFinish.take(driverFinishEdges, m2Pre)) {
-      import edges.sparkSession.implicits._
-      val half = ec.select(col("a"), col("b")).as[(Long, Long)].collect()
-      if (ownEc) Checkpoints.unpersist(ec)
-      // symmetrize in memory: same multiset the old collected frame held
-      val rows = new Array[(Long, Long)](half.length * 2)
-      var i = 0
-      while (i < half.length) {
-        rows(2 * i) = half(i)
-        rows(2 * i + 1) = (half(i)._2, half(i)._1)
-        i += 1
-      }
+    withStableCachePartitioning(g.spark) {
+    // the gate count, the driver collect and the distributed
+    // symmetrize all read the canonical HALF-edge set: the driver path
+    // pays no 2m-row shuffle, cache, distinct count or collect for
+    // work it finishes on m rows in memory
+    // the given k, else ⌊0.7 · avg degree⌋ over m2 symmetric rows
+    def kFor(m2: Long, n0: Long): Long = {
+      val kVal = k.getOrElse(if (n0 == 0) 1L else (m2 * 7L) / (n0 * 10L))
+      require(kVal >= 1, s"kCore: derived k=$kVal < 1 (m2=$m2, n=$n0)")
+      kVal
+    }
+    g.use(materialize = driverFinishEdges > 0) { c =>
+    if (DriverFinish.chooses(driverFinishEdges, 2L * c.ab.count())) {
+      val rows = c.collectSym()
+      c.release()
       val n0 = { // distinct nodes — was a full shuffle, now one pass
         val seen = scala.collection.mutable.LongMap.empty[Boolean]
         rows.foreach { case (s, _) => seen(s) = true }
         seen.size.toLong
       }
-      val kVal = k.getOrElse(if (n0 == 0) 1L else (m2Pre * 7L) / (n0 * 10L))
-      require(kVal >= 1, s"kCore: derived k=$kVal < 1 (m2=$m2Pre, n=$n0)")
-      kCoreDriver(edges.sparkSession, rows, kVal, maxRounds)
+      kCoreDriver(g.spark, rows, kFor(rows.length.toLong, n0), maxRounds)
     } else {
-      val ed = ec.select(col("a").as("src"), col("b").as("dst"))
-        .union(ec.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src")).persist()
+      val ed = c.sym("src", "dst").repartition(col("src")).persist()
       val m2 = ed.count()
-      val n0 = ed.select(col("src")).distinct().count()
-      val kVal = k.getOrElse(if (n0 == 0) 1L else (m2 * 7L) / (n0 * 10L))
-      require(kVal >= 1, s"kCore: derived k=$kVal < 1 (m2=$m2, n=$n0)")
+      val kVal = kFor(m2, ed.select(col("src")).distinct().count())
       var cur = ed.localCheckpoint()
       ed.unpersist()
-      if (ownEc) Checkpoints.unpersist(ec)
+      c.release()
       // PEEL BY THE REMOVED SET, not the survivor set (r14): after the
       // first round a peel removes FEW nodes, so anti-joining the live
       // edges against the (small) removed set — BROADCAST when it fits
@@ -874,6 +918,7 @@ object Graph {
       out
     }
     }
+    }
   }
 
   /** Common-neighbor link prediction over an UNDIRECTED edge list:
@@ -896,49 +941,11 @@ object Graph {
     * quadratic this kernel does NOT hide. `maxDegree = 0` (default)
     * is the exact, uncapped kernel. Ties at the cut rank break by
     * (a, b) — the output is a total order, deterministic at any N. */
-  def commonNeighbors(edges: DataFrame, aCol: String, bCol: String,
-                      topN: Int = 100, maxDegree: Int = 0): DataFrame = {
-    require(topN >= 1)
-    // materialized ONCE: the canonical edge set feeds four plan
-    // branches (two union arms, each wedge side via them, and the
-    // anti join) — left lazy, an expensive upstream (the catalog's
-    // k-NN chain) would re-run per branch (the gClustering lesson)
-    val und = edges.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint()
-    val symAll = und.select(col("a").as("s"), col("b").as("d"))
-      .union(und.select(col("b").as("s"), col("a").as("d")))
-    // capped path only: the degree aggregate exists solely to trim
-    // centers (one cheap scan of the materialized edge cache); it is
-    // checkpointed because capCenters consumes it twice (eager drop
-    // count + filter join) and released once `out` is materialized
-    val degOpt =
-      if (maxDegree <= 0) None
-      else Some(symAll.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint())
-    if (maxDegree <= 0) warnWedgeSkew(symAll, "commonNeighbors")
-    val sym = degOpt.fold(symAll)(
-      capCenters(symAll, _, maxDegree, "commonNeighbors"))
-    val wed = sym.select(col("s"), col("d").as("xa"))
-      .join(sym.select(col("s"), col("d").as("xb")), Seq("s"))
-      .filter(col("xa") < col("xb"))
-      .groupBy(col("xa"), col("xb"))
-      .agg(count(lit(1)).as("n_common"))
-    val out = wed
-      .join(und, wed("xa") === und("a") && wed("xb") === und("b"), "left_anti")
-      .select(col("xa").as("a"), col("xb").as("b"), col("n_common"))
-      .orderBy(col("n_common").desc, col("a"), col("b"))
-      .limit(topN)
-      // eager: the top-N is tiny; releasing the edge checkpoint here
-      // instead of leaking its blocks for the session
-      .localCheckpoint()
-    degOpt.foreach(Checkpoints.unpersist)
-    Checkpoints.unpersist(und)
-    out
-  }
+  def commonNeighbors(g: Undirected, topN: Int = 100,
+                      maxDegree: Int = 0): DataFrame =
+    topLinks(g, "commonNeighbors", topN, maxDegree, rank = "n_common")(
+      capCenters(maxDegree), pairAggs = Seq(count(lit(1)).as("n_common")),
+      outCols = Seq(col("n_common")))
 
   /** Adamic-Adar link prediction (Adamic & Adar, "Friends and
     * neighbors on the Web", Social Networks 2003) — the
@@ -960,48 +967,18 @@ object Graph {
     * each pair's score the exact integer SUM of its wedge centers'
     * weights — no order-dependent double accumulation. Returns the
     * `topN` non-adjacent pairs by (aa_micro desc, a, b). */
-  def adamicAdar(edges: DataFrame, aCol: String, bCol: String,
-                 topN: Int = 100, maxDegree: Int = 0): DataFrame = {
-    require(topN >= 1)
-    // materialized ONCE, as in commonNeighbors: the canonical edge
-    // set feeds the union arms, the degree aggregate, and the anti
-    // join — lazy would re-run the upstream per branch
-    val und = edges.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint()
-    val sym = und.select(col("a").as("s"), col("b").as("d"))
-      .union(und.select(col("b").as("s"), col("a").as("d")))
-    val degLazy = sym.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    // capped path: checkpoint deg (capCenters reads it twice); the
-    // ws filter below trims hub CENTERS while their weights — and
-    // every retained node's weight — stay the exact FULL degree
-    val degOpt = if (maxDegree <= 0) None else Some(degLazy.localCheckpoint())
-    val deg = degOpt.getOrElse(degLazy)
-    if (maxDegree > 0) noteDroppedWedges(deg, maxDegree, "adamicAdar")
-    else warnWedgeSkew(sym, "adamicAdar")
-    val ws = sym.join(deg, Seq("s")).filter(col("deg") >= 2)
-      .filter(if (maxDegree > 0) col("deg") <= maxDegree else lit(true))
-      .withColumn("w",
-        round(lit(1000000) / log(col("deg").cast("double"))).cast("long"))
-    val wed = ws.select(col("s"), col("d").as("xa"), col("w"))
-      .join(ws.select(col("s"), col("d").as("xb")), Seq("s"))
-      .filter(col("xa") < col("xb"))
-      .groupBy(col("xa"), col("xb"))
-      .agg(sum(col("w")).as("aa_micro"), count(lit(1)).as("n_common"))
-    val out = wed
-      .join(und, wed("xa") === und("a") && wed("xb") === und("b"), "left_anti")
-      .select(col("xa").as("a"), col("xb").as("b"),
-        col("n_common"), col("aa_micro"))
-      .orderBy(col("aa_micro").desc, col("a"), col("b"))
-      .limit(topN)
-      .localCheckpoint()
-    degOpt.foreach(Checkpoints.unpersist)
-    Checkpoints.unpersist(und)
-    out
-  }
+  def adamicAdar(g: Undirected, topN: Int = 100,
+                 maxDegree: Int = 0): DataFrame =
+    // deg-1 nodes never center a wedge; the cap trims hub CENTERS while
+    // their weights, and every retained node's weight, stay the exact
+    // FULL degree
+    topLinks(g, "adamicAdar", topN, maxDegree, rank = "aa_micro")(
+      (sym, deg) => sym.join(deg, Seq("s")).filter(col("deg") >= 2)
+        .filter(if (maxDegree > 0) col("deg") <= maxDegree else lit(true))
+        .withColumn("w",
+          round(lit(1000000) / log(col("deg").cast("double"))).cast("long")),
+      pairAggs = Seq(sum(col("w")).as("aa_micro"), count(lit(1)).as("n_common")),
+      outCols = Seq(col("n_common"), col("aa_micro")), carry = Seq("w"))
 
   /** Jaccard link prediction — |N(a)∩N(b)| / |N(a)∪N(b)| over
     * non-adjacent pairs, the normalized member of the
@@ -1013,46 +990,19 @@ object Graph {
     * exact counts — so ranking is bit-deterministic with no fp at
     * all. Returns the `topN` non-adjacent pairs by
     * (j_micro desc, a, b). */
-  def jaccardLinks(edges: DataFrame, aCol: String, bCol: String,
-                   topN: Int = 100, maxDegree: Int = 0): DataFrame = {
-    require(topN >= 1)
-    val und = edges.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint()
-    val symAll = und.select(col("a").as("s"), col("b").as("d"))
-      .union(und.select(col("b").as("s"), col("a").as("d")))
-    val degLazy = symAll.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-    // capped path: trim wedge CENTERS only — the endpoint degrees in
-    // the denominator stay exact full degrees for every node (n_common
-    // may undercount pairs whose shared neighbor was a hub; that is
-    // the counted degradation, not a changed formula)
-    val degOpt = if (maxDegree <= 0) None else Some(degLazy.localCheckpoint())
-    val deg = degOpt.getOrElse(degLazy)
-    if (maxDegree <= 0) warnWedgeSkew(symAll, "jaccardLinks")
-    val sym =
-      if (maxDegree <= 0) symAll
-      else capCenters(symAll, deg, maxDegree, "jaccardLinks")
-    val wed = sym.select(col("s"), col("d").as("xa"))
-      .join(sym.select(col("s"), col("d").as("xb")), Seq("s"))
-      .filter(col("xa") < col("xb"))
-      .groupBy(col("xa"), col("xb"))
-      .agg(count(lit(1)).as("n_common"))
-    val out = wed
-      .join(deg.select(col("s").as("xa"), col("deg").as("da")), Seq("xa"))
-      .join(deg.select(col("s").as("xb"), col("deg").as("db")), Seq("xb"))
-      .join(und, wed("xa") === und("a") && wed("xb") === und("b"), "left_anti")
-      .select(col("xa").as("a"), col("xb").as("b"), col("n_common"),
-        expr("(1000000 * n_common) div (da + db - n_common)").as("j_micro"))
-      .orderBy(col("j_micro").desc, col("a"), col("b"))
-      .limit(topN)
-      .localCheckpoint()
-    degOpt.foreach(Checkpoints.unpersist)
-    Checkpoints.unpersist(und)
-    out
-  }
+  def jaccardLinks(g: Undirected, topN: Int = 100,
+                   maxDegree: Int = 0): DataFrame =
+    // capped: trim wedge CENTERS only — the endpoint degrees in the
+    // denominator stay exact full degrees for every node (n_common may
+    // undercount pairs whose shared neighbor was a hub; that is the
+    // counted degradation, not a changed formula)
+    topLinks(g, "jaccardLinks", topN, maxDegree, rank = "j_micro")(
+      capCenters(maxDegree), pairAggs = Seq(count(lit(1)).as("n_common")),
+      outCols = Seq(col("n_common"),
+        expr("(1000000 * n_common) div (da + db - n_common)").as("j_micro")),
+      scored = (wed, deg) => wed
+        .join(deg.select(col("s").as("xa"), col("deg").as("da")), Seq("xa"))
+        .join(deg.select(col("s").as("xb"), col("deg").as("db")), Seq("xb")))
 
   /** Degree assortativity (Newman, "Assortative mixing in networks",
     * PRL 2002): the Pearson correlation of the degrees at either end
@@ -1071,55 +1021,40 @@ object Graph {
     * Scale shape: one degree aggregate, two node-keyed joins onto the
     * edge list, ONE map-side-combinable global moment aggregate —
     * returns a single row (n_ends, r). */
-  def assortativity(edges: DataFrame, aCol: String, bCol: String,
-                    assumeCanonical: Boolean = false): DataFrame = {
-    // materialized ONCE (the commonNeighbors lesson, applied r11 after
-    // the plan audit counted 12 scans / 23 exchanges here): the
-    // canonical edge set feeds both symmetrize arms AND, through sym,
-    // the degree aggregate and both degree joins — left lazy, the
-    // upstream pair generation replays ~6x. The degree frame is
+  def assortativity(g: Undirected): DataFrame =
+    // the canonical set is materialized (the commonNeighbors lesson,
+    // applied after a plan audit counted 12 scans / 23 exchanges
+    // here): it feeds both symmetrize arms AND, through
+    // sym, the degree aggregate and both degree joins — left lazy,
+    // the upstream pair generation replays ~6x. The degree frame is
     // checkpointed too (two join branches), and the single-row result
     // is eager so both releases happen before return.
-    // assumeCanonical: the caller's frame is already (a < b, distinct)
-    // AND eagerly materialized (a memoized checkpoint) — use its
-    // blocks directly, skip the shuffle, and do NOT unpersist it.
-    val und = if (assumeCanonical)
-        edges.select(col(aCol).cast("long").as("a"),
-          col(bCol).cast("long").as("b"))
-      else edges.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint()
-    val sym = und.select(col("a").as("s"), col("b").as("d"))
-      .union(und.select(col("b").as("s"), col("a").as("d")))
-    val deg = sym.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val ends = sym
-      .join(deg.select(col("s"), col("deg").as("dx")), Seq("s"))
-      .join(deg.select(col("s").as("d"), col("deg").as("dy")), Seq("d"))
-      .select(col("dx").cast("decimal(38,0)").as("x"),
-        col("dy").cast("decimal(38,0)").as("y"))
-    val out = ends.agg(count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("n").as("n_ends"),
-        when(col("n") * col("sxx") - col("sx") * col("sx") <= 0 ||
-             col("n") * col("syy") - col("sy") * col("sy") <= 0,
-          lit(null).cast("double"))
-          .otherwise(round(
-            (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-              sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
-                (col("n") * col("syy") - col("sy") * col("sy")).cast("double")),
-            6)).as("r"))
-      .localCheckpoint()
-    if (!assumeCanonical) Checkpoints.unpersist(und)
-    Checkpoints.unpersist(deg)
-    out
-  }
+    g.use(materialize = true) { c =>
+      val sym = c.sym()
+      val deg = sym.groupBy(col("s")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
+      val ends = sym
+        .join(deg.select(col("s"), col("deg").as("dx")), Seq("s"))
+        .join(deg.select(col("s").as("d"), col("deg").as("dy")), Seq("d"))
+        .select(col("dx").cast("decimal(38,0)").as("x"),
+          col("dy").cast("decimal(38,0)").as("y"))
+      try ends.agg(count(lit(1)).as("n"),
+          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+          sum(col("x") * col("y")).as("sxy"),
+          sum(col("x") * col("x")).as("sxx"),
+          sum(col("y") * col("y")).as("syy"))
+        .select(col("n").as("n_ends"),
+          when(col("n") * col("sxx") - col("sx") * col("sx") <= 0 ||
+               col("n") * col("syy") - col("sy") * col("sy") <= 0,
+            lit(null).cast("double"))
+            .otherwise(round(
+              (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
+                sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double") *
+                  (col("n") * col("syy") - col("sy") * col("sy")).cast("double")),
+              6)).as("r"))
+        .localCheckpoint()
+      finally Checkpoints.unpersist(deg)
+    }
 
   /** Bounded-collect driver peel for [[kCore]]: the same
     * remove-below-k rounds over the collected symmetric edge rows —
@@ -1201,41 +1136,16 @@ object Graph {
     * [[DriverFinish.fits]] additionally requires the collect to fit
     * the actual heap.
     *
-    * `assumeCanonical`: the input is ALREADY (a < b, distinct) under
-    * columns exactly ("a", "b") — callers that canonicalized for their
-    * own degree pass (gClustering) skip the redundant shuffle.
-    *
     * Returns (node, n_tri) for every node in ≥ 1 triangle. */
-  def triangleCounts(edges: DataFrame, aCol: String, bCol: String,
-                     driverFinishEdges: Long = 2000000L,
-                     assumeCanonical: Boolean = false,
-                     wedgeBloom: Boolean = true): DataFrame = {
-    // canonicalize: undirected {a,b} as a < b, self-loops out,
-    // distinct. A caller-canonical frame is used AS-IS (typically the
-    // caller's own checkpoint — re-checkpointing would duplicate its
-    // blocks, and unpersisting would destroy a frame the caller still
-    // reads; branch scans of a checkpoint are block reads, not
-    // recomputation).
-    val ec = if (assumeCanonical)
-      edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-    else edges.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint() // eager: every downstream branch reads blocks
-    val m = ec.count()
-    val out =
-      if (driverFinishEdges > 0 && m <= driverFinishEdges &&
-          DriverFinish.take(driverFinishEdges, m))
-        triangleDriver(edges.sparkSession, ec)
-      else
-        // triangleDistributed returns an eagerly-materialized frame,
-        // so the canonical edge blocks can be released immediately
-        triangleDistributed(ec, m, wedgeBloom)
-    if (!assumeCanonical) Checkpoints.unpersist(ec)
-    out
-  }
+  def triangleCounts(g: Undirected, driverFinishEdges: Long = 2000000L,
+                     wedgeBloom: Boolean = true): DataFrame =
+    // both paths return an eagerly-materialized frame, so the
+    // canonical edge blocks can be released on return
+    g.use(materialize = true) { c =>
+      val m = c.ab.count()
+      if (DriverFinish.chooses(driverFinishEdges, m)) triangleDriver(g.spark, c.ab)
+      else triangleDistributed(c.ab, m, wedgeBloom)
+    }
 
   /** Distributed compact-forward enumeration over a CANONICAL
     * (a < b, distinct) edge frame with `m` edges. */
@@ -1447,8 +1357,7 @@ object Graph {
     if (driverFinishEdges > 0) guard(nPre, ())
     // driver path skips the two per-direction repartitioned caches
     // (distributed-only machinery — the pageRankMicro r14 slimming)
-    if (driverFinishEdges > 0 && nPre <= driverFinishEdges &&
-        DriverFinish.take(driverFinishEdges, nPre)) {
+    if (DriverFinish.chooses(driverFinishEdges, nPre)) {
       hitsDriver(edges.sparkSession, e, iterations)
     } else {
     val eS = e.repartition(col("src")).persist()
@@ -1592,33 +1501,22 @@ object Graph {
     * aggregate per term; the final window runs over ≤|communities|
     * rows (an attribute's cardinality, not the graph), so its
     * single-partition exchange is constant-size at any edge count. */
-  def modularity(edges: DataFrame, aCol: String, bCol: String,
-                 nodeComm: DataFrame, nodeCol: String,
-                 commCol: String,
-                 assumeCanonical: Boolean = false): DataFrame = {
+  def modularity(g: Undirected, nodeComm: DataFrame, nodeCol: String,
+                 commCol: String): DataFrame = {
     val nc = nodeComm.select(col(nodeCol).cast("long").as("node"),
       col(commCol).as("community"))
     // induced subgraph: both endpoints must map — the inner joins
     // drop any edge touching an unmapped node BEFORE degrees are
     // counted, so every surviving edge contributes exactly two ends.
-    // assumeCanonical: the caller's frame is already (a < b, distinct)
-    // — skip the canonicalization shuffle (the result frame below is
-    // checkpointed and owned here either way).
-    val canon = if (assumeCanonical)
-        edges.select(col(aCol).cast("long").as("a"),
-          col(bCol).cast("long").as("b"))
-      else edges.select(
-        least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
-        greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-    val und = canon
+    // The canonical set stays lazy; this tagged frame is the one
+    // checkpoint, owned here either way.
+    val und = g.use(materialize = false)(_.ab
       .join(nc.select(col("node").as("na"), col("community").as("ca")),
         col("a") === col("na"))
       .join(nc.select(col("node").as("nb"), col("community").as("cb")),
         col("b") === col("nb"))
       .select(col("a"), col("b"), col("ca"), col("cb"))
-      .localCheckpoint()
+      .localCheckpoint())
     val ends = und.select(col("a").as("s"), col("ca").as("community"))
       .union(und.select(col("b").as("s"), col("cb").as("community")))
     val degComm = ends.groupBy(col("s"), col("community"))

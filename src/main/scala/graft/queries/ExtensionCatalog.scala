@@ -1600,14 +1600,17 @@ object ExtensionCatalog {
     * from the raw pair multiset on every run — one corpus-wide
     * shuffle apiece for an identical result. The raw multiset memo
     * stays for multiplicity consumers (sssp's co-occurrence weights);
-    * kernels take this one with `assumeCanonical = true` and never
-    * unpersist it. */
+    * kernels take this one as a [[graft.operators.Graph.Undirected.canonical]]
+    * set and never release it. */
   private val coPurchaseEdgesMemo = new SessionMemo[DataFrame]
 
   private def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
     coPurchaseEdgesMemo(memoKey(s, d, "lineitem")) {
       coPurchasePairs(s, d).distinct().localCheckpoint()
     }
+
+  private def coPurchaseGraph(s: SparkSession, d: String): Graph.Undirected =
+    Graph.Undirected.canonical(coPurchaseEdges(s, d), "pa", "pb")
 
   /** Per-part triangle counts over the co-purchase graph: parts are
     * linked when they appear in the same order ("frequently bought
@@ -1619,8 +1622,7 @@ object ExtensionCatalog {
     * kernel ([[graft.operators.Graph.triangleCounts]]), whose wedge
     * join is bounded O(m^1.5) regardless of hub parts. */
   val gTriangles: Q = (s, d) =>
-    graft.operators.Graph.triangleCounts(coPurchaseEdges(s, d), "pa", "pb",
-      assumeCanonical = true)
+    graft.operators.Graph.triangleCounts(coPurchaseGraph(s, d))
 
   /** Per-part local clustering coefficient over the co-purchase
     * graph: c(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) — how close a
@@ -1633,7 +1635,7 @@ object ExtensionCatalog {
     * integers and rounds to 6, so both engines rank identically. */
   val gClustering: Q = (s, d) => {
     // the canonical edge set is the session memo (r14): both the
-    // degree aggregate and the triangle kernel (assumeCanonical skips
+    // degree aggregate and the triangle kernel (a canonical set skips
     // its re-canonicalization shuffle) read the memo's checkpoint
     // blocks — the per-run distinct+checkpoint this query used to
     // build is exactly [[coPurchaseEdges]]
@@ -1642,8 +1644,8 @@ object ExtensionCatalog {
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val tri = graft.operators.Graph.triangleCounts(e, "a", "b",
-      assumeCanonical = true)
+    val tri = graft.operators.Graph.triangleCounts(
+      Graph.Undirected.canonical(e, "a", "b"))
     val out = deg.filter(col("deg") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"), col("deg"),
@@ -1666,12 +1668,17 @@ object ExtensionCatalog {
     * exact round-by-round replay. */
   val gLabelprop: Q = (s, d) => {
     val lp = graft.operators.Graph.labelPropagation(
-      coPurchaseEdges(s, d), "pa", "pb", rounds = 4,
-      assumeCanonical = true)
+      coPurchaseGraph(s, d), rounds = 4)
     val sizes = lp.groupBy(col("community")).agg(count(lit(1)).as("comm_size"))
     lp.join(sizes, Seq("community"))
       .select(col("node"), col("community"), col("comm_size"))
   }
+
+  /** The k-NN similarity graph as a raw undirected edge set: each link
+    * predictor canonicalizes it, owns that checkpoint and releases it. */
+  private def knnUndirected(s: SparkSession, d: String): Graph.Undirected =
+    Graph.Undirected(embKnnGraph(s, d).select(col("vec_id"), col("nb_id")),
+      "vec_id", "nb_id")
 
   /** Link prediction over the k-NN similarity graph: the top-100
     * non-adjacent vector pairs by shared-neighbor count
@@ -1680,26 +1687,20 @@ object ExtensionCatalog {
     * Θ(n·k²) — the scale-correct graph for an exact common-neighbor
     * pass (a power-law graph would need hub capping first). */
   val gCommonneigh: Q = (s, d) =>
-    graft.operators.Graph.commonNeighbors(
-      embKnnGraph(s, d).select(col("vec_id"), col("nb_id")),
-      "vec_id", "nb_id", topN = 100)
+    graft.operators.Graph.commonNeighbors(knnUndirected(s, d), topN = 100)
 
   /** Jaccard link prediction over the same k-NN similarity graph:
     * shared-neighborhood FRACTION, all-integer micro scores
     * ([[graft.operators.Graph.jaccardLinks]] — no fp anywhere). */
   val gJaccardLinks: Q = (s, d) =>
-    graft.operators.Graph.jaccardLinks(
-      embKnnGraph(s, d).select(col("vec_id"), col("nb_id")),
-      "vec_id", "nb_id", topN = 100)
+    graft.operators.Graph.jaccardLinks(knnUndirected(s, d), topN = 100)
 
   /** Adamic-Adar link prediction over the same k-NN similarity graph:
     * shared neighbors weighted 1/ln(degree), so selective mutual
     * neighbors outrank hubs ([[graft.operators.Graph.adamicAdar]] —
     * integer micro-unit weights, exact integer pair sums). */
   val gAdamicAdar: Q = (s, d) =>
-    graft.operators.Graph.adamicAdar(
-      embKnnGraph(s, d).select(col("vec_id"), col("nb_id")),
-      "vec_id", "nb_id", topN = 100)
+    graft.operators.Graph.adamicAdar(knnUndirected(s, d), topN = 100)
 
   /** Weighted single-source shortest paths over the co-purchase
     * graph: affinity distance w = 1000000 div co-occurrence count
@@ -1743,8 +1744,7 @@ object ExtensionCatalog {
     * ([[graft.operators.Graph.assortativity]] — exact integer
     * moments, one fp step, single-row readout). */
   val gAssortativity: Q = (s, d) =>
-    graft.operators.Graph.assortativity(coPurchaseEdges(s, d), "pa", "pb",
-      assumeCanonical = true)
+    graft.operators.Graph.assortativity(coPurchaseGraph(s, d))
 
   /** Newman modularity of the BRAND partition over the co-purchase
     * graph: does brand explain which parts sell together, community
@@ -1754,9 +1754,9 @@ object ExtensionCatalog {
     * companion to [[gAssortativity]]'s degree mixing; the window in
     * the final step runs over ≤25 brand rows, never the graph. */
   val gModularity: Q = (s, d) =>
-    graft.operators.Graph.modularity(coPurchaseEdges(s, d), "pa", "pb",
+    graft.operators.Graph.modularity(coPurchaseGraph(s, d),
       Tables.part(s, d).select(col("p_partkey"), col("p_brand")),
-      "p_partkey", "p_brand", assumeCanonical = true)
+      "p_partkey", "p_brand")
 
   /** Dense-core extraction over the co-purchase graph: the k-core at
     * the data-derived threshold k = ⌊0.7·avg degree⌋ ([[graft.operators.Graph.kCore]]
@@ -1764,8 +1764,7 @@ object ExtensionCatalog {
     * so the DuckDB twin replays a fixed over-provisioned round chain
     * and must agree). Every surviving part with its in-core degree. */
   val gKcore: Q = (s, d) =>
-    graft.operators.Graph.kCore(coPurchaseEdges(s, d), "pa", "pb",
-      assumeCanonical = true)
+    graft.operators.Graph.kCore(coPurchaseGraph(s, d))
 
   // ----------------------------------------------------------- time series
 

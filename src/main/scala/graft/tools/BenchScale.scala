@@ -944,8 +944,8 @@ object BenchScale {
             .cast("decimal(38,0)"))).head()
         (r.getLong(0), r.getDecimal(1))
       }
-      val lp = meter.measure(sig(Graph.labelPropagation(edges, "src", "dst",
-        rounds = 4, driverFinishEdges = 0L)))
+      val lp = meter.measure(sig(Graph.labelPropagation(
+        Graph.Undirected(edges, "src", "dst"), rounds = 4, driverFinishEdges = 0L)))
       val (nNodes, h) = lp.value
       println(f"""{"half_edges":$m,"nodes":$nNodes,"lpa_sec":${lp.sec}%.2f,"max_task_sec":${lp.maxTaskSec}%.2f,"sig":$h}""")
       require(nNodes > 0 && nNodes <= n, s"node universe $nNodes outside (0, $n]")
@@ -955,7 +955,8 @@ object BenchScale {
       // the timed receipt printed (r13)
       if (m == sizes.min && m <= 16000000L) {
         val (dn, dh) = sig(Graph.labelPropagation(
-          edges, "src", "dst", rounds = 4, driverFinishEdges = Long.MaxValue))
+          Graph.Undirected(edges, "src", "dst"), rounds = 4,
+          driverFinishEdges = Long.MaxValue))
         require(dn == nNodes && dh == h,
           s"driver twin diverged: ($dn, $dh) != ($nNodes, $h)")
       }
@@ -991,8 +992,8 @@ object BenchScale {
            |         + $K * (1 + pmod(xxhash64('b', id), ${perComm - 1})), $n)
            |  ELSE pmod(xxhash64('c', id), $n) END AS dst""".stripMargin))
       val nodeComm = spark.range(n).selectExpr("id AS node", s"pmod(id, $K) AS community")
-      val mod = meter.measure(Graph.modularity(edges, "src", "dst",
-        nodeComm, "node", "community").collect())
+      val mod = meter.measure(Graph.modularity(
+        Graph.Undirected(edges, "src", "dst"), nodeComm, "node", "community").collect())
       val out = mod.value
       val degSum = out.map(_.getLong(3)).sum
       val q = out.map(_.getDouble(4)).sum
@@ -1077,7 +1078,8 @@ object BenchScale {
         // driverFinishEdges = 0: the ladder's published enumeration
         // receipts stay distributed-path at every rung. The kernel's
         // result is already eagerly checkpointed — no second copy.
-        val counts = Graph.triangleCounts(edges, "a", "b", driverFinishEdges = 0L)
+        val counts = Graph.triangleCounts(
+          Graph.Undirected(edges, "a", "b"), driverFinishEdges = 0L)
         val r = counts.agg(
           sum(when(col("node") < 1000000000L, 1L).otherwise(0L)),
           min(when(col("node") < 1000000000L, col("n_tri"))),
@@ -1114,7 +1116,7 @@ object BenchScale {
     val rungs = sizes.map { m =>
       val (k, edges) = cliqueGraph(spark, "kcore", m, sideDivisor = 8) // mean degree ~8 per side
       val peel = meter.measure {
-        val core = Graph.kCore(edges, "a", "b",
+        val core = Graph.kCore(Graph.Undirected(edges, "a", "b"),
           k = Some(10L), maxRounds = 512, driverFinishEdges = 0L)
         val r = core.agg(
           sum(when(col("node") < 1000000000L, 1L).otherwise(0L)),
@@ -1151,9 +1153,11 @@ object BenchScale {
       val n = math.max(m / 8, 1000L)
       val edges = staged(spark, s"linkpred_$m")(twinGraph(spark, m, n, None))
       val want = (0L until 50L).map(i => (i, n + i)).toSet
-      val jac = meter.measure(Graph.jaccardLinks(edges, "src", "dst", topN = 50)
+      val jac = meter.measure(Graph.jaccardLinks(
+        Graph.Undirected(edges, "src", "dst"), topN = 50)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))))
-      val aa = meter.measure(Graph.adamicAdar(edges, "src", "dst", topN = 50)
+      val aa = meter.measure(Graph.adamicAdar(
+        Graph.Undirected(edges, "src", "dst"), topN = 50)
         .collect().map(r => (r.getLong(0), r.getLong(1))))
       require(jac.value.map(p => (p._1, p._2)).toSet == want &&
         jac.value.forall(_._3 == 1000000L),
@@ -1221,12 +1225,12 @@ object BenchScale {
       val d0 = Graph.droppedWedges(spark)
       // cap 128: ordinary nodes (deg ~56 with the planted neighbors)
       // stay exact centers, hubs (deg n/5 ≥ 25 000) are trimmed
-      val jac = meter.measure(Graph.jaccardLinks(edges, "src", "dst",
-          topN = 50, maxDegree = 128)
+      val jac = meter.measure(Graph.jaccardLinks(
+          Graph.Undirected(edges, "src", "dst"), topN = 50, maxDegree = 128)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))))
       val d1 = Graph.droppedWedges(spark)
-      val aa = meter.measure(Graph.adamicAdar(edges, "src", "dst",
-          topN = 50, maxDegree = 128)
+      val aa = meter.measure(Graph.adamicAdar(
+          Graph.Undirected(edges, "src", "dst"), topN = 50, maxDegree = 128)
         .collect().map(r => (r.getLong(0), r.getLong(1))))
       val d2 = Graph.droppedWedges(spark)
       require(jac.value.map(p => (p._1, p._2)).toSet == want &&

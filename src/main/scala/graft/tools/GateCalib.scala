@@ -69,9 +69,11 @@ object GateCalib {
             pmod(xxhash64(col("src"), col("dst")), lit(1000L)) + 1L),
           "src", "dst", "w", seeds, maxRounds = 30, driverFinishEdges = g)),
         "labelprop" -> ((g: Long) => Graph.labelPropagation(
-          pairs(spark, m), "a", "b", rounds = 4, driverFinishEdges = g)),
+          Graph.Undirected(pairs(spark, m), "a", "b"), rounds = 4,
+          driverFinishEdges = g)),
         "kcore" -> ((g: Long) => Graph.kCore(
-          pairs(spark, m), "a", "b", maxRounds = 40, driverFinishEdges = g)),
+          Graph.Undirected(pairs(spark, m), "a", "b"), maxRounds = 40,
+          driverFinishEdges = g)),
         "hits" -> ((g: Long) => Graph.hitsMicro(
           directed(spark, m), "src", "dst", driverFinishEdges = g)),
         "components" -> ((g: Long) => graft.operators.Components
@@ -81,7 +83,7 @@ object GateCalib {
         // O(m^1.5) single-threaded, so the crossover needs its own
         // (hub-bearing substrate) measurement, not the linear kernels'
         "triangles" -> ((g: Long) => Graph.triangleCounts(
-          pairs(spark, m), "a", "b", driverFinishEdges = g)))
+          Graph.Undirected(pairs(spark, m), "a", "b"), driverFinishEdges = g)))
     }
 
     // optional 2nd arg: comma-separated kernel-name filter

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, lit, max}
 
 import graft.streaming.SparkSpec
@@ -138,11 +140,11 @@ class GraphSpec extends SparkSpec {
       // feed the kernel messy input: duplicates, reversed copies, and a
       // self-loop — canonicalization must absorb all three
       val messy = und ++ und.take(5) ++ und.map(_.swap) ++ Seq((3L, 3L))
-      val got = Graph.triangleCounts(messy.toDF("a", "b"), "a", "b")
+      val got = Graph.triangleCounts(Graph.Undirected(messy.toDF("a", "b"), "a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // distributed path (gate 0) must agree exactly with the
       // driver-finish path the small fixture takes by default
-      val dist = Graph.triangleCounts(messy.toDF("a", "b"), "a", "b",
+      val dist = Graph.triangleCounts(Graph.Undirected(messy.toDF("a", "b"), "a", "b"),
           driverFinishEdges = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == got, s"driver/distributed paths diverge (trial $trial)")
@@ -177,7 +179,7 @@ class GraphSpec extends SparkSpec {
     try {
       val und = (for { a <- 0 until 12; b <- a + 1 until 12 } yield
         (a.toLong, b.toLong)).filter { case (a, b) => (a + b) % 3 != 0 }
-      val out = Graph.triangleCounts(und.toDF("a", "b"), "a", "b",
+      val out = Graph.triangleCounts(Graph.Undirected(und.toDF("a", "b"), "a", "b"),
         driverFinishEdges = 0L)
       assert(out.collect().nonEmpty)
       // listener delivery is async — poll briefly for the wedge plan
@@ -197,8 +199,8 @@ class GraphSpec extends SparkSpec {
     // star K1,5: every wedge goes through the hub, no triangle — the
     // shape the degree orientation exists for (hub gets no out-edges)
     val star = (2L to 6L).map(i => (1L, i))
-    assert(Graph.triangleCounts(star.toDF("a", "b"), "a", "b").isEmpty)
-    val one = Graph.triangleCounts((star :+ (2L, 3L)).toDF("a", "b"), "a", "b")
+    assert(Graph.triangleCounts(Graph.Undirected(star.toDF("a", "b"), "a", "b")).isEmpty)
+    val one = Graph.triangleCounts(Graph.Undirected((star :+ (2L, 3L)).toDF("a", "b"), "a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
@@ -224,7 +226,7 @@ class GraphSpec extends SparkSpec {
   private def runLpa(und: Seq[(Long, Long)], rounds: Int,
                      gate: Long): Map[Long, Long] = {
     import spark.implicits._
-    Graph.labelPropagation(und.toDF("a", "b"), "a", "b", rounds,
+    Graph.labelPropagation(Graph.Undirected(und.toDF("a", "b"), "a", "b"), rounds,
         driverFinishEdges = gate)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
@@ -273,7 +275,7 @@ class GraphSpec extends SparkSpec {
   private def runCore(und: Seq[(Long, Long)], k: Long, gate: Long,
                       maxRounds: Int = 12): Map[Long, Long] = {
     import spark.implicits._
-    Graph.kCore(und.toDF("a", "b"), "a", "b", k = Some(k),
+    Graph.kCore(Graph.Undirected(und.toDF("a", "b"), "a", "b"), k = Some(k),
         maxRounds = maxRounds, driverFinishEdges = gate)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
@@ -373,7 +375,7 @@ class GraphSpec extends SparkSpec {
     // 1-2, 2-3, 1-4, 4-3, 1-3: the one non-adjacent pair is (2,4),
     // sharing {1,3}; every adjacent pair is excluded no matter its count
     val und = Seq((1L, 2L), (2L, 3L), (1L, 4L), (4L, 3L), (1L, 3L))
-    val got = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b")
+    val got = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((2L, 4L, 2L)), s"got $got")
   }
@@ -392,7 +394,7 @@ class GraphSpec extends SparkSpec {
       c = (adj(i) & adj(j)).size if c > 0
     } yield (i, j, c.toLong))
       .sortBy { case (a, b, c) => (-c, a, b) }.take(7)
-    val got = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b", topN = 7)
+    val got = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == want, s"got $got want $want")
   }
@@ -405,7 +407,7 @@ class GraphSpec extends SparkSpec {
     // the ranking on the rare-neighbor weight.
     val und = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (0L, 5L),
       (0L, 6L), (6L, 1L), (6L, 2L))
-    val got = Graph.adamicAdar(und.toDF("a", "b"), "a", "b", topN = 10)
+    val got = Graph.adamicAdar(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     def w(deg: Int): Long = new java.math.BigDecimal(1000000 / math.log(deg.toDouble))
@@ -432,7 +434,7 @@ class GraphSpec extends SparkSpec {
     // pair in this complete-bipartite graph is a perfect-overlap pair
     // scoring exactly 10^6, ordered by (a, b)
     val twins = Seq((4L, 1L), (4L, 2L), (4L, 3L), (5L, 1L), (5L, 2L), (5L, 3L))
-    val gotTwins = Graph.jaccardLinks(twins.toDF("a", "b"), "a", "b", topN = 10)
+    val gotTwins = Graph.jaccardLinks(Graph.Undirected(twins.toDF("a", "b"), "a", "b"), topN = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
     assert(gotTwins == Seq((1L, 2L, 1000000L), (1L, 3L, 1000000L),
       (2L, 3L, 1000000L), (4L, 5L, 1000000L)), s"got $gotTwins")
@@ -449,7 +451,7 @@ class GraphSpec extends SparkSpec {
     } yield (i, j, c.toLong,
       1000000L * c / (adj(i).size + adj(j).size - c)))
       .sortBy { case (a, b, _, s) => (-s, a, b) }.take(7)
-    val got = Graph.jaccardLinks(und.toDF("a", "b"), "a", "b", topN = 7)
+    val got = Graph.jaccardLinks(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got == want, s"got $got want $want")
@@ -458,7 +460,7 @@ class GraphSpec extends SparkSpec {
   test("assortativity: star is perfectly disassortative, cycle undefined, random matches reference") {
     import spark.implicits._
     def run(und: Seq[(Long, Long)]): (Long, Option[Double]) = {
-      val r = Graph.assortativity(und.toDF("a", "b"), "a", "b").collect().head
+      val r = Graph.assortativity(Graph.Undirected(und.toDF("a", "b"), "a", "b")).collect().head
       (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
     }
     // star: every edge links deg-5 hub to a deg-1 leaf → r = −1
@@ -502,7 +504,7 @@ class GraphSpec extends SparkSpec {
       zs = (adj(i) & adj(j)).filter(z => adj(z).size >= 2) if zs.nonEmpty
     } yield (i, j, zs.size.toLong, zs.toSeq.map(z => w(adj(z).size)).sum))
       .sortBy { case (a, b, _, s) => (-s, a, b) }.take(7)
-    val got = Graph.adamicAdar(und.toDF("a", "b"), "a", "b", topN = 7)
+    val got = Graph.adamicAdar(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got == want, s"got $got want $want")
@@ -612,9 +614,9 @@ class GraphSpec extends SparkSpec {
     val und = Seq.fill(40)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
       .filter { case (a, b) => a != b }
     val before = Graph.droppedWedges(spark)
-    val exact = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b", topN = 15)
+    val exact = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 15)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val capped = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b",
+    val capped = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"),
         topN = 15, maxDegree = 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(capped == exact)
@@ -635,14 +637,14 @@ class GraphSpec extends SparkSpec {
       c = (adj(i) & adj(j)).count(z => cap <= 0 || deg(z) <= cap) if c > 0
     } yield (i, j, c.toLong)).sortBy { case (a, b, c) => (-c, a, b) }
     val before = Graph.droppedWedges(spark)
-    val got = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b",
+    val got = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"),
         topN = 100, maxDegree = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == wantCN(3), s"got $got want ${wantCN(3)}")
     assert(Graph.droppedWedges(spark) - before == 15L,
       "dropped-wedge count must be deg*(deg-1)/2 of the one hub")
     // the uncapped kernel still sees the hub's wedges
-    val exact = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b", topN = 100)
+    val exact = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(exact == wantCN(0) && exact != got)
   }
@@ -656,7 +658,7 @@ class GraphSpec extends SparkSpec {
     def w(d: Int): Long = new java.math.BigDecimal(1000000 / math.log(d.toDouble))
       .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
     val before = Graph.droppedWedges(spark)
-    val got = Graph.adamicAdar(und.toDF("a", "b"), "a", "b",
+    val got = Graph.adamicAdar(Graph.Undirected(und.toDF("a", "b"), "a", "b"),
         topN = 10, maxDegree = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
@@ -703,7 +705,7 @@ class GraphSpec extends SparkSpec {
       i <- nodes; j <- nodes if i < j && !adj(i).contains(j)
       c = (adj(i) & adj(j)).size if c > 0
     } yield (i, j, c.toLong)).sortBy { case (a, b, c) => (-c, a, b) }.take(50)
-    val got = Graph.commonNeighbors(und.toDF("a", "b"), "a", "b", topN = 50)
+    val got = Graph.commonNeighbors(Graph.Undirected(und.toDF("a", "b"), "a", "b"), topN = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == want, "the uncapped default must stay exact on a hub graph")
     // the warning DECISION is pure and pinned here (the integration
@@ -747,7 +749,7 @@ class GraphSpec extends SparkSpec {
     val und = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (0L, 5L),
       (9L, 1L), (9L, 2L))
     val before = Graph.droppedWedges(spark)
-    val got = Graph.jaccardLinks(und.toDF("a", "b"), "a", "b",
+    val got = Graph.jaccardLinks(Graph.Undirected(und.toDF("a", "b"), "a", "b"),
         topN = 10, maxDegree = 3)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -763,7 +765,7 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     def run(und: Seq[(Long, Long)], comm: Map[Long, String])
         : Map[String, (Long, Long, Long, Double)] =
-      Graph.modularity(und.toDF("a", "b"), "a", "b",
+      Graph.modularity(Graph.Undirected(und.toDF("a", "b"), "a", "b"),
         comm.toSeq.toDF("node", "c"), "node", "c")
         .collect()
         .map(r => r.getString(0) ->
@@ -809,5 +811,73 @@ class GraphSpec extends SparkSpec {
       c -> ((nodes.size.toLong, intra, degC, q))
     }.toMap
     assert(run(es, comm) == want)
+  }
+
+  /** Every undirected kernel (the link predictors also capped), at
+    * `gate` where it has one and at its default gate for None. */
+  private def undirectedKernels(gate: Option[Long]): Seq[(String, Graph.Undirected => DataFrame)] = {
+    import spark.implicits._
+    val comm = (1L to 7L).map(n => (n, n % 2)).toDF("node", "community")
+    def gated(g: Graph.Undirected, default: Graph.Undirected => DataFrame,
+              at: (Graph.Undirected, Long) => DataFrame) =
+      gate.fold(default(g))(at(g, _))
+    Seq(
+      "labelPropagation" -> (g => gated(g, Graph.labelPropagation(_),
+        (g, x) => Graph.labelPropagation(g, driverFinishEdges = x))),
+      "kCore" -> (g => gated(g, Graph.kCore(_),
+        (g, x) => Graph.kCore(g, driverFinishEdges = x))),
+      "triangleCounts" -> (g => gated(g, Graph.triangleCounts(_),
+        (g, x) => Graph.triangleCounts(g, driverFinishEdges = x))),
+      "commonNeighbors" -> (g => Graph.commonNeighbors(g)),
+      "commonNeighbors capped" -> (g => Graph.commonNeighbors(g, maxDegree = 2)),
+      "adamicAdar" -> (g => Graph.adamicAdar(g)),
+      "adamicAdar capped" -> (g => Graph.adamicAdar(g, maxDegree = 2)),
+      "jaccardLinks" -> (g => Graph.jaccardLinks(g)),
+      "jaccardLinks capped" -> (g => Graph.jaccardLinks(g, maxDegree = 2)),
+      "assortativity" -> (g => Graph.assortativity(g)),
+      "modularity" -> (g => Graph.modularity(g, comm, "node", "community")))
+  }
+
+  private def persistentRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of the checkpointed RDDs `df`'s plan reads. */
+  private def readRddIds(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collect { case l: LogicalRDD => l.rdd.id }.toSet
+
+  for (gate <- Seq(Some(0L), None)) {
+    val at = gate.fold("the default gate")(g => s"gate $g")
+    test(s"undirected kernels at $at: a canonical set stays persisted; " +
+      "a raw set leaves only the output's blocks") {
+      import spark.implicits._
+      // K4 on 1..4 with the tail 4-5-6-7
+      val canon = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+        (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))
+      val raw = canon ++ canon.map(_.swap) ++ canon.take(3) :+ ((3L, 3L))
+      for ((name, run) <- undirectedKernels(gate)) {
+        val held = canon.toDF("a", "b").localCheckpoint()
+        val heldIds = readRddIds(held)
+        val fromHeld = run(Graph.Undirected.canonical(held, "a", "b")).collect()
+        assert(heldIds.subsetOf(persistentRddIds),
+          s"$name released the caller's canonical set")
+        assert(held.count() == canon.size)
+        Checkpoints.unpersist(held)
+
+        val before = persistentRddIds
+        val out = run(Graph.Undirected(raw.toDF("a", "b"), "a", "b"))
+        val left = persistentRddIds -- before
+        assert(left.subsetOf(readRddIds(out)),
+          s"$name left persistent RDDs its output does not read: ${left -- readRddIds(out)}")
+        assert(out.collect().toSeq.map(_.toString).sorted ==
+          fromHeld.toSeq.map(_.toString).sorted, s"$name: raw and canonical sets disagree")
+        Checkpoints.unpersist(out)
+      }
+    }
+  }
+
+  test("one undirected canonicalization and one driver-finish gate call in src/main") {
+    assert(SourceSites("""greatest\(col\(""").filter(_._1 == "Graph.scala") ==
+      Vector("Graph.scala" -> "Undirected"))
+    assert(SourceSites("assumeCanonical").isEmpty)
+    assert(SourceSites("""DriverFinish\.take\(""").forall(_._2 == "DriverFinish"))
   }
 }

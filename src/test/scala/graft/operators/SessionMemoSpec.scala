@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -70,20 +66,7 @@ class SessionMemoSpec extends SparkSpec {
 
   test("AtomicReference and per-context accumulators in src/main: only " +
     "SessionMemo and ContextCounter") {
-    val typeName =
-      """^\s*(?:(?:private|final|sealed|abstract|case)(?:\[\w+\])?\s+)*(?:class|object|trait)\s+(\w+)""".r.unanchored
-    val files = Files.walk(Paths.get("src/main/scala")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toVector
-    // (file, enclosing class/object) of every match of `pattern`
-    def sites(pattern: String) = files.flatMap { f =>
-      val text = Files.readString(f)
-      val lines = text.split("\n", -1).toVector
-      pattern.r.findAllMatchIn(text).map { m =>
-        val line = text.substring(0, m.start).count(_ == '\n')
-        f.getFileName.toString ->
-          (line to 0 by -1).map(lines).collectFirst { case typeName(n) => n }.getOrElse("?")
-      }
-    }.distinct.sorted
+    def sites(pattern: String) = SourceSites(pattern).distinct.sorted
     assert(sites("AtomicReference") == Vector("Checkpoints.scala" -> "SessionMemo"))
     assert(sites("""longAccumulator\(""") ==
       Vector("AccumulateNote.scala" -> "ContextCounter"))
