@@ -1,25 +1,71 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import scala.util.control.NonFatal
 
-/** THE checkpoint-release helper (one definition, four former copies):
-  * free a superseded localCheckpoint's storage blocks now instead of
-  * waiting for the ContextCleaner to notice the dropped reference
-  * (ADVICE r4). The checkpointed plan is a LogicalRDD over the
-  * persisted internal-row RDD — unpersisting it releases executor
-  * storage immediately; the released frame becomes unusable, which is
-  * the point for single-slot memo replacement.
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** THE release rule for every frame a call materializes for itself.
+  *
+  * A kernel opens one [[Checkpoints.scoped]] block and makes each
+  * intermediate through its [[Checkpoints.Scope]]: `s.checkpoint(df)`
+  * (a localCheckpoint), `s.cache(df)` (a persist), or `s.own(df)` for
+  * a frame a callee materialized. A round loop frees the frame a round
+  * supersedes at once with `s.release(prev)`; when the block exits, by
+  * return or by throw, the scope frees every frame it still owns
+  * except the Dataset the block returns. A result that is a view over
+  * an owned frame is built outside the block, from the owned frame the
+  * block returns. Frames that outlive a call belong to a
+  * [[SessionMemo]], never to a scope.
+  *
+  * Freeing is immediate, not left to the ContextCleaner (ADVICE r4):
+  * a checkpoint's plan is a LogicalRDD over a persisted internal-row
+  * RDD, and a cached frame is a CacheManager entry; [[unpersist]]
+  * drops either, and the released frame becomes unusable.
   *
   * Best-effort by contract: the frame may belong to an already-STOPPED
-  * SparkSession (JVM-global memos, per-session keys) — its blocks died
-  * with that context, and a failed unpersist must never fail the
-  * caller. */
+  * SparkSession (JVM-global memos, per-session keys), whose blocks
+  * died with that context, so a non-fatal release failure never fails
+  * the caller. Fatal errors and interrupts propagate. */
 object Checkpoints {
+
+  /** Frees `df`'s storage now: a checkpoint's RDD blocks, or its cache
+    * entry. A no-op for a frame that is neither. */
   def unpersist(df: Dataset[_]): Unit =
     try df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    } catch { case _: Throwable => () }
+      case l: LogicalRDD => l.rdd.unpersist(false)
+      case _ => if (df.storageLevel != StorageLevel.NONE) df.unpersist(false)
+    } catch { case NonFatal(_) => () }
+
+  /** Runs `body` with a fresh [[Scope]] and frees what it owns on exit,
+    * except the returned Dataset. */
+  def scoped[T](body: Scope => T): T = {
+    val s = new Scope
+    var kept: Any = null
+    try { val out = body(s); kept = out; out }
+    finally s.owned.foreach(df => if (!(df eq kept.asInstanceOf[AnyRef])) unpersist(df))
+  }
+
+  /** The frames one [[scoped]] block owns, by identity. */
+  final class Scope private[Checkpoints] {
+    private[Checkpoints] val owned = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+
+    /** Takes ownership of a frame a callee materialized. */
+    def own[T](df: Dataset[T]): Dataset[T] = { owned += df; df }
+
+    def checkpoint[T](df: Dataset[T], eager: Boolean = true): Dataset[T] =
+      own(df.localCheckpoint(eager))
+
+    def cache[T](df: Dataset[T]): Dataset[T] = own(df.persist())
+
+    /** Frees an owned frame now (a superseded round); a frame the scope
+      * does not own, such as a caller's, is left alone. */
+    def release(df: Dataset[_]): Unit = {
+      val i = owned.indexWhere(_ eq df)
+      if (i >= 0) unpersist(owned.remove(i))
+    }
+  }
 }
 
 /** THE single-slot session memo (one definition, eleven former
@@ -29,8 +75,8 @@ object Checkpoints {
   * or data changing under the same path misses and rebuilds.
   *
   * On replacement a `DataFrame` value that is not the incoming
-  * instance goes through [[Checkpoints.unpersist]] (a no-op unless its
-  * plan is a checkpoint's LogicalRDD); any other value (driver-held
+  * instance goes through [[Checkpoints.unpersist]] (a no-op unless it
+  * is a checkpoint or a cached frame); any other value (driver-held
   * centroids, codebooks) is simply dropped. The replaced frame becomes
   * unusable, which is the point: readers always fetch the current
   * slot.

@@ -67,51 +67,59 @@ object Components {
     // whole Jaccard pipeline re-ran 4× per round) — materialize once,
     // then every branch reads the cached blocks
     val t0 = System.nanoTime()
-    var e = canon(edges.select(col(aCol).as("u"), col(bCol).as("v")))
-      .localCheckpoint()
-    var prev = checksum(e)
-    val initEdges = prev._1
-    val longIds = e.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    // driverFinishEdges > 0: passing 0 forces the distributed rounds
-    // even on an empty edge set (the force-distributed contract)
-    if (longIds && DriverFinish.chooses(driverFinishEdges, initEdges)) {
-      val out = driverFinish(edges.sparkSession, e)
-      // the collect consumed the checkpoint - free its blocks now
-      Checkpoints.unpersist(e)
-      System.err.println(
-        s"[components] driver finish: $initEdges edges <= $driverFinishEdges, " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      return out
+    Checkpoints.scoped { s =>
+      val e0 = s.checkpoint(canon(edges.select(col(aCol).as("u"), col(bCol).as("v"))))
+      val init = checksum(e0)
+      val longIds = e0.schema.fields.forall(
+        _.dataType == org.apache.spark.sql.types.LongType)
+      // driverFinishEdges > 0: passing 0 forces the distributed rounds
+      // even on an empty edge set (the force-distributed contract)
+      if (longIds && DriverFinish.chooses(driverFinishEdges, init._1)) {
+        val out = driverFinish(edges.sparkSession, e0)
+        System.err.println(
+          s"[components] driver finish: ${init._1} edges <= $driverFinishEdges, " +
+            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
+        out
+      } else {
+        // the rounds' own scope returns the last round's edge
+        // checkpoint; the labeling below is a view over it
+        val forest = Checkpoints.scoped { r =>
+          var e = e0
+          var prev = init
+          var rounds = 0
+          var converged = false
+          while (!converged && rounds < maxRounds) {
+            // Size each round's exchanges to the CURRENT edge count, not
+            // the session default: the corpus-wide shuffle width (and its
+            // AQE coalescing floor, pinned high to keep explosive joins
+            // parallel) makes tiny round shuffles pay full task-scheduling
+            // width — and the first star round typically collapses a
+            // clique-heavy near-dup pair set by orders of magnitude
+            // (measured 2.7M pairs → 4.1k star edges at sf0.1), so later
+            // rounds want a far narrower width than round 1.
+            val n = if (numPartitions > 0) numPartitions
+              else math.max(8, math.min(4096, (prev._1 / 50000L).toInt + 1))
+            val superseded = e
+            e = r.checkpoint(smallStar(largeStar(e, n), n))
+            if (superseded eq e0) s.release(e0) else r.release(superseded)
+            val cur = checksum(e)
+            converged = cur == prev
+            prev = cur
+            rounds += 1
+          }
+          require(converged, s"connectedComponents: no fixpoint after $maxRounds rounds")
+          System.err.println(
+            s"[components] converged in $rounds rounds " +
+              s"(edges ${init._1} -> ${prev._1}, " +
+              f"${(System.nanoTime() - t0) / 1e9}%.2f s)")
+          e
+        }
+        // the fixpoint is a star forest: every edge is (child > root);
+        // the roots themselves appear only on the v side
+        forest.select(col("u").as("node"), col("v").as("component"))
+          .union(forest.select(col("v").as("node"), col("v").as("component")).distinct())
+      }
     }
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      // Size each round's exchanges to the CURRENT edge count, not the
-      // session default: the corpus-wide shuffle width (and its AQE
-      // coalescing floor, pinned high to keep explosive joins
-      // parallel) makes tiny round shuffles pay full task-scheduling
-      // width — and the first star round typically collapses a
-      // clique-heavy near-dup pair set by orders of magnitude
-      // (measured 2.7M pairs → 4.1k star edges at sf0.1), so later
-      // rounds want a far narrower width than round 1.
-      val n = if (numPartitions > 0) numPartitions
-        else math.max(8, math.min(4096, (prev._1 / 50000L).toInt + 1))
-      e = smallStar(largeStar(e, n), n).localCheckpoint()
-      val cur = checksum(e)
-      converged = cur == prev
-      prev = cur
-      rounds += 1
-    }
-    require(converged, s"connectedComponents: no fixpoint after $maxRounds rounds")
-    System.err.println(
-      s"[components] converged in $rounds rounds " +
-        s"(edges $initEdges -> ${prev._1}, " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s)")
-    // the fixpoint is a star forest: every edge is (child > root); the
-    // roots themselves appear only on the v side
-    e.select(col("u").as("node"), col("v").as("component"))
-      .union(e.select(col("v").as("node"), col("v").as("component")).distinct())
   }
 
   /** Bounded-collect union-find finish: path-compressed find, union

@@ -88,13 +88,14 @@ object EventAnalytics {
     * small — a TPC-H order has ≤ 7 lines); item counts join onto the
     * PRUNED pair stream; N is a one-row broadcast. */
   def associationRules(df: DataFrame, basketCol: String, itemCol: String,
-                       minCount: Long = 5L, topK: Int = 20): DataFrame = {
+                       minCount: Long = 5L, topK: Int = 20): DataFrame =
+    Checkpoints.scoped { s =>
     require(minCount >= 1 && topK >= 1)
     // materialized ONCE: the distinct basket-item set feeds N, the
     // item counts, and the pair stream
-    val lp = df.select(col(basketCol).cast("long").as("bk"),
+    val lp = s.checkpoint(df.select(col(basketCol).cast("long").as("bk"),
         col(itemCol).cast("long").as("it"))
-      .distinct().localCheckpoint()
+      .distinct())
     val n = lp.agg(countDistinct(col("bk")).as("nb"))
     val ic = lp.groupBy(col("it")).agg(count(lit(1)).as("c1"))
     val pairs = lp.select(col("bk"), col("it").as("pa"))
@@ -102,7 +103,7 @@ object EventAnalytics {
       .filter(col("pa") < col("pb"))
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("cab"))
       .filter(col("cab") >= minCount)
-    val out = pairs
+    pairs
       .join(ic.select(col("it").as("pa"), col("c1").as("ca")), Seq("pa"))
       .join(ic.select(col("it").as("pb"), col("c1").as("cb")), Seq("pb"))
       .crossJoin(broadcast(n))
@@ -114,8 +115,6 @@ object EventAnalytics {
       .orderBy(col("lift_micro").desc, col("pa"), col("pb"))
       .limit(topK)
       .localCheckpoint()
-    Checkpoints.unpersist(lp)
-    out
   }
 
   def retention(df: DataFrame, userCol: String, tsCol: String): DataFrame = {

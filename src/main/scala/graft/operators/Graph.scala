@@ -52,8 +52,8 @@ import org.apache.spark.sql.functions._
   *  - `Undirected(edges, aCol, bCol)`: any pairs (duplicates, reversed
   *    copies, self-loops). The kernel canonicalizes them ({a, b} as
   *    a < b, self-loops out, distinct); when its policy materializes
-  *    that set, the kernel checkpoints it, owns it and releases it
-  *    before it returns or throws.
+  *    that set, the kernel checkpoints it on its release scope
+  *    ([[Checkpoints.scoped]]).
   *  - `Undirected.canonical(frame, aCol, bCol)`: the caller's frame is
   *    ALREADY canonical and materialized (a memoized checkpoint, such
   *    as the catalog's co-purchase edge set). Kernels read its blocks
@@ -77,11 +77,9 @@ object Graph {
                                   bCol: String, isCanonical: Boolean) {
     private[Graph] def spark: SparkSession = edges.sparkSession
 
-    /** Runs `body` over this call's canonical (a, b) set, checkpointed
-      * when `materialize` and the set is not caller-canonical, and
-      * releases that checkpoint when `body` returns or throws (or
-      * earlier, at `View.release`). */
-    private[Graph] def use[T](materialize: Boolean)(body: Undirected.View => T): T = {
+    /** This call's canonical (a, b) set, checkpointed on `s` when
+      * `materialize` and the set is not caller-canonical. */
+    private[Graph] def view(s: Checkpoints.Scope, materialize: Boolean): Undirected.View = {
       val ab =
         if (isCanonical)
           edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
@@ -90,9 +88,7 @@ object Graph {
             greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
           .filter(col("a") < col("b"))
           .distinct()
-      val owned = materialize && !isCanonical
-      val view = new Undirected.View(if (owned) ab.localCheckpoint() else ab, owned)
-      try body(view) finally view.release()
+      new Undirected.View(if (materialize && !isCanonical) s.checkpoint(ab) else ab)
     }
   }
 
@@ -104,10 +100,7 @@ object Graph {
       new Undirected(frame, aCol, bCol, isCanonical = true)
 
     /** One kernel call's canonical set: `ab` holds (a, b) longs, a < b. */
-    private[Graph] final class View(val ab: DataFrame, owned: Boolean) {
-      /** Frees the call's own checkpoint early; never a caller's set. */
-      def release(): Unit = if (owned) Checkpoints.unpersist(ab)
-
+    private[Graph] final class View(val ab: DataFrame) {
       /** Both directions as (`s`, `d`): every node appears as `s`. */
       def sym(s: String = "s", d: String = "d"): DataFrame =
         ab.select(col("a").as(s), col("b").as(d))
@@ -130,18 +123,18 @@ object Graph {
     }
   }
 
-  /** Pins `canChangeCachedPlanOutputPartitioning=false` around `body`:
-    * a cached frame's partitioning is usable by the outer planner only
+  /** A round loop's release scope, with
+    * `canChangeCachedPlanOutputPartitioning=false` pinned around it: a
+    * cached frame's partitioning is usable by the outer planner only
     * when AQE is barred from re-shaping the cached plan's output
     * (Spark 4 default allows it), AND the cache is materialized before
     * the consuming join is planned — both halves handled by callers
     * building their edge cache through this. */
-  private def withStableCachePartitioning[T](spark: org.apache.spark.sql.SparkSession)
-                                            (body: => T): T = {
+  private def roundScope[T](spark: SparkSession)(body: Checkpoints.Scope => T): T = {
     val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
+    try Checkpoints.scoped(body) finally spark.conf.set(key, prev)
   }
 
   /** Hub cap for the wedge link predictors (VERDICT r9 #3): the wedge
@@ -183,28 +176,26 @@ object Graph {
                        scored: (DataFrame, DataFrame) => DataFrame =
                          (wed, _) => wed): DataFrame = {
     require(topN >= 1)
-    g.use(materialize = true) { c =>
+    Checkpoints.scoped { s =>
+      val c = g.view(s, materialize = true)
       val symAll = c.sym()
       val degLazy = symAll.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-      val degOpt = if (maxDegree <= 0) None else Some(degLazy.localCheckpoint())
-      val deg = degOpt.getOrElse(degLazy)
-      try {
-        if (maxDegree > 0) noteDroppedWedges(deg, maxDegree, kernel)
-        else warnWedgeSkew(symAll, kernel)
-        val ws = centers(symAll, deg)
-        val wed = ws.select(Seq(col("s"), col("d").as("xa")) ++ carry.map(col): _*)
-          .join(ws.select(col("s"), col("d").as("xb")), Seq("s"))
-          .filter(col("xa") < col("xb"))
-          .groupBy(col("xa"), col("xb"))
-          .agg(pairAggs.head, pairAggs.tail: _*)
-        val und = c.ab
-        scored(wed, deg)
-          .join(und, wed("xa") === und("a") && wed("xb") === und("b"), "left_anti")
-          .select(Seq(col("xa").as("a"), col("xb").as("b")) ++ outCols: _*)
-          .orderBy(col(rank).desc, col("a"), col("b"))
-          .limit(topN)
-          .localCheckpoint()
-      } finally degOpt.foreach(Checkpoints.unpersist)
+      val deg = if (maxDegree <= 0) degLazy else s.checkpoint(degLazy)
+      if (maxDegree > 0) noteDroppedWedges(deg, maxDegree, kernel)
+      else warnWedgeSkew(symAll, kernel)
+      val ws = centers(symAll, deg)
+      val wed = ws.select(Seq(col("s"), col("d").as("xa")) ++ carry.map(col): _*)
+        .join(ws.select(col("s"), col("d").as("xb")), Seq("s"))
+        .filter(col("xa") < col("xb"))
+        .groupBy(col("xa"), col("xb"))
+        .agg(pairAggs.head, pairAggs.tail: _*)
+      val und = c.ab
+      scored(wed, deg)
+        .join(und, wed("xa") === und("a") && wed("xb") === und("b"), "left_anti")
+        .select(Seq(col("xa").as("a"), col("xb").as("b")) ++ outCols: _*)
+        .orderBy(col(rank).desc, col("a"), col("b"))
+        .limit(topN)
+        .localCheckpoint()
     }
   }
 
@@ -317,7 +308,7 @@ object Graph {
                     validateUniverse: Boolean = true,
                     driverFinishEdges: Long = 4000000L): DataFrame = {
     require(iterations >= 1 && dampingPct > 0 && dampingPct < 100)
-    withStableCachePartitioning(edges.sparkSession) {
+    roundScope(edges.sparkSession) { s =>
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     // ADAPTIVE DRIVER FINISH (the Components / Bpe pattern): when the
@@ -352,36 +343,22 @@ object Graph {
     // snapshots UnknownPartitioning before the plan finalizes, and
     // every round re-shuffles the static edges (plan-gated in
     // GraphSpec; this count doubles as the materializing action).
-    val ed = e.join(deg, "src").repartition(col("src")).persist()
+    val ed = s.cache(e.join(deg, "src").repartition(col("src")))
     ed.count()
-    val nodes = ed.select(col("src").as("node")).distinct().localCheckpoint()
+    val nodes = s.checkpoint(ed.select(col("src").as("node")).distinct())
     // Node-universe contract, ENFORCED (was doc-only): a dst that
     // never appears as a src is a dangling sink whose rank mass would
     // silently leak every round. One anti-join over the already-cached
     // edge frame, bounded by limit 1; callers whose edge list is
     // symmetrized by construction may opt out to skip the pass.
     if (validateUniverse) {
-      // unpersist on the throw path too: a caller catching the require
-      // (validation is FOR callers that might fail it) must not leak
-      // the |E|-row cached frame — NOR the nodes checkpoint's blocks
-      // (a LogicalRDD whose storage outlives the frame) — for the
-      // session's lifetime
-      def release(): Unit = {
-        ed.unpersist()
-        Checkpoints.unpersist(nodes)
-      }
-      val dangling =
-        try ed.select(col("dst").as("node")).distinct()
-          .join(nodes, Seq("node"), "left_anti").limit(1).collect()
-        catch { case t: Throwable => release(); throw t }
-      if (dangling.nonEmpty) {
-        release()
-        throw new IllegalArgumentException(
-          s"pageRankMicro: node ${dangling.head.getLong(0)} appears as a " +
-            "destination but never as a source (dangling sink, out of " +
-            "contract - its rank mass would silently leak). Symmetrize " +
-            "the edge list or pass validateUniverse=false deliberately.")
-      }
+      val dangling = ed.select(col("dst").as("node")).distinct()
+        .join(nodes, Seq("node"), "left_anti").limit(1).collect()
+      if (dangling.nonEmpty) throw new IllegalArgumentException(
+        s"pageRankMicro: node ${dangling.head.getLong(0)} appears as a " +
+          "destination but never as a source (dangling sink, out of " +
+          "contract - its rank mass would silently leak). Symmetrize " +
+          "the edge list or pass validateUniverse=false deliberately.")
     }
     val teleportMicro = (100L - dampingPct) * 10000L
     var ranks = nodes.withColumn("r", lit(1000000L))
@@ -398,14 +375,12 @@ object Graph {
       // plan stays constant-size. (A lazy-checkpoint variant deferring
       // all rounds into one action was measured NOT faster — the wall
       // is the computation, not the per-round job barrier.)
-      ranks = nodes.join(contribs, col("node") === col("dst"), "left")
+      val prev = ranks
+      ranks = s.checkpoint(nodes.join(contribs, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(teleportMicro) + coalesce(col("cs"), lit(0L))).as("r"))
-        .localCheckpoint()
+          (lit(teleportMicro) + coalesce(col("cs"), lit(0L))).as("r")))
+      s.release(prev)
     }
-    // the returned ranks are checkpoint-materialized — the cached
-    // edge frame is no longer referenced
-    ed.unpersist()
     ranks
     }
     }
@@ -468,11 +443,11 @@ object Graph {
                    seeds: DataFrame, maxHops: Int = 4,
                    driverFinishEdges: Long = 4000000L): DataFrame = {
     require(maxHops >= 1)
-    withStableCachePartitioning(edges.sparkSession) {
+    roundScope(edges.sparkSession) { s =>
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val sd = seeds.toDF("node").select(col("node").cast("long"))
-      .distinct().localCheckpoint()
+    val sd = s.checkpoint(seeds.toDF("node").select(col("node").cast("long"))
+      .distinct())
     val nSeeds = sd.count()
     // ADAPTIVE DRIVER FINISH (the pageRankMicro pattern): under the
     // gate the hop rounds run driver-side over the collected edges —
@@ -484,31 +459,30 @@ object Graph {
     // one pass over the caller's frame (catalog callers hand memoized
     // checkpoints or narrow projections of one).
     if (DriverFinish.chooses(driverFinishEdges, e0.count(), extraRows = nSeeds)) {
-      val out = bfsDriver(edges.sparkSession, e0, sd, maxHops)
-      Checkpoints.unpersist(sd)
-      out
+      bfsDriver(edges.sparkSession, e0, sd, maxHops)
     } else {
     // partitioned on src once, cached and materialized before round 1
     // is planned (see pageRankMicro), so each round's frontier
     // expansion exchanges only the frontier
-    val e = e0.repartition(col("src")).persist()
+    val e = s.cache(e0.repartition(col("src")))
     e.count()
-    var dist = sd.withColumn("d", lit(0L)).localCheckpoint()
+    var dist = s.checkpoint(sd.withColumn("d", lit(0L)))
     var frontier = dist
     var hop = 1
     while (hop <= maxHops && !frontier.isEmpty) {
+      val (prevFrontier, prevDist) = (frontier, dist)
       // shuffle-hash on the ≤|V|-row frontier — never sort the edges
-      frontier = e.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
-        .select(col("dst").as("node"), (col("d") + 1).as("d"))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .join(dist.select(col("node").as("seen")),
-          col("node") === col("seen"), "left_anti")
-        .localCheckpoint()
-      dist = dist.union(frontier).localCheckpoint()
+      frontier = s.checkpoint(
+        e.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
+          .select(col("dst").as("node"), (col("d") + 1).as("d"))
+          .groupBy(col("node")).agg(min(col("d")).as("d"))
+          .join(dist.select(col("node").as("seen")),
+            col("node") === col("seen"), "left_anti"))
+      dist = s.checkpoint(dist.union(frontier))
+      s.release(prevFrontier)
+      s.release(prevDist)
       hop += 1
     }
-    e.unpersist()
-    Checkpoints.unpersist(sd)
     dist
     }
     }
@@ -543,35 +517,35 @@ object Graph {
                 wCol: String, seeds: DataFrame, maxRounds: Int = 10,
                 driverFinishEdges: Long = 4000000L): DataFrame = {
     require(maxRounds >= 1)
-    withStableCachePartitioning(edges.sparkSession) {
+    roundScope(edges.sparkSession) { s =>
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(wCol).cast("long").as("w"))
       .withColumn("w", when(col("w") >= 0L, col("w"))
         .otherwise(raise_error(concat(lit(
           "ssspMicro: negative weight "), col("w").cast("string")))))
-    val sd = seeds.toDF("node").select(col("node").cast("long"))
-      .distinct().localCheckpoint()
+    val sd = s.checkpoint(seeds.toDF("node").select(col("node").cast("long"))
+      .distinct())
     val nSeeds = sd.count()
     // driver path skips the src repartition + cache (distributed-only
     // machinery — the pageRankMicro r14 slimming); the negative-weight
     // guard still fires on every path that reads w (the driver collect
     // and the distributed materialization both do).
     if (DriverFinish.chooses(driverFinishEdges, e0.count(), extraRows = nSeeds)) {
-      val out =
-        try ssspDriver(edges.sparkSession, e0, sd, maxRounds)
-        finally Checkpoints.unpersist(sd)
-      out
+      ssspDriver(edges.sparkSession, e0, sd, maxRounds)
     } else {
-    val e = e0.repartition(col("src")).persist()
+    val e = s.cache(e0.repartition(col("src")))
     e.count()
-      var dist = sd.withColumn("d", lit(0L)).localCheckpoint()
+    // the rounds' own scope returns the last distance checkpoint; the
+    // result is the rename over it
+    Checkpoints.scoped { r =>
+      var dist = r.checkpoint(sd.withColumn("d", lit(0L)))
       // (count, Σd) — exact decimal sum; monotone relaxation means
       // equality of both ⟺ no distance changed and no node appeared
       def probe(df: DataFrame): (Long, java.math.BigDecimal) = {
-        val r = df.agg(count(lit(1)),
+        val row = df.agg(count(lit(1)),
           sum(col("d").cast("decimal(38,0)"))).head()
-        (r.getLong(0), r.getDecimal(1))
+        (row.getLong(0), row.getDecimal(1))
       }
       var sig = probe(dist)
       var rounds = 0
@@ -581,24 +555,23 @@ object Graph {
         require(rounds <= maxRounds,
           s"ssspMicro: no fixpoint within maxRounds=$maxRounds - " +
             "raise maxRounds AND the oracle's replay depth together")
-        val next = e.join(dist.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-          .union(dist)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint()
+        val next = r.checkpoint(
+          e.join(dist.hint("shuffle_hash"), col("src") === col("node"))
+            .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
+            .union(dist)
+            .groupBy(col("node")).agg(min(col("d")).as("d")))
         val nSig = probe(next)
         if (nSig == sig) {
-          Checkpoints.unpersist(next)
+          r.release(next)
           converged = true
         } else {
-          Checkpoints.unpersist(dist)
+          r.release(dist)
           dist = next
           sig = nSig
         }
       }
-      e.unpersist()
-      Checkpoints.unpersist(sd)
-      dist.select(col("node"), col("d").as("dist_micro"))
+      dist
+    }.select(col("node"), col("d").as("dist_micro"))
     }
     }
   }
@@ -663,17 +636,17 @@ object Graph {
   def labelPropagation(g: Undirected, rounds: Int = 4,
                        driverFinishEdges: Long = 4000000L): DataFrame = {
     require(rounds >= 1)
-    withStableCachePartitioning(g.spark) {
+    roundScope(g.spark) { s =>
     // the gate count and the driver collect read the canonical
     // HALF-edge blocks; the 2m-row symmetrize/repartition/cache is
     // built only when the distributed rounds actually run
-    g.use(materialize = driverFinishEdges > 0) { c =>
+    val c = g.view(s, materialize = driverFinishEdges > 0)
     if (DriverFinish.chooses(driverFinishEdges, 2L * c.ab.count())) {
       val rows = c.collectSym()
-      c.release()
+      s.release(c.ab)
       labelPropDriver(g.spark, rows, rounds)
     } else {
-    val ed = c.sym("src", "dst").repartition(col("src")).persist()
+    val ed = s.cache(c.sym("src", "dst").repartition(col("src")))
     val m = ed.count()
     // symmetry ⇒ every node appears as src, so the label vector and
     // each round's update cover the whole universe — no dangling case
@@ -697,16 +670,15 @@ object Graph {
     // instead of wrapping.
     // materialize=true: the shared-shuffle two-pass rank keeps no
     // internal checkpoint (r13 — both passes reuse ONE shuffle's
-    // files); remapRaw IS the one eager checkpoint (unpersisted at
-    // exit), the rename is a narrow view over its blocks
-    val remapRaw = PrefixSum.globalRunningSum(
+    // files); remapRaw IS the one eager checkpoint, the rename is a
+    // narrow view over its blocks
+    val remapRaw = s.own(PrefixSum.globalRunningSum(
         ed.select(col("src").as("node")).distinct()
           .withColumn("one", lit(1L)),
-        "node", "one", materialize = true)
+        "node", "one", materialize = true))
     val remap = remapRaw
       .select(col("k").as("node"), (col("running") - 1L).as("dlbl"))
-    var labels = remap.select(col("node"), col("dlbl").as("lbl"))
-      .localCheckpoint()
+    var labels = s.checkpoint(remap.select(col("node"), col("dlbl").as("lbl")))
     // ONE exchange per round, sized to the data (r13 — the 128M-rung
     // finding): the old shape exchanged the per-round votes TWICE
     // (partial (dst, lbl) counts — whose map-side combine achieves
@@ -732,27 +704,22 @@ object Graph {
       // (the sort can't persist across rounds — measured 1.3 GB of
       // per-round sort spill at the 128M rung); hashing the small
       // side probes the edges in storage order instead
-      labels = ed.join(labels.hint("shuffle_hash"), col("src") === col("node"))
-        .select(col("dst"), col("lbl"))
-        .repartition(aggParts, col("dst"))
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("dst"))
-        .agg(max(EncodedArgmax.maxScoreMinId(col("c"), col("lbl"))).as("e"))
-        .select(col("dst").as("node"),
-          EncodedArgmax.decodeMaxId(col("e")).as("lbl"))
-        .localCheckpoint()
-      Checkpoints.unpersist(prev)
+      labels = s.checkpoint(
+        ed.join(labels.hint("shuffle_hash"), col("src") === col("node"))
+          .select(col("dst"), col("lbl"))
+          .repartition(aggParts, col("dst"))
+          .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
+          .groupBy(col("dst"))
+          .agg(max(EncodedArgmax.maxScoreMinId(col("c"), col("lbl"))).as("e"))
+          .select(col("dst").as("node"),
+            EncodedArgmax.decodeMaxId(col("e")).as("lbl")))
+      s.release(prev)
     }
-    val out = labels
+    labels
       .join(remap.select(col("dlbl").as("lbl"), col("node").as("community")),
         Seq("lbl"))
       .select(col("node"), col("community"))
       .localCheckpoint()
-    Checkpoints.unpersist(labels)
-    Checkpoints.unpersist(remapRaw)
-    ed.unpersist()
-    out
-    }
     }
     }
   }
@@ -838,7 +805,7 @@ object Graph {
   def kCore(g: Undirected, k: Option[Long] = None, maxRounds: Int = 12,
             driverFinishEdges: Long = 4000000L): DataFrame = {
     require(maxRounds >= 1)
-    withStableCachePartitioning(g.spark) {
+    roundScope(g.spark) { s =>
     // the gate count, the driver collect and the distributed
     // symmetrize all read the canonical HALF-edge set: the driver path
     // pays no 2m-row shuffle, cache, distinct count or collect for
@@ -849,10 +816,10 @@ object Graph {
       require(kVal >= 1, s"kCore: derived k=$kVal < 1 (m2=$m2, n=$n0)")
       kVal
     }
-    g.use(materialize = driverFinishEdges > 0) { c =>
+    val c = g.view(s, materialize = driverFinishEdges > 0)
     if (DriverFinish.chooses(driverFinishEdges, 2L * c.ab.count())) {
       val rows = c.collectSym()
-      c.release()
+      s.release(c.ab)
       val n0 = { // distinct nodes — was a full shuffle, now one pass
         val seen = scala.collection.mutable.LongMap.empty[Boolean]
         rows.foreach { case (s, _) => seen(s) = true }
@@ -860,12 +827,12 @@ object Graph {
       }
       kCoreDriver(g.spark, rows, kFor(rows.length.toLong, n0), maxRounds)
     } else {
-      val ed = c.sym("src", "dst").repartition(col("src")).persist()
+      val ed = s.cache(c.sym("src", "dst").repartition(col("src")))
       val m2 = ed.count()
       val kVal = kFor(m2, ed.select(col("src")).distinct().count())
-      var cur = ed.localCheckpoint()
-      ed.unpersist()
-      c.release()
+      var cur = s.checkpoint(ed)
+      s.release(ed)
+      s.release(c.ab)
       // PEEL BY THE REMOVED SET, not the survivor set (r14): after the
       // first round a peel removes FEW nodes, so anti-joining the live
       // edges against the (small) removed set — BROADCAST when it fits
@@ -889,34 +856,29 @@ object Graph {
             "raise maxRounds AND the oracle's replay depth together")
         // materialized: consumed by the convergence count and both
         // anti-join branches (lazy would recompute the degree pass 3x)
-        val removed = cur.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-          .filter(col("dg") < kVal).select(col("src").as("node"))
-          .localCheckpoint()
+        val removed = s.checkpoint(cur.groupBy(col("src")).agg(count(lit(1)).as("dg"))
+          .filter(col("dg") < kVal).select(col("src").as("node")))
         val nRem = removed.count()
         if (nRem == 0) {
-          Checkpoints.unpersist(removed)
+          s.release(removed)
           converged = true
         } else {
           val bcast = nRem <= BroadcastRemovedMax && DriverFinish.fits(nRem)
           def side(c: String) =
             if (bcast) broadcast(removed.select(col("node").as(c)))
             else removed.select(col("node").as(c)).hint("shuffle_hash")
-          val next = cur
+          val next = s.checkpoint(cur
             .join(side("src"), Seq("src"), "left_anti")
             .join(side("dst"), Seq("dst"), "left_anti")
-            .select(col("src"), col("dst"))
-            .localCheckpoint()
-          Checkpoints.unpersist(cur)
-          Checkpoints.unpersist(removed)
+            .select(col("src"), col("dst")))
+          s.release(cur)
+          s.release(removed)
           cur = next
         }
       }
-      val out = cur.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
+      cur.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
         .select(col("src").as("node"), col("core_deg"))
         .localCheckpoint()
-      Checkpoints.unpersist(cur)
-      out
-    }
     }
     }
   }
@@ -1028,17 +990,16 @@ object Graph {
     // sym, the degree aggregate and both degree joins — left lazy,
     // the upstream pair generation replays ~6x. The degree frame is
     // checkpointed too (two join branches), and the single-row result
-    // is eager so both releases happen before return.
-    g.use(materialize = true) { c =>
-      val sym = c.sym()
-      val deg = sym.groupBy(col("s")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+    // is eager, so it reads neither.
+    Checkpoints.scoped { s =>
+      val sym = g.view(s, materialize = true).sym()
+      val deg = s.checkpoint(sym.groupBy(col("s")).agg(count(lit(1)).as("deg")))
       val ends = sym
         .join(deg.select(col("s"), col("deg").as("dx")), Seq("s"))
         .join(deg.select(col("s").as("d"), col("deg").as("dy")), Seq("d"))
         .select(col("dx").cast("decimal(38,0)").as("x"),
           col("dy").cast("decimal(38,0)").as("y"))
-      try ends.agg(count(lit(1)).as("n"),
+      ends.agg(count(lit(1)).as("n"),
           sum(col("x")).as("sx"), sum(col("y")).as("sy"),
           sum(col("x") * col("y")).as("sxy"),
           sum(col("x") * col("x")).as("sxx"),
@@ -1053,7 +1014,6 @@ object Graph {
                   (col("n") * col("syy") - col("sy") * col("sy")).cast("double")),
               6)).as("r"))
         .localCheckpoint()
-      finally Checkpoints.unpersist(deg)
     }
 
   /** Bounded-collect driver peel for [[kCore]]: the same
@@ -1141,15 +1101,16 @@ object Graph {
                      wedgeBloom: Boolean = true): DataFrame =
     // both paths return an eagerly-materialized frame, so the
     // canonical edge blocks can be released on return
-    g.use(materialize = true) { c =>
-      val m = c.ab.count()
-      if (DriverFinish.chooses(driverFinishEdges, m)) triangleDriver(g.spark, c.ab)
-      else triangleDistributed(c.ab, m, wedgeBloom)
+    Checkpoints.scoped { s =>
+      val ab = g.view(s, materialize = true).ab
+      val m = ab.count()
+      if (DriverFinish.chooses(driverFinishEdges, m)) triangleDriver(g.spark, ab)
+      else triangleDistributed(s, ab, m, wedgeBloom)
     }
 
   /** Distributed compact-forward enumeration over a CANONICAL
     * (a < b, distinct) edge frame with `m` edges. */
-  private def triangleDistributed(e: DataFrame, m: Long,
+  private def triangleDistributed(s: Checkpoints.Scope, e: DataFrame, m: Long,
                                   wedgeBloom: Boolean): DataFrame = {
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
@@ -1160,7 +1121,7 @@ object Graph {
     // (both wedge sides + the closing semi join) read the oriented
     // list — lazily each would recompute the degree joins over the
     // full edge set (the Components eager-checkpoint rationale).
-    val oriented = e
+    val oriented = s.checkpoint(e
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .withColumn("akey", struct(col("da").as("d"), col("a").as("n")))
@@ -1169,8 +1130,7 @@ object Graph {
       .select(
         when(col("fwd"), col("a")).otherwise(col("b")).as("u"),
         when(col("fwd"), col("b")).otherwise(col("a")).as("v"),
-        when(col("fwd"), col("bkey")).otherwise(col("akey")).as("vkey"))
-      .localCheckpoint()
+        when(col("fwd"), col("bkey")).otherwise(col("akey")).as("vkey")))
     // sketch-prunes-exact-confirms (the j_bloom_semi pattern): on real
     // co-occurrence graphs only a few % of wedges close into a
     // triangle (sf0.1 co-purchase: 1.9M of 41M), so shuffling EVERY
@@ -1205,12 +1165,10 @@ object Graph {
     val tri = wedges.join(
       oriented.select(col("u").as("x"), col("v").as("y")),
       Seq("x", "y"), "left_semi")
-    val out = tri
+    tri
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
       .localCheckpoint()
-    Checkpoints.unpersist(oriented)
-    out
   }
 
   /** Bounded-collect driver counting: the same (deg, id)-ordered
@@ -1332,7 +1290,7 @@ object Graph {
                 iterations: Int = 4,
                 driverFinishEdges: Long = 2000000L): DataFrame = {
     require(iterations >= 1)
-    withStableCachePartitioning(edges.sparkSession) {
+    roundScope(edges.sparkSession) { s =>
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     // Contract checks (empty graph: the round normalizer max(araw) is
@@ -1344,82 +1302,70 @@ object Graph {
     // gate's pre-count, or the distributed cache's materializing count
     // (gate 0 skips the pre-count entirely — the forced-distributed
     // ladder contract).
-    def guard(nEdges: Long, release: => Unit): Unit =
-      if (nEdges == 0 || nEdges > 4000000000000L) {
-        release
-        require(nEdges > 0, "hitsMicro: empty edge list - the round " +
-          "normalizer max(araw) would be undefined")
-        require(nEdges <= 4000000000000L,
-          s"hitsMicro: $nEdges edges - a per-node long raw sum could " +
-            "overflow past ~9.2e12 incident mass; widen the sums to decimal")
-      }
+    def guard(nEdges: Long): Unit = {
+      require(nEdges > 0, "hitsMicro: empty edge list - the round " +
+        "normalizer max(araw) would be undefined")
+      require(nEdges <= 4000000000000L,
+        s"hitsMicro: $nEdges edges - a per-node long raw sum could " +
+          "overflow past ~9.2e12 incident mass; widen the sums to decimal")
+    }
     val nPre = if (driverFinishEdges > 0) e.count() else -1L
-    if (driverFinishEdges > 0) guard(nPre, ())
+    if (driverFinishEdges > 0) guard(nPre)
     // driver path skips the two per-direction repartitioned caches
     // (distributed-only machinery — the pageRankMicro r14 slimming)
     if (DriverFinish.chooses(driverFinishEdges, nPre)) {
       hitsDriver(edges.sparkSession, e, iterations)
     } else {
-    val eS = e.repartition(col("src")).persist()
-    val nEdges = eS.count()
-    guard(nEdges, eS.unpersist())
-      val eD = e.repartition(col("dst")).persist()
+    val eS = s.cache(e.repartition(col("src")))
+    guard(eS.count())
+      val eD = s.cache(e.repartition(col("dst")))
       eD.count()
-      val nodes = eS.select(col("src").as("node"))
+      val nodes = s.checkpoint(eS.select(col("src").as("node"))
         .union(eD.select(col("dst").as("node")))
-        .distinct().localCheckpoint()
+        .distinct())
       // Only the |V|-row normalize multiply (raw · 10⁶, which
       // overflows long past ~9.2·10⁶ of summed mass) widens to
       // decimal — same integers as an all-decimal pipeline.
       var h = nodes.withColumn("h", lit(1000000L))
       var a: DataFrame = null
-      for (i <- 1 to iterations) {
-        val prevA = a
-        val prevH = if (i > 1) h else null
+      for (_ <- 1 to iterations) {
+        val (prevA, prevH) = (a, h)
         // authority sum: the src-partitioned edge cache joins the
         // hub vector, partial-aggregates map-side, exchanges only
         // per-dst contributions. The raw frame is MATERIALIZED before
         // its two consumers (ADVICE r9): the max() normalizer and the
         // normalize select would otherwise each replay the Θ(|E|)
         // edge join — per-round cost was 2× the documented shape.
-        val araw = eS.join(h.hint("shuffle_hash"), col("src") === col("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("h")).as("araw"))
-          .localCheckpoint()
+        val araw = s.checkpoint(
+          eS.join(h.hint("shuffle_hash"), col("src") === col("node"))
+            .groupBy(col("dst"))
+            .agg(sum(col("h")).as("araw")))
         val aM = araw.agg(max(col("araw")).as("am"))
-        a = araw.crossJoin(broadcast(aM))
+        a = s.checkpoint(araw.crossJoin(broadcast(aM))
           .select(col("dst").as("node"),
             expr("CAST((CAST(araw AS DECIMAL(38,0)) * 1000000) div am AS BIGINT)")
-              .as("a"))
-          .localCheckpoint()
-        Checkpoints.unpersist(araw)
-        if (prevA != null) Checkpoints.unpersist(prevA)
-        val hraw = eD.join(a.hint("shuffle_hash"), col("dst") === col("node"))
-          .groupBy(col("src"))
-          .agg(sum(col("a")).as("hraw"))
-          .localCheckpoint()
+              .as("a")))
+        s.release(araw)
+        s.release(prevA)
+        val hraw = s.checkpoint(
+          eD.join(a.hint("shuffle_hash"), col("dst") === col("node"))
+            .groupBy(col("src"))
+            .agg(sum(col("a")).as("hraw")))
         val hM = hraw.agg(max(col("hraw")).as("hm"))
-        h = hraw.crossJoin(broadcast(hM))
+        h = s.checkpoint(hraw.crossJoin(broadcast(hM))
           .select(col("src").as("node"),
             expr("CAST((CAST(hraw AS DECIMAL(38,0)) * 1000000) div hm AS BIGINT)")
-              .as("h"))
-          .localCheckpoint()
-        Checkpoints.unpersist(hraw)
-        if (prevH != null) Checkpoints.unpersist(prevH)
+              .as("h")))
+        s.release(hraw)
+        s.release(prevH)
       }
-      val out = nodes
+      nodes
         .join(h, Seq("node"), "left")
         .join(a, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("h"), lit(0L)).as("hub_micro"),
           coalesce(col("a"), lit(0L)).as("auth_micro"))
         .localCheckpoint()
-      Checkpoints.unpersist(h)
-      Checkpoints.unpersist(a)
-      Checkpoints.unpersist(nodes)
-      eS.unpersist()
-      eD.unpersist()
-      out
     }
     }
   }
@@ -1502,7 +1448,7 @@ object Graph {
     * rows (an attribute's cardinality, not the graph), so its
     * single-partition exchange is constant-size at any edge count. */
   def modularity(g: Undirected, nodeComm: DataFrame, nodeCol: String,
-                 commCol: String): DataFrame = {
+                 commCol: String): DataFrame = Checkpoints.scoped { s =>
     val nc = nodeComm.select(col(nodeCol).cast("long").as("node"),
       col(commCol).as("community"))
     // induced subgraph: both endpoints must map — the inner joins
@@ -1510,13 +1456,12 @@ object Graph {
     // counted, so every surviving edge contributes exactly two ends.
     // The canonical set stays lazy; this tagged frame is the one
     // checkpoint, owned here either way.
-    val und = g.use(materialize = false)(_.ab
+    val und = s.checkpoint(g.view(s, materialize = false).ab
       .join(nc.select(col("node").as("na"), col("community").as("ca")),
         col("a") === col("na"))
       .join(nc.select(col("node").as("nb"), col("community").as("cb")),
         col("b") === col("nb"))
-      .select(col("a"), col("b"), col("ca"), col("cb"))
-      .localCheckpoint())
+      .select(col("a"), col("b"), col("ca"), col("cb")))
     val ends = und.select(col("a").as("s"), col("ca").as("community"))
       .union(und.select(col("b").as("s"), col("cb").as("community")))
     val degComm = ends.groupBy(col("s"), col("community"))
@@ -1533,7 +1478,7 @@ object Graph {
     // of a one-row broadcast join
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
-    val out = degComm.join(intra, Seq("community"), "left")
+    degComm.join(intra, Seq("community"), "left")
       .select(col("community"), col("n_nodes"), col("deg_sum"),
         coalesce(col("intra_edges"), lit(0L)).as("intra_edges"))
       // 2m is even by construction; shiftright keeps the halving in
@@ -1549,7 +1494,5 @@ object Graph {
           / (lit(4).cast("decimal(38,0)") * col("m") * col("m")).cast("double"),
           6).as("q"))
       .localCheckpoint()
-    Checkpoints.unpersist(und)
-    out
   }
 }

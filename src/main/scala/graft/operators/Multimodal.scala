@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media (image/audio/video) as opaque
@@ -37,6 +37,19 @@ object Multimodal {
   final case class MediaMeta(doc_id: Long, width: Long, height: Long,
                              format: String, raster_bytes: Long)
 
+  /** (doc_id, text byte length) per row, the payload synthesizers'
+    * input. A small fixture file scans as 1-2 splits, so this NARROW
+    * frame is spread across the executor width (see [[Spread]]) BEFORE
+    * the CPU-heavy synthesis; payload bytes themselves never shuffle. */
+  private def byteLengths(df: DataFrame, textCol: String,
+                          idCol: String): Dataset[(Long, Long)] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
+        octet_length(col(textCol)).cast("long").as("byte_len")))
+      .as[(Long, Long)]
+  }
+
   /** Synthesize a REAL multi-frame animated GIF per row — the video
     * stand-in (the JDK ships no video codec, but its GIF plugin reads
     * and writes multi-frame images): one frame per `bytesPerFrame`
@@ -49,11 +62,7 @@ object Multimodal {
                    bytesPerFrame: Int = 32): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // same split-width note as asPngPayload: spread the narrow frame
-    // across the executor width before the CPU-heavy encode
-    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len")))
-      .as[(Long, Long)]
+    byteLengths(df, textCol, idCol)
       .mapPartitions { it =>
         val buf = new ByteArrayOutputStream(8192)
         val writer = ImageIO.getImageWritersByFormatName("gif").next()
@@ -99,15 +108,7 @@ object Multimodal {
   def asPngPayload(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // the scan of a small fixture file yields 1-2 splits, which would
-    // run the CPU-heavy encode/decode/resize chain on 1-2 cores; spread
-    // the NARROW 2-column frame across the executor width BEFORE
-    // synthesis (see [[Spread]]), so the heavy kernels downstream stay
-    // payload-colocated (payload bytes themselves never shuffle — the
-    // real-ingest property this fixture stands in for)
-    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len")))
-      .as[(Long, Long)]
+    byteLengths(df, textCol, idCol)
       .mapPartitions { it =>
         val buf = new ByteArrayOutputStream(4096)
         it.map { case (docId, byteLen) =>
@@ -243,9 +244,7 @@ object Multimodal {
   def asCellGridPayload(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len")))
-      .as[(Long, Long)]
+    byteLengths(df, textCol, idCol)
       .mapPartitions { it =>
         val buf = new ByteArrayOutputStream(4096)
         it.map { case (docId, byteLen) =>
@@ -376,9 +375,7 @@ object Multimodal {
                    sampleRate: Int = 8000, seedMod: Long = 0L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    Spread.narrow(df.select(col(idCol).cast("long").as("doc_id"),
-        octet_length(col(textCol)).cast("long").as("byte_len")))
-      .as[(Long, Long)]
+    byteLengths(df, textCol, idCol)
       .mapPartitions { it =>
         it.map { case (docId0, byteLen) =>
           // seedMod > 0 buckets the PCM seed (the asCellGridPayload

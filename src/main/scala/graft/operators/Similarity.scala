@@ -745,15 +745,15 @@ object Similarity {
     // file-split count (a bin-packed small-file scan runs the whole
     // expansion in 1-2 tasks), and eagerly checkpointed because every
     // Lloyd iteration re-reads it. The checkpoint footprint is bounded
-    // by the trainSample contract above (m rows per SAMPLED vector).
-    val subRows = Spread.narrow(corpusD)
-      .select(col("vec_id"), posexplode(expr(
-        s"""transform(sequence(0, ${m - 1}), s ->
-           |  transform(slice(embD, s * $dSub + 1, $dSub),
-           |            x -> cast(round(x * 1000000) as long)))""".stripMargin))
-        .as(Seq("sub", "sub_m")))
-      .localCheckpoint()
-    try {
+    // by the trainSample contract above (m rows per SAMPLED vector),
+    // and released when training returns the driver-held codebooks.
+    Checkpoints.scoped { scope =>
+      val subRows = scope.checkpoint(Spread.narrow(corpusD)
+        .select(col("vec_id"), posexplode(expr(
+          s"""transform(sequence(0, ${m - 1}), s ->
+             |  transform(slice(embD, s * $dSub + 1, $dSub),
+             |            x -> cast(round(x * 1000000) as long)))""".stripMargin))
+          .as(Seq("sub", "sub_m"))))
       (1 to iters).foreach { _ =>
         val sums = (0 until dSub).map(j =>
           sum(element_at(col("sub_m"), j + 1)).as(s"s$j"))
@@ -780,13 +780,6 @@ object Similarity {
           (sub, c, means.getOrElse((sub, c), emb)) }
       }
       books
-    } finally {
-      // training-scoped storage: release the checkpoint blocks before
-      // returning the (driver-held) codebooks
-      try subRows.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      } catch { case _: Throwable => () }
     }
   }
 

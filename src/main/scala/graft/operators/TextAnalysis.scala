@@ -290,17 +290,18 @@ object TextAnalysis {
     // ([[graft.tools.BackoffStore]]) is unaffected (written tables
     // were always materialized).
     val big = bigCorpus(df)
-    val train0 = tokensOf(df, textCol, idCol)
-    val train = if (big) train0.localCheckpoint() else train0
     def mat(t: DataFrame): DataFrame = if (big) t.localCheckpoint() else t
-    val u1 = mat(grams(train, 1, Seq("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1")))
-    val b2 = mat(grams(train, 2, Seq("p", "q")).groupBy(col("p"), col("q"))
-      .agg(count(lit(1)).as("c2")))
-    val t3 = mat(grams(train, 3, Seq("w1", "w2", "w3"))
-      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c3")))
-    if (big) Checkpoints.unpersist(train)
-    BackoffModel(u1, b2, t3, u1.agg(sum(col("c1")).as("n_total")))
+    Checkpoints.scoped { s =>
+      val train0 = tokensOf(df, textCol, idCol)
+      val train = if (big) s.checkpoint(train0) else train0
+      val u1 = mat(grams(train, 1, Seq("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("c1")))
+      val b2 = mat(grams(train, 2, Seq("p", "q")).groupBy(col("p"), col("q"))
+        .agg(count(lit(1)).as("c2")))
+      val t3 = mat(grams(train, 3, Seq("w1", "w2", "w3"))
+        .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c3")))
+      BackoffModel(u1, b2, t3, u1.agg(sum(col("c1")).as("n_total")))
+    }
   }
 
   /** Score `docs` against a frozen [[BackoffModel]] — the per-doc agg
@@ -814,7 +815,7 @@ object TextAnalysis {
     * the vocabulary-sized table never touches the driver. Labels must
     * be non-null. */
   def trainNaiveBayes(df: DataFrame, textCol: String, labelCol: String,
-                      idCol: String): NbModel = {
+                      idCol: String): NbModel = Checkpoints.scoped { s =>
     // ONE tokenize pass (r14, the trainBackoff finding): the two
     // bounded collects, the vocabulary count and the model-table
     // broadcast each re-ran the corpus tokenize from scratch — four
@@ -822,9 +823,8 @@ object TextAnalysis {
     // (occ is a narrow explode over its blocks), the model table below
     // is checkpointed too, and the token blocks are freed before
     // returning.
-    val train = df.select(col(labelCol).as("__lab"),
-        filter(StatelessOps.tokenArray(col(textCol)), t => length(t) > 0).as("__toks"))
-      .localCheckpoint()
+    val train = s.checkpoint(df.select(col(labelCol).as("__lab"),
+        filter(StatelessOps.tokenArray(col(textCol)), t => length(t) > 0).as("__toks")))
     val occ = train.select(col("__lab"), explode(col("__toks")).as("w"))
     // bounded eager collects: per-class doc counts / token totals + V
     val nd = train.groupBy(col("__lab")).agg(count(lit(1)).as("nd"))
@@ -852,9 +852,7 @@ object TextAnalysis {
         lit(tc.getOrElse(l, 0L) + v).cast("double")
           / (coalesce(col(s"c_$l"), lit(0L)) + lit(1L)))).cast("long")
     }: _*)
-    val condWide = wide.select(col("w"), sArr.as("sArr")).localCheckpoint()
-    Checkpoints.unpersist(train)
-    NbModel(labels, prior, dflt, condWide)
+    NbModel(labels, prior, dflt, wide.select(col("w"), sArr.as("sArr")).localCheckpoint())
   }
 
   /** Score `docs` against a frozen [[NbModel]]: per document, the

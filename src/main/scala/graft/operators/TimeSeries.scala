@@ -79,6 +79,25 @@ object TimeSeries {
     }.mkString
   }
 
+  /** `df` plus one guarded tap column, and that column: `valueCol`
+    * scaled by `scale` and rounded to a long, raising "`what` at
+    * value=…" outside ±`bound` (NULL passes through). The column gets a
+    * collision-free name: a caller whose frame already carries
+    * "_graft_vc" would otherwise make the later reference ambiguous
+    * (two same-named columns in one projection). */
+  private def guardedTaps(df: DataFrame, valueCol: String, scale: Int, bound: Long,
+                          what: String): (DataFrame, Column) = {
+    val rawVc = round(col(valueCol) * scale).cast("long")
+    val inRange = rawVc.isNull || (rawVc >= lit(-bound) && rawVc <= lit(bound))
+    val vcName = Iterator.from(0).map(i => s"_graft_vc$i")
+      .find(n => !df.columns.contains(n)).get
+    val guarded = df.select(col("*"),
+      when(inRange, rawVc)
+        .otherwise(raise_error(concat(lit(s"$what at value="),
+          col(valueCol).cast("string")))).as(vcName))
+    (guarded, col(vcName))
+  }
+
   /** SAX word per full 8-value window (4 PAA segments × 4-symbol
     * alphabet) over each key's time-ordered micro-unit values.
     * Rows before the 8th of a key are dropped (no partial windows).
@@ -104,20 +123,8 @@ object TimeSeries {
     // hole this guard exists to close. NULL values pass through (the
     // pre-guard pipeline propagated them; the null condition takes
     // the when-branch via isNull, not the raise_error).
-    val rawVc = round(col(valueCol) * 1000000).cast("long")
-    val inRange = rawVc.isNull ||
-      (rawVc >= lit(-MaxTapMicro) && rawVc <= lit(MaxTapMicro))
-    // collision-free guard-column name: a caller whose frame already
-    // carries "_graft_vc" would otherwise make the later reference
-    // ambiguous (two same-named columns in one projection)
-    val vcName = Iterator.from(0).map(i => s"_graft_vc$i")
-      .find(n => !df.columns.contains(n)).get
-    val guarded = df.select(col("*"),
-      when(inRange, rawVc)
-        .otherwise(raise_error(concat(lit(
-          s"saxWords: |micro tap| > $MaxTapMicro (|value| > ~1073.74) at value="),
-          col(valueCol).cast("string")))).as(vcName))
-    val vc = col(vcName)
+    val (guarded, vc) = guardedTaps(df, valueCol, 1000000, MaxTapMicro,
+      s"saxWords: |micro tap| > $MaxTapMicro (|value| > ~1073.74)")
     // taps(i) = v[t-7+i]; the current row is tapped directly
     val taps = (0 to 6).map(i => lag(vc, 7 - i).over(w)) :+ vc
     val rn = row_number().over(w)
@@ -188,17 +195,8 @@ object TimeSeries {
     // same hoisted magnitude guard as saxWords: 8 squared micro taps
     // must stay in Long; out-of-contract input FAILS instead of
     // silently wrapping away from the oracle's BIGINTs
-    val rawVc = round(col(valueCol) * 1000000).cast("long")
-    val inRange = rawVc.isNull ||
-      (rawVc >= lit(-MaxTapMicro) && rawVc <= lit(MaxTapMicro))
-    val vcName = Iterator.from(0).map(i => s"_graft_vc$i")
-      .find(n => !df.columns.contains(n)).get
-    val guarded = df.select(col("*"),
-      when(inRange, rawVc)
-        .otherwise(raise_error(concat(lit(
-          s"rollingZ: |micro tap| > $MaxTapMicro (|value| > ~1073.74) at value="),
-          col(valueCol).cast("string")))).as(vcName))
-    val vc = col(vcName)
+    val (guarded, vc) = guardedTaps(df, valueCol, 1000000, MaxTapMicro,
+      s"rollingZ: |micro tap| > $MaxTapMicro (|value| > ~1073.74)")
     // taps are lag 8..1 — the trailing window EXCLUDING the scored row
     val taps = (1 to 8).map(i => lag(vc, i).over(w))
     val rn = row_number().over(w)
@@ -362,17 +360,8 @@ object TimeSeries {
     // loud per-row magnitude guard (the saxWords posture): beyond the
     // bound the per-row product would wrap in Spark longs while
     // DuckDB's BIGINT product errors — fail here instead of diverging
-    val rawVc = round(col(valueCol) * 100).cast("long")
-    val inRange = rawVc.isNull ||
-      (rawVc >= lit(-MaxCentiTap) && rawVc <= lit(MaxCentiTap))
-    val vcName = Iterator.from(0).map(i => s"_graft_vc$i")
-      .find(n => !df.columns.contains(n)).get
-    val guarded = df.select(col("*"),
-      when(inRange, rawVc)
-        .otherwise(raise_error(concat(lit(
-          s"autocorr: |centi tap| > $MaxCentiTap at value="),
-          col(valueCol).cast("string")))).as(vcName))
-    val vc = col(vcName)
+    val (guarded, vc) = guardedTaps(df, valueCol, 100, MaxCentiTap,
+      s"autocorr: |centi tap| > $MaxCentiTap")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val lags = (1 to maxLag).map(l => lag(vc, l).over(w))
     val perLag = (1 to maxLag).flatMap { l =>
@@ -711,21 +700,21 @@ object TimeSeries {
   def crossCorrPairs(df: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String, topSeries: Int = 40,
                      minOverlap: Long = 24L, topPairs: Int = 20,
-                     bucketSec: Long = 3600L): DataFrame = {
+                     bucketSec: Long = 3600L): DataFrame =
+    Checkpoints.scoped { s =>
     require(topSeries >= 2 && topPairs >= 1 && minOverlap >= 2 && bucketSec >= 1)
     val vc = round(col(valueCol) * 1000000).cast("long")
     // materialized ONCE: the bucket aggregate feeds BOTH the activity
     // cut and the pair stage — left lazy, the corpus scan + shuffle
     // aggregate would run twice; the checkpoint is |K|·|buckets| rows
-    val hourly = df.select(col(keyCol).cast("long").as("k"),
+    val hourly = s.checkpoint(df.select(col(keyCol).cast("long").as("k"),
         unix_micros(col(tsCol).cast("timestamp")).as("us"), vc.as("vc"))
       .select(col("k"), expr(s"us div ${bucketSec * 1000000L}").as("hr"), col("vc"))
       .groupBy(col("k"), col("hr"))
       // decimal sum: an hourly micro-unit sum of a hot key must not
       // silently wrap a long
       .agg(sum(col("vc").cast("decimal(38,0)")).as("x"),
-        count(lit(1)).as("c"))
-      .localCheckpoint()
+        count(lit(1)).as("c")))
     val top = hourly.groupBy(col("k")).agg(sum(col("c")).as("n_ev"))
       .orderBy(col("n_ev").desc, col("k")).limit(topSeries)
       .select(col("k"))
@@ -746,13 +735,11 @@ object TimeSeries {
       .filter(col("n") >= minOverlap && col("dx") > 0 && col("dy") > 0)
       .withColumn("corr_raw", col("num").cast("double") /
         sqrt(col("dx").cast("double") * col("dy").cast("double")))
-    val out = scored.orderBy(abs(col("corr_raw")).desc, col("ka"), col("kb"))
+    scored.orderBy(abs(col("corr_raw")).desc, col("ka"), col("kb"))
       .limit(topPairs)
       .select(col("ka"), col("kb"), col("n"),
         round(col("corr_raw"), 6).as("corr"))
       .localCheckpoint()
-    Checkpoints.unpersist(hourly)
-    out
   }
 
   /** The pure Holt step — EXACTLY the JVM double ops of

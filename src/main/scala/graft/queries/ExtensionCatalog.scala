@@ -1633,7 +1633,7 @@ object ExtensionCatalog {
     * deg ≥ 2 is emitted (no-triangle nodes at 0.0), deg-1 nodes are
     * out (coefficient undefined). The division happens ONCE on exact
     * integers and rounds to 6, so both engines rank identically. */
-  val gClustering: Q = (s, d) => {
+  val gClustering: Q = (s, d) => Checkpoints.scoped { scope =>
     // the canonical edge set is the session memo (r14): both the
     // degree aggregate and the triangle kernel (a canonical set skips
     // its re-canonicalization shuffle) read the memo's checkpoint
@@ -1644,20 +1644,18 @@ object ExtensionCatalog {
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val tri = graft.operators.Graph.triangleCounts(
-      Graph.Undirected.canonical(e, "a", "b"))
-    val out = deg.filter(col("deg") >= 2)
+    val tri = scope.own(graft.operators.Graph.triangleCounts(
+      Graph.Undirected.canonical(e, "a", "b")))
+    deg.filter(col("deg") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"),
         round(lit(2.0) * coalesce(col("n_tri"), lit(0L)) /
           (col("deg") * (col("deg") - 1)), 6).as("coef"))
-      // eager: releases the bounded triangle intermediate below
-      // instead of leaking its blocks for the session (the memo'd
-      // edge set deliberately stays)
+      // eager, so the scope can release the bounded triangle
+      // intermediate instead of leaking its blocks for the session
+      // (the memo'd edge set deliberately stays)
       .localCheckpoint()
-    Checkpoints.unpersist(tri)
-    out
   }
 
   /** Community detection over the co-purchase graph: 4 rounds of
@@ -1708,22 +1706,19 @@ object ExtensionCatalog {
     * part id, synchronous Bellman-Ford ([[graft.operators.Graph.ssspMicro]]
     * — exact integer relaxation, fixed-budget idempotent-replay
     * oracle like g_kcore). */
-  val gSssp: Q = (s, d) => {
+  val gSssp: Q = (s, d) => Checkpoints.scoped { scope =>
     // materialized ONCE (the commonNeighbors lesson): the weighted
     // pair frame feeds THREE plan branches — both symmetrize arms and
     // the seed min-scan — and each branch would otherwise replay the
     // lineitem self-join + count from scratch (the seed scan is a
     // separate JOB, so even exchange reuse can't help it)
-    val ew = coPurchasePairs(s, d)
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val ew = scope.checkpoint(coPurchasePairs(s, d)
+      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("c")))
     val w = expr("1000000 div c")
     val sym = ew.select(col("pa").as("src"), col("pb").as("dst"), w.as("w"))
       .union(ew.select(col("pb").as("src"), col("pa").as("dst"), w.as("w")))
-    val out = graft.operators.Graph.ssspMicro(sym, "src", "dst", "w",
+    graft.operators.Graph.ssspMicro(sym, "src", "dst", "w",
       sym.agg(min(col("src")).as("node")))
-    Checkpoints.unpersist(ew)
-    out
   }
 
   /** Hubs & authorities over the DIRECTED customer→supplier purchase

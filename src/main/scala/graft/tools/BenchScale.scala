@@ -112,6 +112,13 @@ object BenchScale {
 
   private def maxTask(ms: Measured[_]*): Double = ms.map(_.maxTaskSec).max
 
+  /** One rung per size, each with its own release scope: a rung's
+    * checkpoints and caches are freed before the next rung sizes up —
+    * accumulated blocks pressure executor storage memory and bias later
+    * rung timings. */
+  private def scopedRungs[T](sizes: Seq[Long])(rung: (Long, Checkpoints.Scope) => T): Seq[T] =
+    sizes.map(n => Checkpoints.scoped(rung(n, _)))
+
   /** The scale gate on one series: with two or more rungs, prints
     * {"metric":`metric`,"exponent":e} and requires e ≤ `bound`. */
   private def exponentGate(metric: String, rungs: Seq[(Long, Double)], bound: Double,
@@ -266,14 +273,14 @@ object BenchScale {
       // closure head-to-head on ONE materialized edge set (the r9
       // driver-finish receipt): star rounds vs bounded union-find,
       // same edges, same labels — the chain timing above is untouched
-      val ec = edges.localCheckpoint()
-      def closure(thr: Long): Double = meter.measure {
-        Components.connectedComponents(ec, "doc_a", "doc_b",
-          driverFinishEdges = thr).count()
-      }.sec
-      val starSec = closure(0L)
-      val driverSec = closure(1000000L)
-      Checkpoints.unpersist(ec)
+      val (starSec, driverSec) = Checkpoints.scoped { s =>
+        val ec = s.checkpoint(edges)
+        def closure(thr: Long): Double = meter.measure {
+          Components.connectedComponents(ec, "doc_a", "doc_b",
+            driverFinishEdges = thr).count()
+        }.sec
+        (closure(0L), closure(1000000L))
+      }
       // planted clusters: 14 per full 20-block, plus the partial tail
       val tail = (n % 20).toInt
       val expected = n / 20 * 14 + math.min(tail, 12) +
@@ -335,7 +342,7 @@ object BenchScale {
     * 106-186 s at 2M-5M). */
   private def pqLadder(spark: SparkSession, meter: TaskMeter, sizes: Seq[Long],
                        nQueries: Int): Unit = {
-    val rungs = sizes.map { n =>
+    val rungs = scopedRungs(sizes) { (n, s) =>
       val corpus = embeddings(spark, n)
       val queries = corpus.filter(col("vec_id") < nQueries)
       val train = meter.measure(Similarity.pqTrain(corpus))
@@ -344,8 +351,8 @@ object BenchScale {
         // encode is narrow, so the materialized index would inherit the
         // scan's (bin-packed) split count; balance it to executor width
         // once at index-build time so ADC scans it wide
-        val enc = Similarity.pqAssign(corpus, books)
-          .repartition(spark.sparkContext.defaultParallelism).localCheckpoint()
+        val enc = s.checkpoint(Similarity.pqAssign(corpus, books)
+          .repartition(spark.sparkContext.defaultParallelism))
         (enc, enc.count())
       }
       val (enc, nEnc) = encode.value
@@ -358,10 +365,6 @@ object BenchScale {
         Similarity.bruteForceTopK(corpus, queries, k = 10).select(col("query_id")).count()
       }.sec else -1.0
       require(nEnc == n && hits.nonEmpty, s"pq ladder sanity failed at n=$n")
-      // rung-scoped storage: free this rung's encoded-corpus checkpoint
-      // blocks before the next rung sizes up — accumulated blocks
-      // pressure executor storage memory and bias later rung timings
-      Checkpoints.unpersist(enc)
       (n, train.sec, encode.sec, adc.sec, bruteSec, inCluster, maxTask(train, encode, adc))
     }
     val rungJson = rungs.map { case (n, ts, es, as_, bs, ic, mt) =>
@@ -390,7 +393,7 @@ object BenchScale {
   private def ivfPqLadder(spark: SparkSession, meter: TaskMeter, sizes: Seq[Long],
                           nQueries: Int): Unit = {
     val (k, nCentroids, nProbe) = (10, 128, 8)
-    val rungs = sizes.map { n =>
+    val rungs = scopedRungs(sizes) { (n, s) =>
       val corpus = embeddings(spark, n)
       val queries = corpus.filter(col("vec_id") < nQueries)
       // train both halves ONCE on a bounded hash-sample (the contract
@@ -405,12 +408,10 @@ object BenchScale {
       val (centsDf, books) = train.value
       val wide = spark.sparkContext.defaultParallelism
       val build = meter.measure {
-        val ivfIdx = Similarity.ivfAssign(corpus, centsDf)
-          .repartition(wide).localCheckpoint()
-        val pqIdx = Similarity.pqAssign(corpus, books)
-          .repartition(wide).localCheckpoint()
-        val ivfpqIdx = Similarity.ivfPqIndex(corpus, centsDf, books)
-          .repartition(wide).localCheckpoint()
+        val ivfIdx = s.checkpoint(Similarity.ivfAssign(corpus, centsDf).repartition(wide))
+        val pqIdx = s.checkpoint(Similarity.pqAssign(corpus, books).repartition(wide))
+        val ivfpqIdx = s.checkpoint(
+          Similarity.ivfPqIndex(corpus, centsDf, books).repartition(wide))
         require(ivfIdx.count() == n && pqIdx.count() == n && ivfpqIdx.count() == n,
           s"index build sanity failed at n=$n")
         (ivfIdx, pqIdx, ivfpqIdx)
@@ -430,7 +431,6 @@ object BenchScale {
       // exact-cosine top-10 — times the full two-stage probe path
       val rerank = search(Similarity.ivfPqRerank(ivfpqIdx, centsDf, books, corpus, queries,
         k, shortlist = 50, nProbe = nProbe))
-      Seq(ivfIdx, pqIdx, ivfpqIdx).foreach(Checkpoints.unpersist)
       (n, train.sec, build.sec, ivf.sec, inCluster(ivf), pq.sec, inCluster(pq), ivfpq.sec,
         inCluster(ivfpq), rerank.sec, inCluster(rerank), maxTask(ivf, pq, ivfpq, rerank))
     }
@@ -474,7 +474,7 @@ object BenchScale {
     * ~n^1.5 (measured ~1.5); a frozen k would read 2.0, the r6
     * scale defect this rung exists to keep dead. */
   private def semDedupLadder(spark: SparkSession, meter: TaskMeter, sizes: Seq[Long]): Unit = {
-    val rungs = sizes.map { n =>
+    val rungs = scopedRungs(sizes) { (n, s) =>
       val corpus = embeddings(spark, n)
       val kAdapt = Similarity.adaptiveNCentroids(n)
       val sampleRate = math.min(1.0, 200000.0 / n)
@@ -483,8 +483,8 @@ object BenchScale {
       val train = meter.measure(broadcast(Similarity.centroidsDf(spark,
         Similarity.kmeansTrain(Sampling.hashSample(corpus, "vec_id", sampleRate), kAdapt))))
       val assign = meter.measure {
-        val assigned = Similarity.ivfAssign(corpus, train.value)
-          .repartition(spark.sparkContext.defaultParallelism).localCheckpoint()
+        val assigned = s.checkpoint(Similarity.ivfAssign(corpus, train.value)
+          .repartition(spark.sparkContext.defaultParallelism))
         require(assigned.count() == n, s"assign sanity failed at n=$n")
         assigned
       }
@@ -504,7 +504,6 @@ object BenchScale {
         (row.getLong(0), row.getLong(1))
       }
       val (flagged, hits) = dedup.value
-      Checkpoints.unpersist(assigned)
       val trueDups = n - 1000
       val recall = hits.toDouble / trueDups
       val precision = if (flagged == 0) 0.0 else hits.toDouble / flagged
@@ -616,7 +615,7 @@ object BenchScale {
     def textOf(idExpr: String) =
       s"""concat_ws(' ', transform(sequence(0, 39), j ->
          |  concat('u', ${letters(idExpr)}, 'x', ${letters("j")})))""".stripMargin
-    val rungs = sizes.map { n =>
+    val rungs = scopedRungs(sizes) { (n, s) =>
       require(n >= nQ, s"sigstore rung $n smaller than the query batch $nQ")
       val corpus = staged(spark, s"sigstore_$n/corpus")(
         spark.range(n).selectExpr("id AS doc_id", s"${textOf("id")} AS text"))
@@ -630,7 +629,7 @@ object BenchScale {
       require(SignatureStore.droppedMembers(spark, p) == 0L,
         s"unique corpus must not hit the bucket cap at n=$n")
       val probe = meter.measure {
-        val f = SignatureStore.probeFlags(spark, p, queries).cache()
+        val f = s.cache(SignatureStore.probeFlags(spark, p, queries))
         f.count(); f
       }
       val flags = probe.value
@@ -650,7 +649,6 @@ object BenchScale {
       // same collision tail — bounded with falsePos)
       val wrongTarget = flags.filter(col("is_dup") && planted)
         .filter(col("dup_of") =!= ((col("query_id") - n) / 2) * stride).count()
-      flags.unpersist()
       require(dupPlanted == nQ / 2,
         s"planted-dup recall at n=$n: flagged $dupPlanted of ${nQ / 2}")
       require(falsePos == 0,
@@ -683,33 +681,30 @@ object BenchScale {
   private def compactionLadder(spark: SparkSession, meter: TaskMeter, sizes: Seq[Long]): Unit = {
     import org.apache.spark.sql.expressions.Window
     val target = 1L << 20 // ~1M size units per output bin
-    val rungs = sizes.map { n =>
-      val inv = spark.range(n).select(col("id").as("fk"),
-          (pmod(xxhash64(concat(lit("sz_"), col("id"))), lit(1000)) + 1).as("sz"))
-        .localCheckpoint() // materialized: generation cost is untimed
+    val rungs = scopedRungs(sizes) { (n, s) =>
+      // materialized: generation cost is untimed
+      val inv = s.checkpoint(spark.range(n).select(col("id").as("fk"),
+          (pmod(xxhash64(concat(lit("sz_"), col("id"))), lit(1000)) + 1).as("sz")))
       val twoPass = meter.measure {
-        val plan = graft.operators.Compaction.plan(inv, "fk", "sz", target)
-          .localCheckpoint()
+        val plan = s.checkpoint(graft.operators.Compaction.plan(inv, "fk", "sz", target))
         (plan, plan.count())
       }
       val (plan, nBins) = twoPass.value
       val window = meter.measure {
-        inv
+        s.checkpoint(inv
           .withColumn("before", sum(col("sz")).over(
             Window.orderBy(col("fk"))
               .rowsBetween(Window.unboundedPreceding, Window.currentRow)) - col("sz"))
           .withColumn("out_bin", expr(s"before div ${target}L"))
           .groupBy(col("out_bin"))
           .agg(count(lit(1)).as("n_files"), sum(col("sz")).as("size_total"),
-            min(col("fk")).as("key_min"), max(col("fk")).as("key_max"))
-          .localCheckpoint()
+            min(col("fk")).as("key_min"), max(col("fk")).as("key_max")))
       }
       val twin = window.value
       // exact-integer equality, both directions — the two forms are
       // the SAME function, so any row-level difference is a defect
       require(plan.exceptAll(twin).isEmpty && twin.exceptAll(plan).isEmpty,
         s"two-pass and window compaction plans differ at n=$n")
-      Seq(inv, twin, plan).foreach(Checkpoints.unpersist)
       val (dSec, wSec) = (twoPass.sec, window.sec)
       println(f"""{"n_files":$n,"n_bins":$nBins,"twopass_sec":$dSec%.2f,"twopass_max_task_sec":${twoPass.maxTaskSec}%.2f,"window_sec":$wSec%.2f,"window_max_task_sec":${window.maxTaskSec}%.2f,"ratio":${dSec / wSec}%.3f}""")
       (n, dSec, wSec)
@@ -1072,23 +1067,22 @@ object BenchScale {
     * (fixed clique width + bounded bipartite degree keep the oriented
     * wedge set linear); the fitted log-log exponent hard-gates at 1.3. */
   private def triLadder(spark: SparkSession, meter: TaskMeter, sizes: Seq[Long]): Unit = {
-    val rungs = sizes.map { m =>
+    val rungs = scopedRungs(sizes) { (m, s) =>
       val (k, edges) = cliqueGraph(spark, "tri", m, sideDivisor = 16) // ~8 avg degree per side
       val tri = meter.measure {
         // driverFinishEdges = 0: the ladder's published enumeration
         // receipts stay distributed-path at every rung. The kernel's
         // result is already eagerly checkpointed — no second copy.
-        val counts = Graph.triangleCounts(
-          Graph.Undirected(edges, "a", "b"), driverFinishEdges = 0L)
+        val counts = s.own(Graph.triangleCounts(
+          Graph.Undirected(edges, "a", "b"), driverFinishEdges = 0L))
         val r = counts.agg(
           sum(when(col("node") < 1000000000L, 1L).otherwise(0L)),
           min(when(col("node") < 1000000000L, col("n_tri"))),
           max(when(col("node") < 1000000000L, col("n_tri"))),
           sum(when(col("node") >= 1000000000L, 1L).otherwise(0L))).head()
-        (counts, (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       }
-      val (counts, (nClique, minT, maxT, nNoiseNodes)) = tri.value
-      Checkpoints.unpersist(counts)
+      val (nClique, minT, maxT, nNoiseNodes) = tri.value
       println(f"""{"edges":$m,"cliques":$k,"sec":${tri.sec}%.2f,"clique_nodes":$nClique,"min_tri":$minT,"max_tri":$maxT,"noise_nodes":$nNoiseNodes,"max_task_sec":${tri.maxTaskSec}%.2f}""")
       require(nClique == k * 20 && minT == 171L && maxT == 171L,
         s"planted-truth violated at m=$m: $nClique clique nodes " +
@@ -1113,20 +1107,19 @@ object BenchScale {
     * collapse takes O(log n) cascading rounds; the CATALOG entry keeps
     * 12 to bind its fixed-round oracle. */
   private def kcoreLadder(spark: SparkSession, meter: TaskMeter, sizes: Seq[Long]): Unit = {
-    val rungs = sizes.map { m =>
+    val rungs = scopedRungs(sizes) { (m, s) =>
       val (k, edges) = cliqueGraph(spark, "kcore", m, sideDivisor = 8) // mean degree ~8 per side
       val peel = meter.measure {
-        val core = Graph.kCore(Graph.Undirected(edges, "a", "b"),
-          k = Some(10L), maxRounds = 512, driverFinishEdges = 0L)
+        val core = s.own(Graph.kCore(Graph.Undirected(edges, "a", "b"),
+          k = Some(10L), maxRounds = 512, driverFinishEdges = 0L))
         val r = core.agg(
           sum(when(col("node") < 1000000000L, 1L).otherwise(0L)),
           min(when(col("node") < 1000000000L, col("core_deg"))),
           max(when(col("node") < 1000000000L, col("core_deg"))),
           sum(when(col("node") >= 1000000000L, 1L).otherwise(0L))).head()
-        (core, (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       }
-      val (core, (nClique, minDg, maxDg, nNoiseNodes)) = peel.value
-      Checkpoints.unpersist(core)
+      val (nClique, minDg, maxDg, nNoiseNodes) = peel.value
       println(f"""{"edges":$m,"cliques":$k,"sec":${peel.sec}%.2f,"clique_nodes":$nClique,"min_deg":$minDg,"max_deg":$maxDg,"noise_core_nodes":$nNoiseNodes,"max_task_sec":${peel.maxTaskSec}%.2f}""")
       require(nClique == k * 20 && minDg == 19L && maxDg == 19L,
         s"planted-truth violated at m=$m: $nClique clique nodes " +

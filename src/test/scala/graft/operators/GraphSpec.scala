@@ -874,6 +874,65 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  /** Frees what a leak check's result still holds. */
+  private def dropAll(ids: Set[Int]): Unit =
+    ids.foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist()))
+
+  test("round-loop kernels at gate 0 keep only the one RDD their result reads") {
+    import spark.implicits._
+    // two triangles joined by the bridge 3-4, both directions
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
+    val sym = (und ++ und.map(_.swap)).toDF("s", "d")
+    val weighted = sym.withColumn("w", lit(10L))
+    val seeds = Seq(1L).toDF("node")
+    val kernels = Seq[(String, () => DataFrame)](
+      "pageRankMicro" -> (() => Graph.pageRankMicro(sym, "s", "d", driverFinishEdges = 0L)),
+      "shortestHops" -> (() => Graph.shortestHops(sym, "s", "d", seeds, driverFinishEdges = 0L)),
+      "ssspMicro" -> (() =>
+        Graph.ssspMicro(weighted, "s", "d", "w", seeds, driverFinishEdges = 0L)),
+      "labelPropagation" -> (() =>
+        Graph.labelPropagation(Graph.Undirected(sym, "s", "d"), driverFinishEdges = 0L)),
+      "kCore" -> (() =>
+        Graph.kCore(Graph.Undirected(sym, "s", "d"), k = Some(2L), driverFinishEdges = 0L)),
+      "hitsMicro" -> (() => Graph.hitsMicro(sym, "s", "d", driverFinishEdges = 0L)),
+      "connectedComponents" -> (() =>
+        Components.connectedComponents(sym, "s", "d", driverFinishEdges = 0L)))
+    val leaks = kernels.flatMap { case (name, run) =>
+      val before = persistentRddIds
+      val out = run()
+      assert(out.collect().length == 6, name)
+      val gained = persistentRddIds -- before
+      dropAll(gained)
+      if (gained.size <= 1 && gained.subsetOf(readRddIds(out))) None
+      else Some(s"$name left $gained, its result reads ${readRddIds(out)}")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
+  test("round-loop kernels that throw leave no persistent RDD") {
+    import spark.implicits._
+    val path = (1L to 9L).map(i => (i, i + 1))
+    val seeds = Seq(1L).toDF("node")
+    val throwing = Seq[(String, () => DataFrame)](
+      "ssspMicro over budget" -> (() => Graph.ssspMicro(
+        path.map { case (a, b) => (a, b, 1L) }.toDF("s", "d", "w"), "s", "d", "w", seeds,
+        maxRounds = 2, driverFinishEdges = 0L)),
+      "kCore over budget" -> (() => Graph.kCore(Graph.Undirected(path.toDF("a", "b"), "a", "b"),
+        k = Some(2L), maxRounds = 2, driverFinishEdges = 0L)),
+      "pageRankMicro with a dangling sink" -> (() =>
+        Graph.pageRankMicro(path.toDF("s", "d"), "s", "d", driverFinishEdges = 0L)),
+      "hitsMicro on no edges" -> (() =>
+        Graph.hitsMicro(Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d", driverFinishEdges = 0L)))
+    val leaks = throwing.flatMap { case (name, run) =>
+      val before = persistentRddIds
+      intercept[IllegalArgumentException](run())
+      val gained = persistentRddIds -- before
+      dropAll(gained)
+      if (gained.isEmpty) None else Some(s"$name left $gained")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
   test("one undirected canonicalization and one driver-finish gate call in src/main") {
     assert(SourceSites("""greatest\(col\(""").filter(_._1 == "Graph.scala") ==
       Vector("Graph.scala" -> "Undirected"))
